@@ -143,6 +143,30 @@ object BenchCheck {
   val RefPath = "tools/bench_ref.json"
   val JobsRefPath = "tools/bench_jobs_ref.json"
 
+  /** Count the Spark jobs started on `spark` from now on (the structural
+    * gate — see BenchGuard.checkJobs). The listener bus is async, so the
+    * returned reader waits until the count is stable: job counts then
+    * cannot be attributed to the wrong query. */
+  def jobCounter(spark: org.apache.spark.sql.SparkSession): () => Long = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      })
+    () => {
+      var prev = -1L
+      var cur = jobs.get()
+      var spins = 0
+      while (cur != prev && spins < 200) {
+        Thread.sleep(10); prev = cur; cur = jobs.get(); spins += 1
+      }
+      cur
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -166,26 +190,7 @@ object BenchCheck {
     val names =
       if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted
 
-    // per-query Spark-job counter (the structural gate — see
-    // BenchGuard.checkJobs). The listener bus is async, so reads go
-    // through a stabilization wait.
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(); ()
-        }
-      })
-    def jobsNow(): Long = {
-      var prev = -1L
-      var cur = jobCounter.get()
-      var spins = 0
-      while (cur != prev && spins < 200) {
-        Thread.sleep(10); prev = cur; cur = jobCounter.get(); spins += 1
-      }
-      cur
-    }
+    val jobsNow = jobCounter(spark)
 
     // same warm-up discipline as graft.Bench: absorb session init and the
     // shared pair index so run1 of the first family member isn't charged
@@ -202,7 +207,7 @@ object BenchCheck {
     // shared-frame builds, timed and surfaced (round-17 verdict: the
     // warm block's cost must be visible — graft.Bench counts it into its
     // stdout `value`; here it is printed for the lock-protocol record)
-    val sharedWarmupSec = Bench.timeSharedWarmup(spark, dir)
+    val (sharedWarmupSec, warmFailed) = Bench.timeSharedWarmup(spark, dir)
     println(f"BENCHCHECK shared_warmup_sec=$sharedWarmupSec%.2f")
 
     def timedOnce(q: String): (Double, Long) = {
@@ -250,7 +255,8 @@ object BenchCheck {
         s"(${merged.size} total) to $JobsRefPath")
     } else {
       val violations = BenchGuard.check(run2, ref) ++
-        BenchGuard.checkJobs(runJobs, jobsRef)
+        BenchGuard.checkJobs(runJobs, jobsRef) ++
+        warmFailed.map(BenchGuard.Violation(_, "shared-frame warmup failed"))
       if (violations.isEmpty) {
         val covered = run2.keysIterator.count(ref.contains)
         println(s"BENCHCHECK PASS ${run2.size} queries " +

@@ -99,6 +99,23 @@ object Caches {
     }
   }
 
+  /** The per-session memo behind every session-shared frame and the
+    * table loader: `apply(spark, key)` runs `build` once per
+    * (session, key) and hands every later caller the same value. Entries
+    * whose session's context is stopped are dropped on each access —
+    * their checkpointed blocks are gone, and the map would otherwise
+    * hold dead plans forever in a long-lived JVM (test suites, session
+    * restarts). `build` does its own pinning (`shared`); keep one memo
+    * per frame so concurrent warm-up chains never contend on one map. */
+  final class SessionMemo[K, V](build: (SparkSession, K) => V) {
+    private val memo = scala.collection.concurrent.TrieMap.empty[(SparkSession, K), V]
+
+    def apply(spark: SparkSession, key: K): V = {
+      memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      memo.getOrElseUpdate((spark, key), build(spark, key))
+    }
+  }
+
   // Unpersisting a checkpointed RDD logs a WARN ("lineage has been
   // truncated and cannot be recomputed") per RDD. That is exactly the
   // intended, safe case here — the frame is dead — and 200 copies of it

@@ -13,11 +13,10 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's standard configs to an arbitrary builder. */
-  def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+  /** Apply graft's standard configs to a builder. */
+  private def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // parallelismFirst stays at Spark's default (true). The r18
       // byte-target alternative (false + 64 MB advisory, optionally a
@@ -27,12 +26,9 @@ object GraftSession {
       // intersections 1.5 → 3.3 s, pagerank-family +25%) — bytes are a
       // bad proxy for compute in those stages, and with a width floor
       // the wins disappear with the losses (numbers in
-      // OPTIMIZATION_r18.md §item-5). Env knobs kept for cluster
-      // deployments and future measurement.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
+      // OPTIMIZATION_r18.md §item-5).
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -61,8 +57,10 @@ object GraftSession {
     configure(SparkSession.builder().master(master).appName("graft"), shufflePartitions)
       .withExtensions(new graft.functions.GraftExtensions()(_))
 
-  /** Best-effort: apply runtime-settable graft configs to an existing session
-    * (used when the harness owns session construction). */
+  /** Apply graft's runtime-settable configs, functions and planner
+    * strategy to an existing session (used when the harness owns session
+    * construction). Idempotent: what the session already has — from an
+    * earlier call or from the `builder` extensions — is not added again. */
   def adopt(spark: SparkSession): SparkSession = {
     Seq(
       "spark.sql.session.timeZone" -> "UTC",
@@ -73,16 +71,9 @@ object GraftSession {
       // session with the actual parallelism instead of the 200 default
       "spark.sql.shuffle.partitions" ->
         spark.sparkContext.defaultParallelism.toString
-    ).foreach { case (k, v) =>
-      try spark.conf.set(k, v) catch { case _: Throwable => () }
-    }
-    try graft.functions.VectorFunctions.register(spark)
-    catch { case _: Throwable => () }
-    try {
-      if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.AsOfStrategy
-    } catch { case _: Throwable => () }
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.functions.VectorFunctions.register(spark)
+    graft.plans.AsOfStrategy.ensureOn(spark)
     spark
   }
 }

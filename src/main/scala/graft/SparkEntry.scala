@@ -1,11 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.queries.{Relational, Etl, TextDedup, SimMm, Advanced, Analytics, Vocab, Audits, Round8, Round9, Round9b, Round10, Round10b, Round10c, Round10d, Round11, Round11b, Round11c, Round11d, Round11e, Round11f, Round11g, Round11h, Round11i, Round11j, Round11k, Round11l, Round11m, Round11n, Round11o, Round11p, Round11q, Round11r, Round11s, Round11t, Round11u, Round11v, Round11w, Round11x, Round11y, Round12, Round13, Round14, Round14b, Round15, Round15b, Round16, Round17, Tpch}
-import graft.sources.Tables
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -16,19 +14,39 @@ object SparkEntry {
     Relational.queries("q3_join_agg")(spark, "/root/testdata/sf0.001")
   }
 
+  /** Every registry module, named once. */
+  private def modules: Seq[Module] = Seq(
+    Relational, Etl, TextDedup, SimMm, Advanced, Analytics, Vocab, Audits,
+    Round8, Round9, Round9b, Round10, Round10b, Round10c, Round10d,
+    Round11, Round11b, Round11c, Round11d, Round11e, Round11f, Round11g,
+    Round11h, Round11i, Round11j, Round11k, Round11l, Round11m, Round11n,
+    Round11o, Round11p, Round11q, Round11r, Round11s, Round11t, Round11u,
+    Round11v, Round11w, Round11x, Round11y, Round12, Round13, Round14,
+    Round14b, Round15, Round15b, Round16, Round17, Tpch)
+
+  /** Merge modules into (queries, oracles). A duplicate name, or a query
+    * and oracle set that do not pair up, throws — a plain `Map ++` merge
+    * would silently keep only the last entry. */
+  private[graft] def merge(modules: Seq[Module]): (Map[String, Q], Map[String, String]) = {
+    def unique[V](what: String, entries: Seq[(String, V)]): Map[String, V] = {
+      val dups = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+      require(dups.isEmpty, s"duplicate $what names: ${dups.toSeq.sorted.mkString(", ")}")
+      entries.toMap
+    }
+    val qs = unique("query", modules.flatMap(_.queries))
+    val os = unique("oracle", modules.flatMap(_.oracle))
+    require(qs.keySet == os.keySet,
+      s"queries without an oracle: ${(qs.keySet -- os.keySet).toSeq.sorted.mkString(", ")}; " +
+        s"oracles without a query: ${(os.keySet -- qs.keySet).toSeq.sorted.mkString(", ")}")
+    (qs, os)
+  }
+
+  /** Merged on first access, which throws if the registry is malformed. */
+  private lazy val registry = merge(modules)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Etl.queries ++ TextDedup.queries ++ SimMm.queries ++
-      Advanced.queries ++ Analytics.queries ++ Vocab.queries ++ Audits.queries ++
-      Round8.queries ++ Round9.queries ++ Round9b.queries ++ Round10.queries ++
-      Round10b.queries ++ Round10c.queries ++ Round10d.queries ++
-      Round11.queries ++ Round11b.queries ++ Round11c.queries ++ Round11d.queries ++ Round11e.queries ++ Round11f.queries ++ Round11g.queries ++ Round11h.queries ++ Round11i.queries ++ Round11j.queries ++ Round11k.queries ++ Round11l.queries ++ Round11m.queries ++ Round11n.queries ++ Round11o.queries ++ Round11p.queries ++ Round11q.queries ++ Round11r.queries ++ Round11s.queries ++ Round11t.queries ++ Round11u.queries ++ Round11v.queries ++ Round11w.queries ++ Round11x.queries ++ Round11y.queries ++ Round12.queries ++ Round13.queries ++ Round14.queries ++ Round14b.queries ++ Round15.queries ++ Round15b.queries ++ Round16.queries ++ Round17.queries ++ Tpch.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** DuckDB-runnable oracle SQL per query (same parquet tables). */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Etl.oracle ++ TextDedup.oracle ++ SimMm.oracle ++
-      Advanced.oracle ++ Analytics.oracle ++ Vocab.oracle ++ Audits.oracle ++
-      Round8.oracle ++ Round9.oracle ++ Round9b.oracle ++ Round10.oracle ++
-      Round10b.oracle ++ Round10c.oracle ++ Round10d.oracle ++
-      Round11.oracle ++ Round11b.oracle ++ Round11c.oracle ++ Round11d.oracle ++ Round11e.oracle ++ Round11f.oracle ++ Round11g.oracle ++ Round11h.oracle ++ Round11i.oracle ++ Round11j.oracle ++ Round11k.oracle ++ Round11l.oracle ++ Round11m.oracle ++ Round11n.oracle ++ Round11o.oracle ++ Round11p.oracle ++ Round11q.oracle ++ Round11r.oracle ++ Round11s.oracle ++ Round11t.oracle ++ Round11u.oracle ++ Round11v.oracle ++ Round11w.oracle ++ Round11x.oracle ++ Round11y.oracle ++ Round12.oracle ++ Round13.oracle ++ Round14.oracle ++ Round14b.oracle ++ Round15.oracle ++ Round15b.oracle ++ Round16.oracle ++ Round17.oracle ++ Tpch.oracle
+  def oracleSql: Map[String, String] = registry._2
 }

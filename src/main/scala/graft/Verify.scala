@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -11,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * JIT/page-cache warmup exempts the opening `WarmupGrace` queries). A
   * breach is loud (`[verify] BUDGET ...` on stderr + a summary line) —
   * a future operator that makes the gate itself quadratic goes red in
-  * the gate log instead of silently doubling the round time. */
+  * the gate log instead of silently doubling the round time. A query
+  * that throws is listed in a `[verify] FAILED` summary line. */
 object Verify {
   val BudgetSec = 10.0
   val WarmupGrace = 3
@@ -22,12 +21,11 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only = args.lift(2).map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var overBudget = List.empty[(String, Double)]
+    var failed = List.empty[String]
     var idx = 0
     // sorted-name order (as BenchCheck iterates): the WarmupGrace
     // exemption then lands on a DETERMINISTIC opening workload instead
@@ -39,6 +37,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
+        failed ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -51,6 +50,8 @@ object Verify {
       Caches.sweep(spark) // drop dead checkpoint blocks between queries
     }
     OracleJson.writeTo(s"$outDir/oracle_sql.json")
+    System.err.println(s"[verify] FAILED ${failed.size}" +
+      (if (failed.isEmpty) "" else failed.reverse.mkString(": ", ", ", "")))
     if (overBudget.nonEmpty)
       System.err.println(s"[verify] BUDGET SUMMARY ${overBudget.size} " +
         s"quer${if (overBudget.size == 1) "y" else "ies"} over " +

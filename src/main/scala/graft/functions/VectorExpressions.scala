@@ -202,9 +202,11 @@ object VectorFunctions {
   }
 
   /** Runtime registration into an existing session (e.g. one the harness
-    * built): makes `vec_dot` / `vec_cosine` callable from spark.sql. */
+    * built): makes `vec_dot` / `vec_cosine` callable from spark.sql.
+    * Functions the session already has are left as they are. */
   def register(spark: SparkSession): Unit = descriptors.foreach { case (id, info, builder) =>
-    Bridge.registerFunction(spark, id, info, builder)
+    if (!spark.catalog.functionExists(id.funcName))
+      Bridge.registerFunction(spark, id, info, builder)
   }
 }
 

@@ -471,7 +471,6 @@ object Dedup {
     * lineage otherwise grows the plan (and recomputation) per round. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
                           hopsPerRound: Int = 4): DataFrame = {
-    val hops = sys.env.get("GRAFT_CC_HOPS").map(_.toInt).getOrElse(hopsPerRound)
     // both directions PLUS a self-loop per node: min(own label, neighbor
     // labels) folds into ONE join + ONE aggregate per hop (r17). The
     // checkpointed frame is partitioned+sorted on the join key `b` so
@@ -496,7 +495,8 @@ object Dedup {
     var converged = false
     while (iter < maxIters && !converged) {
       var next = labels
-      for (_ <- 1 to hops) {
+      // 8 hops per round measured slower (OPTIMIZATION_r18.md)
+      for (_ <- 1 to hopsPerRound) {
         next = edges
           .join(next.select(col("id").as("b"), col("label").as("nl")), Seq("b"))
           .groupBy(col("a").as("id")).agg(min(col("nl")).as("label"))
@@ -506,8 +506,6 @@ object Dedup {
       converged = now == prev
       prev = now
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter labelSum=$now converged=$converged")
     }
     labels
   }

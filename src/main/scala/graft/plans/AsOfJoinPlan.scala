@@ -81,6 +81,13 @@ object AsOfStrategy extends SparkStrategy {
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, mode) :: Nil
     case _ => Nil
   }
+
+  /** Register on a session built without GraftExtensions (e.g. a
+    * harness-owned one); a session whose planner already has the
+    * strategy, from the extensions or an earlier call, is left as is. */
+  def ensureOn(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
 }
 
 final case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
@@ -295,12 +302,7 @@ object AsOf {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val spark: SparkSession = left.sparkSession
-    // self-register on sessions built without GraftExtensions (e.g. a
-    // harness-owned session): extraStrategies is runtime-settable and a
-    // duplicate registration is harmless but avoided anyway
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
+    AsOfStrategy.ensureOn(spark)
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed
     val rPlan = Project(rAnalyzed.output.map(a => Alias(a, a.name)()), rAnalyzed)

@@ -17,7 +17,7 @@ import graft.ops.{TextAnalysis => TA, Multimodal => Multi}
   * join carries an equi key (orderkey) so the range predicate only prunes
   * within equi-matches — no interval explosion.
   */
-object Advanced {
+object Advanced extends Module {
 
   val queries: Map[String, Q] = Map(
     // As-of join: for each 'error' event, the value of that user's most

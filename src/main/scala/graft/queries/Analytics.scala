@@ -23,7 +23,7 @@ import graft.ops.{TextAnalysis => TA}
   * the keyed aggregate/window it declares, and every scan is pruned to
   * the columns it needs.
   */
-object Analytics {
+object Analytics extends Module {
 
   /** Exact scaled-integer sums for (x, y) pairs: x,y are scaled by 100 to
     * integer cents, products stay in LONG (bounded by data domain), sums

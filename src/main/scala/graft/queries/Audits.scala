@@ -14,7 +14,7 @@ import graft.ops.{Similarity, TextAnalysis => TA}
   * exact integer/decimal aggregation, truncating integer basis points for
   * ratios, doubles only in final expressions over bit-identical operands.
   */
-object Audits {
+object Audits extends Module {
 
   val queries: Map[String, Q] = Map(
     // Day-of-week × hour-of-day activity profile — the seasonality map a

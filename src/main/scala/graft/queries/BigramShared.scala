@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.{TextAnalysis => TA}
 import graft.sources.Tables
 
-/** The shared (source, bigram, count) corpus rollup — memoized per
-  * (session, dataset) like [[TokShared]], for the word-bigram entries
+/** The shared (source, bigram, count) corpus rollup, one per
+  * (session, dataset), for the word-bigram entries
   * that each re-ran the identical tokenize → 2-shingle → explode →
   * first-rollup corpus pass (text_bigram_coverage / text_bigram_entropy
   * / text_bigram_lm). `source` rides along (a total function of the
@@ -21,22 +21,13 @@ import graft.sources.Tables
   */
 object BigramShared {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The materialized (source, bg, c) frame. */
-  private[graft] def counts(s: SparkSession, dir: String): DataFrame = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir),
+  private[graft] val counts = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(
         Tables.documents(s, dir)
           .select(col("source"), TA.tokens(col("text")).as("toks"))
           .select(col("source"), explode(TA.shinglesOf(col("toks"), 2)).as("bg"))
           .groupBy(col("source"), col("bg")).agg(count(lit(1)).as("c"))))
-  }
 
   /** Materialize the shared frame (bench warmup). */
   def warmShared(s: SparkSession, dir: String): Unit = {

@@ -10,7 +10,7 @@ import graft.etl.{Normalize, Changelog, Upsert, Quality}
   * reference's `voucher` entity, `events` for `voucher_transaction` and for
   * the `etl_logger_voucher` changelog.
   */
-object Etl {
+object Etl extends Module {
 
   val queries: Map[String, Q] = Map(
     // Voucher-style cleaning (services/etlService.js:118-156): UPPER+TRIM,

@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The shared exact-integer Gram/moment frames of the embedding corpus —
-  * memoized per (session, dataset) like [[SimShared]] / [[GraphShared]] /
-  * [[SnmShared]], so the second-moment family (`sim_cov_moments`,
+/** The shared exact-integer Gram/moment frames of the embedding corpus,
+  * one set per (session, dataset), so the second-moment family (`sim_cov_moments`,
   * `sim_power_iteration`, `sim_power_convergence`, `sim_opq_rotate`,
   * `sim_opq_permute`, `sim_opq_gain`, `sim_dim_stats`) pays for ONE
   * O(n·d²) Gram pass + ONE O(n·d) per-dimension moment pass per session
@@ -30,39 +29,21 @@ object GramShared {
       |    struct(CAST(i AS BIGINT) AS d1, CAST(j AS BIGINT) AS d2,
       |           mq[i] * mq[j] AS xy))))""".stripMargin
 
-  private val gramCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val dimCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val powerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def evictStopped(): Unit = {
-    gramCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    dimCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    powerCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-  }
-
   /** The checkpointed 2,080-cell Gram triangle: (d1 ≤ d2, n, sum_xy)
     * over the [[SimShared.miln]] milli-quantized components. `n` is the
     * corpus row count (every row contributes every cell). */
-  private[graft] def gram(s: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    gramCache.getOrElseUpdate((s, dir), {
+  private[graft] val gram = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       graft.Caches.shared(SimShared.miln(s, dir)
         .select(col("mq"))
         .select(explode(expr(gramExpr)).as("p"))
         .groupBy(col("p.d1").as("d1"), col("p.d2").as("d2"))
         .agg(count(lit(1)).as("n"), sum(col("p.xy")).as("sum_xy")))
     })
-  }
 
   /** The checkpointed 64-row per-dimension moment frame:
     * (d, n, sx, sxx, min_milli, max_milli, n_zero) — the superset every
     * variance/calibration consumer projects from. */
-  private[graft] def dimStats(s: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    dimCache.getOrElseUpdate((s, dir), {
+  private[graft] val dimStats = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       graft.Caches.shared(SimShared.miln(s, dir)
         .select(posexplode(col("mq")).as(Seq("d", "x")))
         .groupBy(col("d"))
@@ -73,7 +54,6 @@ object GramShared {
         .select(col("d").cast("long").as("d"), col("n"), col("sx"),
           col("sxx"), col("min_milli"), col("max_milli"), col("n_zero")))
     })
-  }
 
   /** Exact integer n·variance per dimension (n·Σx² − (Σx)²) — the
     * ranking key of the OPQ layout family, derived (not stored) from
@@ -88,9 +68,7 @@ object GramShared {
     * 4,096-cell join against a 64-row vector, rescaled to ±1000 by the
     * max |component| with truncating integer division (bit-stable
     * cross-engine; see the sim_power_iteration registry doc). */
-  private[graft] def powerVecs(s: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    powerCache.getOrElseUpdate((s, dir), {
+  private[graft] val powerVecs = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       val tri = gram(s, dir)
       val A = tri.select(col("d1").as("i"), col("d2").as("j"),
           col("sum_xy").as("a"))
@@ -111,7 +89,6 @@ object GramShared {
       val v2 = step(v1, "v1_milli", "v2_milli")
       graft.Caches.shared(v1.join(v2, Seq("d")))
     })
-  }
 
   /** Materialize the shared frames (bench warmup) — without it, the
     * first family member in an alphabetical sweep absorbs the corpus

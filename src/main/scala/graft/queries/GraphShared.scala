@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** The shared supplier–part graph frames for the graph family —
-  * memoized per (session, dataset) exactly like [[SimIvf.sharedAuto]]
-  * and [[TextDedup.sharedPairs05]], so the ~10 registry consumers in
+/** The shared supplier–part graph frames for the graph family, one set
+  * per (session, dataset), so the ~10 registry consumers in
   * one run pay for ONE lineitem distinct + capped projection + one
   * degree-annotated pagerank edge build instead of ten identical ones.
   *
@@ -30,14 +29,7 @@ object GraphShared {
                                   prEdges: DataFrame, projPairs: DataFrame,
                                   skDeg: DataFrame)
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Frames]
-
-  private def frames(s: SparkSession, dir: String): Frames = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private val frames = new graft.Caches.SessionMemo[String, Frames]((s, dir) => {
       val sp = Tables.lineitem(s, dir)
         .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
         .distinct()
@@ -64,7 +56,6 @@ object GraphShared {
       Frames(cappedSp, graft.Caches.shared(deg),
         graft.Caches.shared(edgesOd), projPairs, skDeg)
     })
-  }
 
   /** The checkpointed capped-64 (sk, pk) projection. */
   private[graft] def cappedSp(s: SparkSession, dir: String): DataFrame =

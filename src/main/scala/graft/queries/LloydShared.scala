@@ -5,29 +5,24 @@ import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 import graft.sources.Tables
 
-/** The shared cells=8 Lloyd-round chain — memoized per (session,
-  * dataset) exactly like [[SimShared]] / [[GramShared]] / [[PqShared]].
+/** The shared cells=8 Lloyd-round chain, one per (session, dataset).
   * sim_ivf_train (round 1 stats), sim_ivf_train2 (round 2 stats) and
   * sim_centroid_drift (round 1 vs 2 diff) each re-ran the SAME chained
   * rounds per run: quantize → seed-assign → cent₁ → assign₁ → cent₂ →
   * assign₂. One chain now serves all three; each query keeps only its
   * own tail (a per-cell stats or diff rollup over cell-sized frames).
-  * Every frame is pinned — the per-round assignments localCheckpoint
-  * inside the kernel and would otherwise be swept between queries.
+  * The four stored frames are pinned — the per-round assignments
+  * localCheckpoint inside the kernel and would otherwise be swept
+  * between queries. The round-0 assignment `a0` is deliberately not
+  * stored or pinned: it is read only by `cent1`'s build, so it is
+  * computed once, inside that build.
   */
 object LloydShared {
 
   private final case class Rounds(cent1: DataFrame, a1: DataFrame,
                                   cent2: DataFrame, a2: DataFrame)
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Rounds]
-
-  private def rounds(s: SparkSession, dir: String): Rounds = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private val rounds = new graft.Caches.SessionMemo[String, Rounds]((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val quant = graft.Caches.shared(
         Similarity.quantized(emb, "vec_id", "embedding"))
@@ -41,7 +36,6 @@ object LloydShared {
       val a2 = graft.Caches.shared(Similarity.lloydAssign(quant, cent2))
       Rounds(cent1, a1, cent2, a2)
     })
-  }
 
   /** Round-1 (vid, cell, dcc) assignment — sim_ivf_train's input. */
   private[graft] def assign1(s: SparkSession, dir: String): DataFrame =

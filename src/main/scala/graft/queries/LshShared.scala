@@ -6,8 +6,7 @@ import graft.sources.Tables
 import graft.ops.{Dedup, TextAnalysis => TA}
 
 /** Shared MinHash-LSH frames for the k=8 / 2-bands×4-rows operating
-  * point — memoized per (session, dataset) exactly like [[WinnowShared]]
-  * and [[GraphShared]]. Five registry entries (dedup_minhash_lsh,
+  * point, one set per (session, dataset). Five registry entries (dedup_minhash_lsh,
   * dedup_minhash_est_vs_exact, dedup_bbit_sweep, dedup_pr_audit,
   * text_edit_distance) each rebuilt the SAME k-seed signature corpus
   * pass and the SAME capped band-bucket candidate join per entry; the
@@ -27,37 +26,21 @@ import graft.ops.{Dedup, TextAnalysis => TA}
   */
 object LshShared {
 
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val tokCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The checkpointed (doc, sig) 8-seed signature frame. */
-  private[graft] def sigs8(s: SparkSession, dir: String): DataFrame = {
-    sigCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    sigCache.getOrElseUpdate((s, dir),
+  private[graft] val sigs8 = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(Dedup.minhashSignatureArray(
         Tables.documents(s, dir), "doc_id", "text", 8)))
-  }
 
   /** The checkpointed (doc, ts) distinct-token-set frame. */
-  private[graft] def toksets(s: SparkSession, dir: String): DataFrame = {
-    tokCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    tokCache.getOrElseUpdate((s, dir),
+  private[graft] val toksets = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(Tables.documents(s, dir)
         .select(col("doc_id").as("doc"),
           array_distinct(TA.tokens(col("text"))).as("ts"))))
-  }
 
   /** The checkpointed capped LSH candidate pairs (k=8, 4 rows/band). */
-  private[graft] def pairs84(s: SparkSession, dir: String): DataFrame = {
-    pairCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    pairCache.getOrElseUpdate((s, dir),
+  private[graft] val pairs84 = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(Dedup.lshCandidatePairs(
         Tables.documents(s, dir), "doc_id", "text", 8, 4)))
-  }
 
   /** Materialize the shared frames (bench warmup) — the
     * [[WinnowShared.warmShared]] convention: without it, whichever

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Similarity
 
-/** The shared canonical product-quantization artifacts — memoized per
-  * (session, dataset) like [[SimShared]] / [[GramShared]]. Every PQ
+/** The shared canonical product-quantization artifacts, one set per
+  * (session, dataset). Every PQ
   * registry entry uses the SAME canonical configuration (dim 64, 4
   * subspaces, 16 codewords over the `embeddings` table), yet before this
   * frame existed each of the six consumers re-derived the seed codebook
@@ -30,15 +30,10 @@ object PqShared {
   val Subs = 4
   val Codebook = 16
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   /** The (seeds, codes) pair: seeds = (code, cq) `Codebook` rows,
     * codes = (vec_id, sub, code, dist) — both checkpointed + pinned. */
-  private[graft] def seedsCodes(s: SparkSession,
-                                dir: String): (DataFrame, DataFrame) = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private[graft] val seedsCodes =
+    new graft.Caches.SessionMemo[String, (DataFrame, DataFrame)]((s, dir) => {
       val quant = SimShared.miln(s, dir)
         .select(org.apache.spark.sql.functions.col("vec_id"),
           org.apache.spark.sql.functions.col("mq"))
@@ -49,7 +44,6 @@ object PqShared {
         Similarity.pqCodesQuant(quant, "vec_id", Dim, Subs, seeds))
       (seeds, codes)
     })
-  }
 
   private[graft] def seeds(s: SparkSession, dir: String): DataFrame =
     seedsCodes(s, dir)._1

@@ -12,7 +12,7 @@ import graft.ops.Events
   * strings, every top-k has a unique tiebreak, and each query ends with a
   * deterministic global sort.
   */
-object Relational {
+object Relational extends Module {
 
   val queries: Map[String, Q] = Map(
     // Grouped aggregation with exact sums + IEEE-stable avg (TPC-H Q1 shape).

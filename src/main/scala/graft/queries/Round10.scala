@@ -10,7 +10,7 @@ import graft.sources.Tables
   * conventions as everywhere: integer-exact emitted columns, capped
   * pair machinery, oracle twins in DuckDB SQL.
   */
-object Round10 {
+object Round10 extends Module {
 
   /** The shared BPE training loop: 3 rounds of (adjacent-pair rollup →
     * 1-row broadcast top pair → per-row fuse) over the word-frequency
@@ -18,22 +18,15 @@ object Round10 {
     * winning (p, cnt, round) frames. Every round is checkpointed so the
     * two consumers (text_bpe_train / text_bpe_apply) never replay
     * earlier rounds. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame])]
-
-  private[queries] def bpeRounds(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame]) = {
+  private[queries] val bpeRounds = new graft.Caches.SessionMemo[
+      String, (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame])]((s, dir) => {
     import graft.ops.{TextAnalysis => TA}
-    // memoized per (session, dataset): THREE registry consumers
+    // one per (session, dataset): THREE registry consumers
     // (text_bpe_train / text_bpe_apply / text_bpe_fertility) each
     // re-ran the word-freq build + all 3 fuse rounds before round 17.
     // Every frame is pinned (Caches.shared) — a bare localCheckpoint
     // would be swept between queries and later consumers would read
     // dead, non-recomputable blocks.
-    bpeCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    bpeCache.getOrElseUpdate((s, dir), {
       // word frequencies = Σtf over the shared term-frequency frame
       var cur = graft.Caches.shared(TokShared.tokenCounts(s, dir)
         .select(col("tok").as("w"), col("n").as("freq"))
@@ -58,7 +51,6 @@ object Round10 {
       }
       (cur, tops)
     })
-  }
 
   /** Materialize the shared BPE rounds (bench warmup). */
   def warmBpe(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {

@@ -13,7 +13,7 @@ import graft.ops.{TextAnalysis => TA}
   * conventions as everywhere: integer-exact emitted columns, capped /
   * blocked pair machinery, DuckDB oracle twins.
   */
-object Round10b {
+object Round10b extends Module {
 
   val queries: Map[String, Q] = Map(
 

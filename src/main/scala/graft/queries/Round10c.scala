@@ -17,7 +17,7 @@ import graft.ops.{TextAnalysis => TA, Similarity}
   * columns, capped/blocked pair machinery, bounded window frames,
   * DuckDB oracle twins.
   */
-object Round10c {
+object Round10c extends Module {
 
   /** Benford first-digit expectation, basis points of log10(1+1/d) for
     * d = 1..9 — the SAME literal table on both engines, so parity never

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * DuckDB `//`), capped pair fan-out, bounded window frames, and a
   * DuckDB oracle twin per query.
   */
-object Round10d {
+object Round10d extends Module {
 
   val queries: Map[String, Q] = Map(
 

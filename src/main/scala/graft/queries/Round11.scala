@@ -13,7 +13,7 @@ import graft.sources.Tables
   * twin per query, every idiv operand kept positive so trunc == floor
   * across engines.
   */
-object Round11 {
+object Round11 extends Module {
 
   val queries: Map[String, Q] = Map(
 

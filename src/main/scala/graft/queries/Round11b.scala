@@ -16,7 +16,7 @@ import graft.sources.Tables
   * integer-exact emitted columns, positive idiv operands, a DuckDB
   * oracle twin per query.
   */
-object Round11b {
+object Round11b extends Module {
 
   private def h3Sql(e: String): String = Sketch.h3Sql(e)
 

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * and per-source bigram pseudo-entropy (the token-level sibling of
   * text_char_entropy's integer-⌊log2⌋ convention).
   */
-object Round11c {
+object Round11c extends Module {
 
   val queries: Map[String, Q] = Map(
 

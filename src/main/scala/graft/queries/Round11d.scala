@@ -12,7 +12,7 @@ import graft.sources.Tables
   * OR-merged across the window, the composition that answers sliding
   * distinct at 100 TB without ever re-scanning raw keys.
   */
-object Round11d {
+object Round11d extends Module {
 
   private def ilog2(c: Column): Column = (length(bin(c)) - 1).cast("long")
 

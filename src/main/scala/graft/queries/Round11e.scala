@@ -10,7 +10,7 @@ import graft.sources.Tables
   * IVF-PQ end-to-end recall audit — the three numbers a production
   * deployment of the dedup / ANN / sketch stacks watches.
   */
-object Round11e {
+object Round11e extends Module {
 
   /** 32-bit md5-prefix hash — the q_kmv_distinct convention. */
   private def h32(c: org.apache.spark.sql.Column) =

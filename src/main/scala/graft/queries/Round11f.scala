@@ -10,7 +10,7 @@ import graft.sources.Tables
   * (trend = centered 7-day MA, seasonal = per-dow mean of detrended,
   * residual stats — all integer milli over the bounded day spine).
   */
-object Round11f {
+object Round11f extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * means what it claims. Together with text_linear_score the family is
   * the full filter lifecycle: train → apply → calibrate.
   */
-object Round11g {
+object Round11g extends Module {
 
   private def ilog2(c: org.apache.spark.sql.Column) =
     (length(bin(c)) - 1).cast("long")

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * correctness number: how many label rows a naive latest-value join
   * would contaminate with future data).
   */
-object Round11h {
+object Round11h extends Module {
 
   val queries: Map[String, Q] = Map(
 

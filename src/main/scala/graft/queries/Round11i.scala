@@ -9,7 +9,7 @@ import graft.sources.Tables
   * clustering serves its query set) and the PIT feature-staleness bands
   * (how old the point-in-time-correct feature is at label time).
   */
-object Round11i {
+object Round11i extends Module {
 
   val queries: Map[String, Q] = Map(
 

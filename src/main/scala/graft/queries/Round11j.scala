@@ -17,7 +17,7 @@ import graft.sources.Tables
   * reciprocal ranks are truncating 1000/rank — identical literals on
   * both engines, no runtime transcendentals.
   */
-object Round11j {
+object Round11j extends Module {
 
   /** floor(1000 / log2(i+1)) for ranks 1..10 — the DCG discount. */
   private val discMilli =

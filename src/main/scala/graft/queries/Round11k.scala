@@ -10,7 +10,7 @@ import graft.sources.Tables
   * candidates?) and the textbook join-cardinality estimate vs the exact
   * join size (the CBO statistics readout that decides plans at 100 TB).
   */
-object Round11k {
+object Round11k extends Module {
 
   /** ±1 sign for (projection row j, dim d) from the first md5 hex digit
     * of "rp{j}_{d}" — digit ≥ 8 → +1 (the planeWeight derivation with a

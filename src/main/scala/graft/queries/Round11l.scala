@@ -10,7 +10,7 @@ import graft.sources.Tables
   * PageRank convergence residuals (L1/L∞ per iteration — run until a
   * threshold, don't guess an iteration count).
   */
-object Round11l {
+object Round11l extends Module {
 
   val queries: Map[String, Q] = Map(
 

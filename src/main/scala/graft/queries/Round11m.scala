@@ -11,7 +11,7 @@ import graft.sources.Tables
   * forecast backtest (naive vs seasonal-naive, the "which baseline do we
   * beat" number every capacity forecast starts from).
   */
-object Round11m {
+object Round11m extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * behavioral user fingerprints (identical event-sequence groups, the
   * bot-farm / replay detector).
   */
-object Round11n {
+object Round11n extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * and the power-iteration convergence angle (has the PCA axis
   * settled?).
   */
-object Round11o {
+object Round11o extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -9,7 +9,7 @@ import graft.sources.Tables
   * similarity triple), and the order-totals reconciliation audit (does
   * the header agree with its lines — the classic cross-table DQ gate).
   */
-object Round11p {
+object Round11p extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * behind HNSW-style indexes, traced hop by hop), and the same-day
   * duplicate-order audit (the AP double-payment check).
   */
-object Round11q {
+object Round11q extends Module {
 
   val queries: Map[String, Q] = Map(
 

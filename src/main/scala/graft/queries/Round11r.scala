@@ -12,7 +12,7 @@ import graft.sources.Tables
   * dimension as it stood at time T), and backoff-order coverage (how
   * often a bigram LM actually gets to use its bigrams).
   */
-object Round11r {
+object Round11r extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * Markov chain (where the funnel settles), and the df-threshold
   * automatic stopword list (the corpus-specific filter input).
   */
-object Round11s {
+object Round11s extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * the revenue Herfindahl index (concentration risk; corpus total as a
   * broadcast scalar, never a user-sized single-partition window).
   */
-object Round11t {
+object Round11t extends Module {
 
   val queries: Map[String, Q] = Map(
 

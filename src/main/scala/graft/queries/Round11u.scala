@@ -10,7 +10,7 @@ import graft.sources.Tables
   * doubling-threshold value survival curve (the integer tail-index
   * ingredients).
   */
-object Round11u {
+object Round11u extends Module {
 
   val queries: Map[String, Q] = Map(
 

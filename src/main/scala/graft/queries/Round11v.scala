@@ -11,7 +11,7 @@ import graft.sources.Tables
   * detection), and the per-type daily load factor (peak-to-mean, the
   * provisioning number).
   */
-object Round11v {
+object Round11v extends Module {
 
   val queries: Map[String, Q] = Map(
 

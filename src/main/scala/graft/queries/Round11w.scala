@@ -10,7 +10,7 @@ import graft.sources.Tables
   * weekly structure, or slow drift) and the delete-cascade impact plan
   * (what a customer erasure takes with it downstream).
   */
-object Round11w {
+object Round11w extends Module {
 
   val queries: Map[String, Q] = Map(
 

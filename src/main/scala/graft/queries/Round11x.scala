@@ -11,7 +11,7 @@ import graft.sources.Tables
   * growth curve (does the corpus still teach new tokens, or has the
   * vocab saturated?).
   */
-object Round11x {
+object Round11x extends Module {
 
   val queries: Map[String, Q] = Map(
 

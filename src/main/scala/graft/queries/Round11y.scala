@@ -9,7 +9,7 @@ import graft.sources.Tables
   * the most, discounted by distance) and the dedup keeper-strategy
   * comparison (what each canonicalization policy actually keeps).
   */
-object Round11y {
+object Round11y extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -12,7 +12,7 @@ import graft.ops.Similarity
   * index parameters must scale with the data instead — this file holds
   * the operators whose *knobs* are computed from corpus statistics.
   */
-object Round12 {
+object Round12 extends Module {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

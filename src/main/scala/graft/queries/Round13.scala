@@ -12,7 +12,7 @@ import graft.sources.Tables
   * their public offsets (18/22); any other magic keeps the stub dims.
   * No codec library anywhere — the parse is codegen'd hex slicing.
   */
-object Round13 {
+object Round13 extends Module {
 
   // synthesized geometry for image-class docs: derived from n_chars so
   // the oracle reproduces it without any hashing

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * request will route) — plus the weekly-growth ops readout and an
   * integer BM25-style ranked search over the df-bounded postings.
   */
-object Round14 {
+object Round14 extends Module {
 
   val queries: Map[String, Q] = Map(
 

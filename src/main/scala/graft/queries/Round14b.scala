@@ -15,7 +15,7 @@ import graft.sources.Tables
   * (the "is my changelog even well-formed" pre-flight every merge
   * consumer runs before trusting an upsert stream).
   */
-object Round14b {
+object Round14b extends Module {
 
   val queries: Map[String, Q] = Map(
 

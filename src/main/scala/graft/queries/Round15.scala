@@ -11,7 +11,7 @@ import graft.sources.{Jdbc, Tables}
   * pools), and the persisted run-history table (the durable twin of the
   * reference's run log).
   */
-object Round15 {
+object Round15 extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -23,7 +23,7 @@ import graft.streaming.{CdcOp, PitEvent, StreamOps}
   * chunking, so watermarks only ever move forward and every run finalizes
   * identically; a far-future sentinel event flushes the last horizon.
   */
-object Round15b {
+object Round15b extends Module {
 
   private val sinkSeq = new AtomicInteger(0)
 

@@ -17,7 +17,7 @@ import graft.sources.Tables
   * stage's row count straight from the parquet sources, so a shell that
   * dropped, double-ran, or mis-counted a stage hash-mismatches.
   */
-object Round16 {
+object Round16 extends Module {
 
   val queries: Map[String, Q] = Map(
 

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * text verbatim, so a store that dropped, re-keyed or mis-encoded a
   * single code row hash-mismatches against the inline semantics.
   */
-object Round17 {
+object Round17 extends Module {
 
   // container-synthesis inputs shared with the Round13 BMP trio: the
   // image-class slice (text starting a-f) gets a REAL header for the

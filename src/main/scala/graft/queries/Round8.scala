@@ -14,7 +14,7 @@ import graft.ops.{Dedup, TextAnalysis => TA}
   * aggregation, truncating-div basis points, doubles only in final
   * expressions over bit-identical operands, deterministic tiebreaks.
   */
-object Round8 {
+object Round8 extends Module {
 
   val queries: Map[String, Q] = Map(
     // Gaps-and-islands: per-user runs of CONSECUTIVE active days (the

@@ -10,7 +10,7 @@ import graft.ops.{TextAnalysis => TA, Dedup}
   * two-phase / pigeonhole shapes that survive a 100× scale-up (no global
   * unpartitioned windows over row-proportional sets, no distance scans).
   */
-object Round9 {
+object Round9 extends Module {
 
   val queries: Map[String, Q] = Map(
 

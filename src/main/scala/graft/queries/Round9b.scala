@@ -20,7 +20,7 @@ import graft.ops.{TextAnalysis => TA}
   * source column, then integer-only arithmetic, so no
   * engine-divergent double chain ever reaches an emitted column.
   */
-object Round9b {
+object Round9b extends Module {
 
   private val SCALE = 1000000000L // PageRank fixed-point scale (1e9)
 

@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Dedup
 import graft.sources.Tables
 
-/** The shared df≤50 word-3-gram shingle frames — memoized per
-  * (session, dataset) exactly like [[WinnowShared]] / [[LshShared]] /
-  * [[TextDedup.sharedPairs05]], so the shingle pair family stops
+/** The shared df≤50 word-3-gram shingle frames, one pair per
+  * (session, dataset), so the shingle pair family stops
   * rebuilding the identical corpus pass per registry entry.
   *
   * Two frames, both threshold-independent:
@@ -29,30 +28,14 @@ import graft.sources.Tables
   */
 object ShingleShared {
 
-  private val arrsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The materialized (doc, set, n_sh) per-doc array frame. */
-  private[graft] def arrs(s: SparkSession, dir: String): DataFrame = {
-    // Evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    arrsCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    arrsCache.getOrElseUpdate((s, dir),
+  private[graft] val arrs = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(
         Dedup.docShingleArrays(Tables.documents(s, dir), "doc_id", "text", 3)))
-  }
-
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** The materialized all-pairs exact count frame (a, b, inter, na, nb). */
-  private[graft] def allPairCounts(s: SparkSession, dir: String): DataFrame = {
-    pairCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    pairCache.getOrElseUpdate((s, dir),
+  private[graft] val allPairCounts = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(Dedup.allPairCountsFromArrays(arrs(s, dir))))
-  }
 
   /** Materialize both shared frames (bench warmup). */
   def warmShared(s: SparkSession, dir: String): Unit = {

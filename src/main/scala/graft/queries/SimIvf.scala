@@ -6,8 +6,8 @@ import graft.sources.Tables
 
 /** The shared scale-adaptive IVF index for the sim_ivf_auto* family
   * (sim_ivf_auto / sim_ivf_auto_search / sim_ivf_auto_probe_curve /
-  * sim_ivf_auto_recall) — memoized per (session, dataset) exactly like
-  * [[TextDedup.sharedPairs05]], so four registry consumers in one run
+  * sim_ivf_auto_recall), one per (session, dataset), so four registry
+  * consumers in one run
   * pay for ONE sampled-Lloyd train + ONE full-corpus assignment scan
   * instead of four identical ones. The cached frames (quantized corpus,
   * centroid arrays, assignment) are checkpointed and PINNED so the
@@ -15,15 +15,8 @@ import graft.sources.Tables
   * orders of magnitude smaller than raw embeddings. */
 object SimIvf {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.TrainedIvf]
-
-  private[graft] def sharedAuto(s: SparkSession,
-                                dir: String): Similarity.TrainedIvf = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private[graft] val sharedAuto =
+    new graft.Caches.SessionMemo[String, Similarity.TrainedIvf]((s, dir) => {
       val t0 = Similarity.ivfAutoTrain(
         Tables.embeddings(s, dir), "vec_id", "embedding")
       // shared() re-homes each frame under the configured checkpoint
@@ -32,7 +25,6 @@ object SimIvf {
         centArr = graft.Caches.shared(t0.centArr),
         assigned = graft.Caches.shared(t0.assigned))
     })
-  }
 
   /** Materialize the shared trained index (bench warmup) — without it,
     * whichever family member runs first in an alphabetical registry

@@ -13,7 +13,7 @@ import graft.ops.{Similarity, Dedup, Multimodal, Layout}
   * exact integer dot/norm sums (Similarity.cosBp) — round(double, n), the
   * r6 hash-break class, never appears on an emission or ranking path.
   */
-object SimMm {
+object SimMm extends Module {
 
   /** ANN tuning shared by the Spark queries and their oracle twins:
     * hyperplanes target `TargetBucket`-vector buckets (planes =
@@ -28,20 +28,13 @@ object SimMm {
     * (cosine is symmetric; both directions carry the same basis-point
     * value). Columns: src < dst, cos_bp. */
   // The mutual-kNN edge frame serves TWO registry entries
-  // (sim_knn_graph + sim_knn_cc) — memoized per (session, dataset)
-  // exactly like SimIvf.sharedAuto / GraphShared, so one run pays for
-  // ONE label-blocked kNN build instead of two identical ones; the
-  // edge frame is checkpointed + pinned (≪ corpus — top-3 per vector).
-  private val knnEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private[queries] def mutualKnnEdges(s: org.apache.spark.sql.SparkSession,
-                             dir: String): org.apache.spark.sql.DataFrame = {
-    knnEdgeCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    knnEdgeCache.getOrElseUpdate((s, dir),
+  // (sim_knn_graph + sim_knn_cc), one per (session, dataset), so one
+  // run pays for ONE label-blocked kNN build instead of two identical
+  // ones; the edge frame is checkpointed + pinned (≪ corpus — top-3
+  // per vector).
+  private[queries] val mutualKnnEdges =
+    new graft.Caches.SessionMemo[String, org.apache.spark.sql.DataFrame]((s, dir) =>
       graft.Caches.shared(buildMutualKnnEdges(s, dir)))
-  }
 
   /** Materialize the shared kNN edge frame (bench warmup). */
   def warmKnnEdges(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 import graft.sources.Tables
 
-/** The shared milli-quantized embedding corpus — memoized per
-  * (session, dataset) exactly like [[GraphShared]] / [[SimIvf.sharedAuto]]
-  * / [[TextDedup.sharedPairs05]], so the sim_* / dedup-embedding registry
+/** The shared milli-quantized embedding corpus, one per
+  * (session, dataset), so the sim_* / dedup-embedding registry
   * consumers in one run pay for ONE quantize + norm scan of the vector
   * table instead of one each. The frame is the canonical
   * `(vec_id, mq: array<bigint>, nsq: bigint)` representation every
@@ -19,20 +18,12 @@ import graft.sources.Tables
   */
 object SimShared {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The checkpointed (vec_id, mq, nsq) corpus frame. */
-  private[graft] def miln(s: SparkSession, dir: String): DataFrame = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private[graft] val miln = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       graft.Caches.shared(Tables.embeddings(s, dir)
         .select(col("vec_id"), Similarity.milliQuant(col("embedding")).as("mq"))
         .withColumn("nsq", Similarity.normSqMilli(col("mq"))))
     })
-  }
 
   /** Materialize the shared frame (bench warmup) — without it, whichever
     * sim entry runs first in an alphabetical registry sweep absorbs the

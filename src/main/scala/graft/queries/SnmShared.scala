@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 
-/** The shared sorted-neighborhood pair frame — memoized per
-  * (session, dataset) like [[GraphShared]] / [[SimShared]]. ONE w=4
+/** The shared sorted-neighborhood pair frame, one per
+  * (session, dataset). ONE w=4
   * tagged pair build ([[graft.ops.Dedup.snmPairsDist]]) serves both SNM
   * registry entries: `dedup_sorted_neighborhood` is the dist ≤ 2 filter
   * of it (the w=2 semantics exactly — a pair's offset coordinate is the
@@ -14,17 +14,11 @@ import graft.sources.Tables
   * window frame inside the build is swept between queries as usual. */
 object SnmShared {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The checkpointed (a, b, dist, inter, uni, jaccard_bp) w=4 frame. */
-  private[graft] def pairs4(s: SparkSession, dir: String): DataFrame = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private[graft] val pairs4 = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       graft.Caches.shared(graft.ops.Dedup.snmPairsDist(
           Tables.documents(s, dir), "doc_id", "text", 3, 4))
     })
-  }
 
   /** Materialize the shared frame (bench warmup). */
   def warmShared(s: SparkSession, dir: String): Unit = {

@@ -7,26 +7,18 @@ import graft.ops.{TextAnalysis => TA, Dedup, Urls}
 /** Text analysis (SURVEY §2.5) + deduplication (§2.3) over `documents`.
   * All hashes are md5 hex strings so DuckDB reproduces them exactly.
   */
-object TextDedup {
+object TextDedup extends Module {
 
   /** The t=0.5 trigram Jaccard pair index shared by the cluster family
     * (dedup_clusters / dedup_cc / corpus_canonical / dedup_cluster_stats
-    * / dedup_source_matrix) — memoized per (session, dataset) so five
+    * / dedup_source_matrix), one per (session, dataset), so five
     * consumers in one run pay
     * for ONE candidate-generation build (Dedup.pairIndex — the dominant
     * cost of every clustering query) instead of four identical ones.
     * The map holds a handful of checkpointed pair frames (pairs are
     * orders of magnitude smaller than the corpus), never raw data. */
-  private val pairIndexCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-  private[graft] def sharedPairs05(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    // Evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone and the map would otherwise hold dead plan
-    // references forever in a long-lived JVM (test suites, restarts).
-    pairIndexCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    pairIndexCache.getOrElseUpdate((s, dir),
+  private[graft] val sharedPairs05 =
+    new graft.Caches.SessionMemo[String, org.apache.spark.sql.DataFrame]((s, dir) =>
       // rides the shared (doc, set, n_sh) array frame (ShingleShared):
       // the t=0.5 prefix candidate join + Jaccard tail is all this
       // build still pays — the corpus pass is shared with the t=0.8
@@ -34,7 +26,6 @@ object TextDedup {
       graft.Caches.shared(
         Dedup.jaccardFromCounts(
           Dedup.prefixPairsFromArrays(ShingleShared.arrs(s, dir), 0.5), 0.5)))
-  }
 
   /** Materialize the shared t=0.5 pair index (bench warmup). The build is
     * one-time pipeline infrastructure amortized over its five consumers

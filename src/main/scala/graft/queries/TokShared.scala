@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.{TextAnalysis => TA}
 import graft.sources.Tables
 
-/** The shared per-document term-frequency frame — memoized per
-  * (session, dataset) exactly like [[WinnowShared]] / [[ShingleShared]]
-  * / [[LshShared]], so the unigram text family stops re-running the
+/** The shared per-document term-frequency frame, one per
+  * (session, dataset), so the unigram text family stops re-running the
   * identical tokenize → explode → (doc, tok) rollup corpus pass per
   * registry entry (~16 entries paid it each run before round 17).
   *
@@ -34,16 +33,8 @@ import graft.sources.Tables
   */
 object TokShared {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The materialized (doc_id, lang, source, nonblank, tok, tf) frame. */
-  private[graft] def tf(s: SparkSession, dir: String): DataFrame = {
-    // evict entries whose owning session is stopped — their checkpointed
-    // blocks are gone (same discipline as TextDedup.pairIndexCache)
-    cache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir),
+  private[graft] val tf = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(
         Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("source"),
@@ -52,7 +43,6 @@ object TokShared {
           .groupBy(col("doc_id"), col("lang"), col("source"),
             col("nonblank"), col("tok"))
           .agg(count(lit(1)).as("tf"))))
-  }
 
   /** Corpus token occurrence counts (tok, n) — the shared first rollup
     * of the zipf/hapax/vocab/BPE consumers. NOT materialized (one cheap

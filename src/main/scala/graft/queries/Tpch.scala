@@ -20,7 +20,7 @@ import graft.sources.Tables
   * (cents = round(price·100), disc_bp = round(discount·10⁴)), integer
   * arithmetic after.
   */
-object Tpch {
+object Tpch extends Module {
 
   private def discRev = {
     val cents = round(col("l_extendedprice") * 100).cast("long")

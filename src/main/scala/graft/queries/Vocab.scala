@@ -28,7 +28,7 @@ import graft.sources.Tables
   * this file is the distinct-token aggregate, whose cardinality is the
   * vocabulary of the corpus (millions), not its token count (trillions).
   */
-object Vocab {
+object Vocab extends Module {
 
   /** Vocabulary size (top-K tokens by corpus frequency). */
   val VocabSize = 100
@@ -44,26 +44,19 @@ object Vocab {
   private def tokenCounts(s: SparkSession, dir: String): DataFrame =
     TokShared.tokenCounts(s, dir).select(col("tok").as("token"), col("n"))
 
-  private val vocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Top-K vocab with dense ids. The orderBy+limit lowers to
     * TakeOrderedAndProject (distributed per-partition top-K heaps); the
     * row_number window then runs over K rows only, so its single
     * partition is a constant-size post-processing step, not a scale
-    * hazard. Memoized per (session, dataset): three registry consumers
+    * hazard. One per (session, dataset): three registry consumers
     * broadcast the same K-row artifact. */
-  private def vocab(s: SparkSession, dir: String): DataFrame = {
-    vocabCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    vocabCache.getOrElseUpdate((s, dir),
+  private val vocab = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) =>
       graft.Caches.shared(
         tokenCounts(s, dir)
           .orderBy(col("n").desc, col("token")).limit(VocabSize)
           .withColumn("token_id",
             row_number().over(Window.orderBy(col("n").desc, col("token")))
               .cast("long"))))
-  }
 
   /** Oracle CTE fragment mirroring `vocab` (shared by all three queries so
     * the SQL twins cannot drift from each other). */

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.ops.{TextAnalysis => TA}
 
-/** The shared per-document winnowing fingerprint frame — memoized per
-  * (session, dataset) exactly like [[GraphShared]] and
-  * [[SimIvf.sharedAuto]], so the winnowing family (text_winnowing /
+/** The shared per-document winnowing fingerprint frame, one per
+  * (session, dataset), so the winnowing family (text_winnowing /
   * dedup_winnow_pairs / text_template_fps and any future consumer) pays
   * for ONE tokenize → 3-shingle → md5 → winnowMinima(w=4) corpus pass
   * instead of one per registry entry. This retires the family's
@@ -30,13 +29,8 @@ import graft.ops.{TextAnalysis => TA}
   */
 object WinnowShared {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The checkpointed (doc_id, source, nw, nf, fps) frame. */
-  private[graft] def docWinnow(s: SparkSession, dir: String): DataFrame = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, dir), {
+  private[graft] val docWinnow = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       val base = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), TA.tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("source"),
@@ -50,14 +44,10 @@ object WinnowShared {
           array_distinct(col("wins")).as("fps"))
       graft.Caches.shared(base)
     })
-  }
 
   /** The exploded (doc_id, f) fingerprint postings view. */
   private[graft] def fpPostings(s: SparkSession, dir: String): DataFrame =
     docWinnow(s, dir).select(col("doc_id"), explode(col("fps")).as("f"))
-
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** The df≤50-capped winnow candidate pairs (a, b, shared), shared ≥ 2 —
     * ONE materialized pair frame serving dedup_winnow_pairs,
@@ -66,10 +56,7 @@ object WinnowShared {
     * consumers query, not something each rebuilds). The df cap keeps
     * pair work ∝ true overlap at any corpus size (a boilerplate
     * fingerprint shared by thousands of docs carries no match signal). */
-  private[graft] def winnowPairs(s: SparkSession, dir: String): DataFrame = {
-    pairCache.filterInPlace { case ((sess, _), _) =>
-      !sess.sparkContext.isStopped }
-    pairCache.getOrElseUpdate((s, dir), {
+  private[graft] val winnowPairs = new graft.Caches.SessionMemo[String, DataFrame]((s, dir) => {
       val fp = fpPostings(s, dir)
       val capped = fp.join(
         fp.groupBy(col("f")).agg(count(lit(1)).as("df"))
@@ -82,7 +69,6 @@ object WinnowShared {
         .where(col("shared") >= 2)
       graft.Caches.shared(pairs)
     })
-  }
 
   /** Materialize the shared frames (bench warmup) — same convention as
     * [[GraphShared.warmShared]]: without it, whichever winnowing entry

@@ -8,6 +8,13 @@ package object queries {
   /** Driver contract: a named query takes (session, sf-dir) → result. */
   type Q = (SparkSession, String) => DataFrame
 
+  /** One registry module: named queries plus the DuckDB oracle SQL of
+    * each, under the same names (SparkEntry checks the pairing). */
+  trait Module {
+    def queries: Map[String, Q]
+    def oracle: Map[String, String]
+  }
+
   /** Order-independent exact money sum: accumulate in DECIMAL(18,4) (exact,
     * commutative) then cast to double — bit-identical across engines and
     * partitionings, unlike a raw double sum. */

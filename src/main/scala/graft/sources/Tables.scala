@@ -39,13 +39,11 @@ object Tables {
   // semantics-free; it just stops re-listing and re-footer-reading the
   // same files hundreds of times per sweep (r17 — guide §6 file-listing
   // discipline, applied to the loader instead of a conf).
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val memo = new graft.Caches.SessionMemo[(String, String), DataFrame](
+    { case (spark, (dir, name)) => load(spark, dir, name) })
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    memo.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-    memo.getOrElseUpdate((spark, dir, name), load(spark, dir, name))
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    memo(spark, (dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -79,7 +77,7 @@ object Tables {
     * destined for a broadcast) are left alone: redistributing them only
     * inserts a useless exchange under the BroadcastExchange. */
   private def rebalance(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_REBALANCE").contains("0")) return df
+    // turning this off was measured slower (OPTIMIZATION_r18.md)
     val minBytes = 256L * 1024
     val p = spark.sparkContext.defaultParallelism
     val hPath = new org.apache.hadoop.fs.Path(path)

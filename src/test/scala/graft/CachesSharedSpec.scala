@@ -14,6 +14,63 @@ import org.apache.spark.sql.execution.LogicalRDD
 class CachesSharedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  test("SessionMemo: one build per (session, dir), the same frame on " +
+      "every request, kept across a sweep") {
+    import spark.implicits._
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    (1L to 50L).toDF("x").write.parquet(s"$dir2/t.parquet")
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val memo = new Caches.SessionMemo[String, org.apache.spark.sql.DataFrame](
+      (s, dir) => {
+        builds.incrementAndGet()
+        Caches.shared(s.read.parquet(s"$dir/t.parquet")
+          .groupBy((col("x") % 5).as("k")).agg(sum(col("x")).as("s")))
+      })
+    val dir1 = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    (1L to 100L).toDF("x").write.parquet(s"$dir1/t.parquet")
+
+    val first = memo(spark, dir1)
+    assert(memo(spark, dir1) eq first, "same DataFrame instance per (session, dir)")
+    assert(builds.get == 1, "the build runs once")
+
+    val rddId = first.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+    val want = first.collect().toSet
+    Caches.sweep(spark)
+    assert(spark.sparkContext.getPersistentRDDs.contains(rddId),
+      "the pinned frame's blocks survive the sweep")
+    assert(memo(spark, dir1) eq first)
+    assert(first.collect().toSet == want)
+    assert(builds.get == 1)
+
+    val second = memo(spark, dir2)
+    assert(!(second eq first), "a second dir builds its own entry")
+    assert(builds.get == 2)
+    assert(second.agg(sum(col("s"))).head.getLong(0) == (1L to 50L).sum)
+
+    // a registry shared frame goes through the same memo
+    assert(graft.queries.SimShared.miln(spark, TestSpark.sf) eq
+      graft.queries.SimShared.miln(spark, TestSpark.sf))
+  }
+
+  test("session-keyed caching lives only in Caches: no isStopped eviction " +
+      "or SparkSession-keyed TrieMap elsewhere in src/main/scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), "run from the repository root")
+    val sessionKeyedTrieMap =
+      """TrieMap\s*\.?\s*(?:empty)?\s*\[\s*\(\s*(?:[\w.]*\.)?SparkSession\b""".r
+    val offenders = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Caches.scala")
+      .filter { p =>
+        val src = java.nio.file.Files.readString(p)
+        src.contains("isStopped") || sessionKeyedTrieMap.findFirstIn(src).isDefined
+      }
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"use Caches.SessionMemo instead of a hand-rolled session cache in: $offenders")
+  }
+
   private def rootIsLogicalRdd(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.analyzed match {
       case _: LogicalRDD => true

@@ -23,8 +23,32 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("registry: 468 unique query names, paired one-to-one with oracles") {
+    assert(SparkEntry.queries.size == 468)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    import graft.queries.{Module, Q, Relational, Tpch}
+    val dup = intercept[IllegalArgumentException](
+      SparkEntry.merge(Seq(Relational, Tpch, Relational)))
+    assert(dup.getMessage.contains("duplicate query names"))
+    val orphan = new Module {
+      val queries: Map[String, Q] = Map("orphan_q" -> Relational.queries("q1_agg"))
+      val oracle: Map[String, String] = Map("orphan_o" -> "SELECT 1")
+    }
+    val unpaired = intercept[IllegalArgumentException](SparkEntry.merge(Seq(orphan)))
+    assert(unpaired.getMessage.contains("queries without an oracle: orphan_q"))
+    assert(unpaired.getMessage.contains("oracles without a query: orphan_o"))
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("adopt is idempotent: AsOfStrategy is planned once after two calls") {
+    GraftSession.adopt(spark)
+    GraftSession.adopt(spark)
+    assert(spark.sessionState.planner.strategies
+      .count(_ == graft.plans.AsOfStrategy) == 1)
+    assert(spark.catalog.functionExists("vec_cosine"))
   }
 
   test("cluster family over a fresh pair index matches the shared-index queries") {
