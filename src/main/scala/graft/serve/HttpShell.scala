@@ -66,7 +66,14 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
   private val startedAt = new AtomicReference[Option[LocalDateTime]](None)
   private val lastRunAt = new AtomicReference[Option[LocalDateTime]](None)
   private val schedThread = new AtomicReference[Option[Thread]](None)
-  private val runSeq = new AtomicLong(0L)
+  // run ids continue the stored history's, so a restarted shell over the
+  // same historyPath does not upsert its run 1 over an earlier run 1
+  private val runSeq = new AtomicLong(historyPath
+    .filter(graft.sinks.KeyedParquetSink.tableExists(spark, _))
+    .map(Runner.runHistory(spark, _)
+      .agg(org.apache.spark.sql.functions.max("run_id")).head())
+    .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+    .getOrElse(0L))
 
   // bounded in-memory run log (the /api/logs page + SSE source); entry =
   // (timestamp, message)

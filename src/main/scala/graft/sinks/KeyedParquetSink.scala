@@ -1,8 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.Upsert
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** Idempotent keyed parquet sink — the load side of the reference's
   * `INSERT … ON DUPLICATE KEY UPDATE` loop (etlService.js:36-53),
@@ -11,10 +12,20 @@ import graft.etl.Upsert
   * Plain parquet has no row-level MERGE, so the table is laid out in
   * `numBuckets` stable hash partitions of the key (`_bucket =
   * pmod(xxhash64(keys), n)`). An upsert then:
-  *   1. buckets the incoming updates,
-  *   2. reads ONLY the partitions those updates touch (partition pruning),
-  *   3. merges last-write-wins on the key (graft.etl.Upsert),
-  *   4. dynamic-partition-overwrites just the touched partitions.
+  *   1. buckets the incoming updates and collects the touched bucket
+  *      numbers (one job with no shuffle; none for a local frame),
+  *   2. lists the table root once on the driver and reads ONLY the
+  *      touched bucket directories that exist, under the schema stored
+  *      in one data file's footer (no listing or inference job),
+  *   3. merges last-write-wins on (`_bucket`, key) (graft.etl.Merge),
+  *      with both inputs hash-partitioned on `_bucket`, so the merge
+  *      window and the write share that one exchange,
+  *   4. dynamic-partition-overwrites just the touched partitions, and
+  *      deletes a touched directory the overwrite wrote nothing into.
+  *
+  * A merge is then 3-4 Spark jobs (touched buckets, one map job per
+  * side of the exchange, the write) and a point read ([[readBuckets]])
+  * is the one job of its caller's action.
   *
   * Write amplification is |touched partitions| / numBuckets of the table,
   * not the whole table — at 100 TB with well-spread keys an incremental
@@ -36,7 +47,7 @@ object KeyedParquetSink {
     * write time and VALIDATED on every keyed read/merge/delete. */
   private def writeMeta(spark: SparkSession, path: String,
                         numBuckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
+    val p = new Path(path, MetaFile)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     try out.write(numBuckets.toString.getBytes("UTF-8")) finally out.close()
@@ -46,7 +57,7 @@ object KeyedParquetSink {
     * written before the metadata existed do not — callers' argument is
     * trusted for those, as before). */
   def storedBuckets(spark: SparkSession, path: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
+    val p = new Path(path, MetaFile)
     try {
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(p)) None
@@ -86,11 +97,9 @@ object KeyedParquetSink {
     * Leave ONE zero-row schema-bearing parquet file in `_bucket=0` so
     * the table stays readable (and upsertable) as an empty table. */
   private def keepEmptySchema(spark: SparkSession, path: String,
-                              schema: org.apache.spark.sql.types.StructType): Unit = {
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == BucketCol))
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
+                              schema: StructType): Unit = {
+    val dataSchema = StructType(schema.fields.filterNot(_.name == BucketCol))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dataSchema)
       .repartition(1)
       .write.mode("append").parquet(s"$path/$BucketCol=0")
   }
@@ -103,7 +112,7 @@ object KeyedParquetSink {
     * filesystem/S3 error here would silently replace the whole table with
     * just the current batch. */
   def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     try p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
     catch { case _: java.io.FileNotFoundException => false }
   }
@@ -118,12 +127,103 @@ object KeyedParquetSink {
     df.withColumn(BucketCol,
       pmod(xxhash64(concat_ws("\u0000", keys.map(col): _*)), lit(numBuckets)).cast("int"))
 
-  /** Initial (or full-replace) write of the keyed table. */
+  /** The distinct bucket numbers of a bucketed frame. A local frame is
+    * already on the driver and is read there, with no job; any other runs
+    * ONE job with no shuffle: each partition sends back the set of
+    * buckets it saw, at most `numBuckets` values, and the driver unions
+    * them. */
+  private def bucketsOf(bucketed: DataFrame): Seq[Int] = {
+    val b = bucketed.select(BucketCol)
+    val seen = b.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        b.collect().map(_.getInt(0))
+      case _ =>
+        b.queryExecution.toRdd.mapPartitions { rows =>
+          val set = scala.collection.mutable.BitSet()
+          rows.foreach(r => set += r.getInt(0))
+          Iterator.single(set.toArray)
+        }.collect().flatten
+    }
+    seen.distinct.sorted.toSeq
+  }
+
+  /** The table's bucket directories that exist, by bucket number — one
+    * driver-side listing of the root, where `spark.read.parquet(path)`
+    * would run a listing job once the table has more buckets than
+    * `parallelPartitionDiscoveryThreshold`. */
+  private def bucketDirs(fs: FileSystem, root: Path): Map[Int, Path] =
+    fs.listStatus(root).iterator
+      .filter(_.isDirectory)
+      .flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith(s"$BucketCol="))
+          name.drop(BucketCol.length + 1).toIntOption.map(_ -> st.getPath)
+        else None
+      }.toMap
+
+  /** Data file names of one bucket directory (hidden and `_`-prefixed
+    * files excluded, as Spark's reader excludes them). */
+  private def dataFiles(fs: FileSystem, dir: Path): Set[String] =
+    fs.listStatus(dir).iterator.filter(_.isFile).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+
+  /** The table schema with `_bucket INT` appended, read on the driver from
+    * the footer of the first `.parquet` data file found in `dirs` — the
+    * Spark row schema every writer of this sink stores under
+    * `org.apache.spark.sql.parquet.row.metadata` — in place of the schema
+    * inference job of `spark.read.parquet(path)`. */
+  private def tableSchema(spark: SparkSession, path: String, fs: FileSystem,
+                          dirs: Iterator[Path]): StructType = {
+    val file = dirs
+      .flatMap(d => dataFiles(fs, d).toSeq.sorted.find(_.endsWith(".parquet"))
+        .map(new Path(d, _)))
+      .nextOption()
+      .getOrElse(throw new IllegalStateException(
+        s"no parquet data file under the bucket directories of $path"))
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val data = Option(meta.getKeyValueMetaData.get(
+        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+          .SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    data.add(BucketCol, IntegerType)
+  }
+
+  /** The directories of `buckets` that exist, and the table schema: one
+    * listing of the root and one footer read, on the driver. */
+  private def locate(spark: SparkSession, path: String,
+                     buckets: Seq[Int]): (FileSystem, Seq[Path], StructType) = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = bucketDirs(fs, root)
+    val present = buckets.flatMap(dirs.get)
+    (fs, present, tableSchema(spark, path, fs, (present ++ dirs.values).iterator))
+  }
+
+  /** The rows of the given bucket directories only, with `_bucket`. */
+  private def scan(spark: SparkSession, path: String, schema: StructType,
+                   dirs: Seq[Path]): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", path)
+      .parquet(dirs.map(_.toString): _*)
+
+  /** Initial (or full-replace) write of the keyed table. An empty `df`
+    * writes no bucket directory, so it leaves the zero-row schema file of
+    * [[keepEmptySchema]] (a streaming sink's first batch may delete every
+    * key it carries). */
   def write(df: DataFrame, path: String, keys: Seq[String], numBuckets: Int): Unit = {
     withBucket(df, keys, numBuckets)
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(path)
-    writeMeta(df.sparkSession, path, numBuckets)
+    val spark = df.sparkSession
+    writeMeta(spark, path, numBuckets)
+    val root = new Path(path)
+    if (bucketDirs(root.getFileSystem(spark.sessionState.newHadoopConf()), root).isEmpty)
+      keepEmptySchema(spark, path, df.schema)
   }
 
   /** Append a batch into the keyed layout (streaming-append / batched-
@@ -145,24 +245,23 @@ object KeyedParquetSink {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop(BucketCol)
 
-  /** Bucket-pruned POINT READ: scan only the partitions whose bucket
-    * contains one of the `wanted` key tuples (a small frame carrying the
-    * key columns — e.g. the nprobe cells an IVF search probes). The
-    * bucket list is computed through the SAME withBucket hash as the
-    * writer (never re-derived driver-side, so it cannot drift) and is
-    * bounded by |wanted|, a config-sized frame, never data volume.
-    * Rows from co-hashed keys sharing a pruned bucket survive — callers
-    * filter the exact key inside; the read itself is
+  /** Bucket-pruned POINT READ: scan only the bucket directories that hold
+    * one of the `wanted` key tuples (a small frame carrying the key
+    * columns — e.g. the nprobe cells an IVF search probes). The bucket
+    * list is computed through the SAME withBucket hash as the writer
+    * (never re-derived driver-side, so it cannot drift; no job when
+    * `wanted` is a local frame) and is bounded by |wanted|, a
+    * config-sized frame, never data volume. Only those directories are
+    * listed and read, under the footer schema, with no listing or
+    * inference job. Rows from co-hashed keys sharing a bucket survive —
+    * callers filter the exact key inside; the read itself is
     * |touched buckets| / numBuckets of the table. */
   def readBuckets(spark: SparkSession, path: String, keys: Seq[String],
                   numBuckets: Int, wanted: DataFrame): DataFrame = {
     validateBuckets(spark, path, numBuckets)
-    val buckets = withBucket(wanted.select(keys.map(col): _*), keys, numBuckets)
-      .select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted
-    spark.read.parquet(path)
-      .where(col(BucketCol).isin(buckets.map(Integer.valueOf): _*))
-      .drop(BucketCol)
+    val (_, present, schema) = locate(spark, path,
+      bucketsOf(withBucket(wanted.select(keys.map(col): _*), keys, numBuckets)))
+    scan(spark, path, schema, present).drop(BucketCol)
   }
 
   /** Write as a BUCKETED catalog table (bucketBy + sortBy on the key):
@@ -190,10 +289,14 @@ object KeyedParquetSink {
   /** Full MERGE INTO against the stored keyed table — the
     * [[graft.etl.Merge]] semantics (WHEN MATCHED UPDATE / WHEN NOT
     * MATCHED INSERT / WHEN MATCHED AND deleteCond THEN DELETE) applied
-    * bucket-pruned: only the partitions the source's keys hash into are
-    * read and rewritten, so a daily change batch — including its
-    * deletes, which are keyed rows like any other — costs
-    * |touched buckets| / numBuckets of the table, never a full rewrite. */
+    * bucket-pruned: only the bucket directories the source's keys hash
+    * into are read and rewritten, so a daily change batch — including
+    * its deletes, which are keyed rows like any other — costs
+    * |touched buckets| / numBuckets of the table, never a full rewrite.
+    * Both sides are hash-partitioned on `_bucket` and merged on
+    * (`_bucket`, keys) — the bucket is a function of the key, so the
+    * result is the same — which lets the merge window and the write
+    * share one exchange. */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
                 keys: Seq[String], numBuckets: Int,
                 updateMatched: Boolean = true,
@@ -202,42 +305,12 @@ object KeyedParquetSink {
                 versionCols: Seq[String] = Nil): Unit = {
     validateBuckets(spark, path, numBuckets)
     val up = withBucket(source, keys, numBuckets)
-    val touched = up.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted           // bounded by numBuckets
-    val base = spark.read.parquet(path)
-      .where(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.etl.Merge.merge(
-      base.drop(BucketCol),
-      up.drop(BucketCol),
-      keys, updateMatched, insertUnmatched, deleteCond, versionCols)
-    val mergedB = withBucket(merged, keys, numBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val survivors = mergedB.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet // bounded by numBuckets
-      mergedB
-        .repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-      // dynamic overwrite only replaces partitions PRESENT in the output:
-      // a touched bucket whose rows were ALL deleted writes nothing, so
-      // its stale directory would survive and resurrect the deleted keys.
-      // Drop those directories explicitly (≤ numBuckets driver-side ops).
-      val emptied = touched.filterNot(survivors)
-      if (emptied.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        emptied.foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"), true)
-        }
-        // a merge that deleted the table's last rows must leave a
-        // schema-bearing empty file, or the next read fails inference
-        if (survivors.isEmpty && !fs.listStatus(root)
-              .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-          keepEmptySchema(spark, path, base.schema)
-      }
-    } finally mergedB.unpersist()
+    rewriteBuckets(spark, path, bucketsOf(up)) { base =>
+      graft.etl.Merge.merge(
+        base.repartition(col(BucketCol)),
+        up.repartition(col(BucketCol)),
+        BucketCol +: keys, updateMatched, insertUnmatched, deleteCond, versionCols)
+    }
   }
 
   /** Row-level DELETE against a NON-unique keyed table (one the MERGE
@@ -245,56 +318,56 @@ object KeyedParquetSink {
     * shared by many rows, so a keyed merge would collapse them). Rows of
     * `victims` identify their targets by `matchCols`; victims must ALSO
     * carry the `keys` columns, which prune the rewrite — only the
-    * buckets the victims' keys hash into are read, anti-joined on
-    * `matchCols`, and dynamic-partition-overwritten, so an erasure
-    * batch costs |touched buckets| / numBuckets of the table, never a
-    * full rewrite. A bucket whose rows were ALL victims is dropped
-    * explicitly (the same resurrection blind spot mergeInto covers).
-    * Untouched bucket directories are never opened or rewritten.
-    * Idempotent: re-deleting the same victims matches nothing.
-    * Returns the number of rows removed. */
+    * bucket directories the victims' keys hash into are read,
+    * anti-joined on `matchCols`, and dynamic-partition-overwritten, so
+    * an erasure batch costs |touched buckets| / numBuckets of the table,
+    * never a full rewrite. A bucket whose rows were ALL victims is
+    * dropped explicitly (the same resurrection blind spot mergeInto
+    * covers). Untouched bucket directories are never opened or
+    * rewritten. Idempotent: re-deleting the same victims matches
+    * nothing. Returns the number of rows removed, counted as the rows
+    * read minus the rows written. */
   def deleteMatching(spark: SparkSession, path: String, keys: Seq[String],
                      numBuckets: Int, victims: DataFrame,
                      matchCols: Seq[String]): Long = {
     validateBuckets(spark, path, numBuckets)
     val vb = withBucket(victims, keys, numBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = vb.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).sorted         // bounded by numBuckets
-      if (touched.isEmpty) return 0L
-      val base = spark.read.parquet(path)
-        .where(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-      val kept = base.join(
-          vb.select(matchCols.map(col): _*).distinct(),
-          matchCols, "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val beforeN = base.count()
-        val keptN = kept.count()
-        val survivors = kept.select(BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSet         // bounded by numBuckets
-        kept.repartition(col(BucketCol))
-          .write.partitionBy(BucketCol).mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(path)
-        val emptied = touched.filterNot(survivors)
-        if (emptied.nonEmpty) {
-          val root = new org.apache.hadoop.fs.Path(path)
-          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          emptied.foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"),
-              true)
-          }
-          // an erasure that removed the table's last rows must leave a
-          // schema-bearing empty file, or the next locate pass / read
-          // fails schema inference instead of returning 0 rows
-          if (keptN == 0L && !fs.listStatus(root)
-                .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-            keepEmptySchema(spark, path, base.schema)
-        }
-        beforeN - keptN
-      } finally kept.unpersist()
-    } finally vb.unpersist()
+    val readN, keptN = org.apache.spark.sql.Observation()
+    val wrote = rewriteBuckets(spark, path, bucketsOf(vb)) { base =>
+      base.observe(readN, count(lit(1)).as("n"))
+        .join(vb.select(matchCols.map(col): _*), matchCols, "left_anti")
+        .repartition(col(BucketCol))
+        .observe(keptN, count(lit(1)).as("n"))
+    }
+    if (!wrote) 0L
+    else readN.get("n").asInstanceOf[Long] - keptN.get("n").asInstanceOf[Long]
+  }
+
+  /** The read/rewrite core of [[mergeInto]] and [[deleteMatching]]:
+    * `rewrite` turns the rows of the `touched` bucket directories that
+    * exist (with `_bucket`) into their replacement, hash-partitioned on
+    * `_bucket` so each bucket is written as one file, and that
+    * dynamic-partition-overwrites just those buckets. Dynamic overwrite
+    * only replaces partitions PRESENT in the output: a touched bucket
+    * whose rows were ALL deleted writes nothing, and its stale directory
+    * would resurrect the deleted keys. Its data file names are the ones
+    * it had before the overwrite, so it is found and deleted. Returns
+    * false, having written nothing, when no bucket is touched. */
+  private def rewriteBuckets(spark: SparkSession, path: String, touched: Seq[Int])
+                            (rewrite: DataFrame => DataFrame): Boolean = {
+    if (touched.isEmpty) return false
+    val (fs, present, schema) = locate(spark, path, touched)
+    val before = present.map(d => d -> dataFiles(fs, d))
+    rewrite(scan(spark, path, schema, present))
+      .write.partitionBy(BucketCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
+    val emptied = before.collect { case (d, files) if dataFiles(fs, d) == files => d }
+    emptied.foreach(fs.delete(_, true))
+    // a rewrite that deleted the table's last rows must leave a
+    // schema-bearing empty file, or the next read fails inference
+    if (emptied.nonEmpty && bucketDirs(fs, new Path(path)).isEmpty)
+      keepEmptySchema(spark, path, schema)
+    true
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sinks.KeyedParquetSink
 
 /** One (band, bandkey) observation of a streaming document. */
 case class BandObs(bandkey: Long, band: Int, doc_id: Long, ts: java.sql.Timestamp)
@@ -253,29 +254,43 @@ object StreamOps {
       .select(col("a_user").as("user_id"), col("a_id"), col("b_id"))
   }
 
+  /** Shared per-batch load of the keyed sinks ([[upsertSink]],
+    * [[cdcSink]], [[dispatchSink]]): every batch is MERGE INTO'd with
+    * [[graft.etl.Merge]] semantics, the first one against an empty target
+    * that it then writes as the table, so within-batch versions
+    * (`versionCols`) and deletes (`deleteCond`) resolve the same way in
+    * the bootstrap batch as in every later one. `columns` are the table's
+    * columns: the batch's, less a change marker. */
+  private def mergeBatch(batch: DataFrame, columns: Seq[String], path: String,
+                         keys: Seq[String], numBuckets: Int,
+                         versionCols: Seq[String],
+                         deleteCond: Option[Column] = None): Unit = {
+    val spark = batch.sparkSession
+    if (KeyedParquetSink.tableExists(spark, path))
+      KeyedParquetSink.mergeInto(spark, path, batch, keys, numBuckets,
+        deleteCond = deleteCond, versionCols = versionCols)
+    else {
+      val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        batch.select(columns.map(col): _*).schema)
+      KeyedParquetSink.write(graft.etl.Merge.merge(empty, batch, keys,
+          deleteCond = deleteCond, versionCols = versionCols),
+        path, keys, numBuckets)
+    }
+  }
+
   /** Continuous CDC load: every micro-batch is upserted into a keyed
     * parquet table (graft.sinks.KeyedParquetSink) — the streaming twin of
     * the reference's changelog→upsert loop, with exactly-once-per-key
     * effect because the sink merge is idempotent under re-delivery.
     * Caller starts/stops the returned query. */
-  /** Shared per-batch bootstrap: first batch creates the keyed table,
-    * later batches merge into it — both sinks must route through this so
-    * the bootstrap semantics can't diverge. */
-  private def upsertBatch(df: DataFrame, path: String, keys: Seq[String],
-                          numBuckets: Int, versionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    if (!graft.sinks.KeyedParquetSink.tableExists(spark, path))
-      graft.sinks.KeyedParquetSink.write(df, path, keys, numBuckets)
-    else graft.sinks.KeyedParquetSink.upsert(spark, path, df, keys, numBuckets, versionCols)
-  }
-
   def upsertSink(events: DataFrame, path: String, keys: Seq[String],
                  numBuckets: Int, checkpoint: String,
                  versionCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        upsertBatch(batch.toDF(), path, keys, numBuckets, versionCols)
+        val b = batch.toDF()
+        mergeBatch(b, b.columns.toSeq, path, keys, numBuckets, versionCols)
       }
       .start()
 
@@ -346,9 +361,10 @@ object StreamOps {
     * insert/update/delete) is MERGE INTO'd against the stored keyed
     * table via KeyedParquetSink.mergeInto, so deletes remove their keys
     * from exactly the buckets they hash into (never a full rewrite).
-    * First batch bootstraps the table from its non-delete rows. Within
-    * a batch, `versionCols` descending pick the winner among multiple
-    * changes for one key; re-delivery of a batch is idempotent (a
+    * The first batch is merged into an empty table, so its deletes and
+    * repeated keys resolve like any later batch's. Within a batch,
+    * `versionCols` descending pick the winner among multiple changes for
+    * one key; re-delivery of a batch is idempotent (a
     * replayed delete of an absent key is a no-op, a replayed upsert
     * rewrites the same values), which is what makes the checkpoint
     * replay after a crash exactly-once in effect. */
@@ -360,15 +376,8 @@ object StreamOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()
-        val spark = b.sparkSession
-        if (!graft.sinks.KeyedParquetSink.tableExists(spark, path))
-          graft.sinks.KeyedParquetSink.write(
-            b.where(col(changeCol) =!= "delete").drop(changeCol),
-            path, keys, numBuckets)
-        else
-          graft.sinks.KeyedParquetSink.mergeInto(spark, path, b, keys,
-            numBuckets, deleteCond = Some(col(changeCol) === "delete"),
-            versionCols = versionCols)
+        mergeBatch(b, b.columns.toSeq.filterNot(_ == changeCol), path, keys,
+          numBuckets, versionCols, Some(col(changeCol) === "delete"))
       }
       .start()
 
@@ -395,7 +404,7 @@ object StreamOps {
         try entities.foreach { case (entity, (path, keys, numBuckets)) =>
           val part = b.where(col(tableCol) === entity).drop(tableCol)
           if (!part.isEmpty)
-            upsertBatch(part, path, keys, numBuckets, versionCols)
+            mergeBatch(part, part.columns.toSeq, path, keys, numBuckets, versionCols)
         } finally b.unpersist()
       }
       .start()

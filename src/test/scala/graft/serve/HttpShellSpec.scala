@@ -83,6 +83,21 @@ class HttpShellSpec extends AnyFunSuite {
     } finally shell.stop()
   }
 
+  test("a restarted shell continues the stored run ids instead of reusing run 1") {
+    val history = java.nio.file.Files.createTempDirectory("graft_shell_hist")
+      .toString + "/runs"
+    val one = Seq(Runner.Stage("one", sp => sp.range(3).toDF()))
+    for (_ <- 1 to 2) {
+      val shell = new HttpShell(spark, one, historyPath = Some(history))
+      val port = shell.start()
+      try assert(post(port, "/api/start-etl-force").statusCode() == 200)
+      finally shell.stop()
+    }
+    val ids = Runner.runHistory(spark, history).select("run_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 2L))
+  }
+
   test("scheduler lifecycle: invalid cron 400, start 200, double-start " +
     "400, stop 200, stop-again 400") {
     val shell = new HttpShell(spark, stages)

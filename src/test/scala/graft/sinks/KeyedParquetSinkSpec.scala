@@ -10,6 +10,131 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Spark jobs `body` runs, counted under a job group of its own (AQE
+    * stage jobs inherit it). The listener bus is asynchronous: every job
+    * of `body` has ended when it returns, so the count is read once each
+    * start seen has its end and nothing more arrives. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"sink-spec-${java.util.UUID.randomUUID}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          ids.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (ids.contains(e.jobId)) ended.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "sink job count")
+      try body finally sc.clearJobGroup()
+      var stable = 0
+      var last = -1
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (stable < 5 && System.nanoTime() < deadline) {
+        Thread.sleep(20)
+        val n = ids.size
+        stable = if (n == last && n == ended.get) stable + 1 else 0
+        last = n
+      }
+      ids.size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Bucket of a single-column key, the writer's hash. */
+  private def bucketOf(ids: Seq[Long], numBuckets: Int): Map[Long, Int] =
+    ids.toDF("id")
+      .select($"id", pmod(xxhash64(concat_ws("\u0000", $"id")), lit(numBuckets)).cast("int"))
+      .as[(Long, Int)].collect().toMap
+
+  private def bucketDirs(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.startsWith("_bucket=")).toSet
+
+  test("mergeInto on a 16-bucket table runs at most 3 Spark jobs (4 from a non-local frame)") {
+    val dir = Files.createTempDirectory("graft_sink_jobs").toString + "/t"
+    KeyedParquetSink.write((1L to 200L).map(i => (i, s"n$i")).toDF("id", "name"),
+      dir, Seq("id"), numBuckets = 16)
+    val updates = (190L to 210L).map(i => (i, s"u$i")).toDF("id", "name")
+    val jobs = jobsOf(KeyedParquetSink.mergeInto(spark, dir, updates, Seq("id"), 16))
+    assert(jobs <= 3, s"$jobs jobs")
+    // touched buckets of a frame not on the driver: one more job, no shuffle
+    val more = (205L to 220L).map(i => (i, s"v$i")).toDF("id", "name").localCheckpoint(true)
+    val jobs2 = jobsOf(KeyedParquetSink.mergeInto(spark, dir, more, Seq("id"), 16))
+    assert(jobs2 <= 4, s"$jobs2 jobs")
+    val got = KeyedParquetSink.read(spark, dir).as[(Long, String)].collect().toMap
+    assert(got.size == 220 && got(189L) == "n189" && got(190L) == "u190" &&
+      got(204L) == "u204" && got(210L) == "v210" && got(220L) == "v220")
+    // one file per bucket, as the initial write left it
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("_bucket=")).foreach { d =>
+      assert(d.list().count(_.endsWith(".parquet")) == 1, d.getName)
+    }
+  }
+
+  test("readBuckets: a point read is one job, under the table's own schema") {
+    val dir = Files.createTempDirectory("graft_sink_read").toString + "/t"
+    val rows = (1L to 100L).map(i => (i, s"n$i", i * 0.5, i % 2 == 0))
+    KeyedParquetSink.write(rows.toDF("id", "name", "v", "even"), dir, Seq("id"), 64)
+    val wanted = Seq(Tuple1(42L)).toDF("id")
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf {
+      got = KeyedParquetSink.readBuckets(spark, dir, Seq("id"), 64, wanted)
+        .where($"id" === 42L).collect().toSeq
+    }
+    assert(jobs == 1, s"$jobs jobs")
+    assert(got.map(r => (r.getLong(0), r.getString(1))) == Seq((42L, "n42")))
+    assert(KeyedParquetSink.readBuckets(spark, dir, Seq("id"), 64, wanted).schema ==
+      spark.read.parquet(dir).drop("_bucket").schema)
+  }
+
+  test("one merge empties a touched bucket, keeps another, creates a third") {
+    val dir = Files.createTempDirectory("graft_sink_dirs").toString + "/t"
+    val byBucket = bucketOf(1L to 64L, 8).toSeq.groupBy(_._2).view
+      .mapValues(_.map(_._1).sorted).toMap
+    val Seq(emptied, kept, created) = byBucket.keys.toSeq.sorted.take(3)
+    val a = byBucket(emptied).head
+    val Seq(b1, b2) = byBucket(kept).take(2)
+    val c = byBucket(created).head
+    KeyedParquetSink.write(Seq((a, "a"), (b1, "b1"), (b2, "b2")).toDF("id", "name"),
+      dir, Seq("id"), 8)
+    assert(bucketDirs(dir) == Set(s"_bucket=$emptied", s"_bucket=$kept"))
+    val changes = Seq((a, "a", "delete"), (b1, "b1x", "update"), (c, "c", "insert"))
+      .toDF("id", "name", "change")
+    KeyedParquetSink.mergeInto(spark, dir, changes, Seq("id"), 8,
+      deleteCond = Some($"change" === "delete"))
+    assert(bucketDirs(dir) == Set(s"_bucket=$kept", s"_bucket=$created"))
+    def rows() = KeyedParquetSink.read(spark, dir).as[(Long, String)].collect().toSet
+    assert(rows() == Set((b1, "b1x"), (b2, "b2"), (c, "c")))
+    // a later merge into the emptied bucket's neighbours never brings `a` back
+    KeyedParquetSink.upsert(spark, dir, Seq((b2, "b2x")).toDF("id", "name"), Seq("id"), 8)
+    assert(rows() == Set((b1, "b1x"), (b2, "b2x"), (c, "c")))
+  }
+
+  test("a junk file in an untouched bucket directory is never opened") {
+    val dir = Files.createTempDirectory("graft_sink_junk").toString + "/t"
+    val ids = 1L to 64L
+    val bucket = bucketOf(ids, 8)
+    KeyedParquetSink.write(ids.map(i => (i, s"n$i")).toDF("id", "name"), dir, Seq("id"), 8)
+    val Seq(junkB, mergeB, deleteB, readB) = (0 until 8).take(4)
+    def key(b: Int, nth: Int) = ids.filter(bucket(_) == b)(nth)
+    Files.write(java.nio.file.Paths.get(dir, s"_bucket=$junkB", "junk.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    // a scan of the whole table does open it
+    intercept[Exception](KeyedParquetSink.read(spark, dir).collect())
+
+    KeyedParquetSink.mergeInto(spark, dir, Seq((key(mergeB, 0), "m")).toDF("id", "name"),
+      Seq("id"), 8)
+    assert(KeyedParquetSink.deleteMatching(spark, dir, Seq("id"), 8,
+      Seq(Tuple1(key(deleteB, 0))).toDF("id"), Seq("id")) == 1L)
+    val read = KeyedParquetSink.readBuckets(spark, dir, Seq("id"), 8,
+        Seq(key(mergeB, 0), key(readB, 0)).toDF("id"))
+      .as[(Long, String)].collect().toMap
+    assert(read(key(mergeB, 0)) == "m" && read(key(readB, 0)) == s"n${key(readB, 0)}")
+    assert(!read.contains(key(deleteB, 0)))
+    assert(Files.exists(java.nio.file.Paths.get(dir, s"_bucket=$junkB", "junk.parquet")))
+  }
+
   test("upsert rewrites only touched buckets and merges last-write-wins") {
     val dir = Files.createTempDirectory("graft_sink").toString + "/table"
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0), (4L, "d", 40.0))

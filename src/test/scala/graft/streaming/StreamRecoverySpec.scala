@@ -145,6 +145,42 @@ class StreamRecoverySpec extends AnyFunSuite {
     assert(got == Set((1L, "a1", 11.0), (3L, "c", 3.0)))
   }
 
+  test("keyed sinks bootstrap with merge semantics: in-batch versions and deletes resolve") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val root = tempDir("bootstrap")
+    // cdcSink: the FIRST batch holds two versions of k1 and an upsert of
+    // k2 followed by a newer delete of k2
+    val changes = MemoryStream[(Long, Long, String, String)]
+    val cdc = StreamOps.cdcSink(changes.toDF().toDF("k", "ver", "payload", "change"),
+      s"$root/cdc", Seq("k"), 4, s"$root/cdc_ckpt", versionCols = Seq("ver"))
+    changes.addData((1L, 1L, "a1", "upsert"), (1L, 2L, "a2", "upsert"),
+      (2L, 1L, "b1", "upsert"), (2L, 2L, "b2", "delete"))
+    cdc.processAllAvailable(); cdc.stop()
+    assert(graft.sinks.KeyedParquetSink.read(spark, s"$root/cdc")
+      .as[(Long, Long, String)].collect().toSeq == Seq((1L, 2L, "a2")))
+    // a first batch that deletes every key it carries leaves an empty
+    // table the next batch merges into
+    val gone = MemoryStream[(Long, Long, String, String)]
+    val cdc2 = StreamOps.cdcSink(gone.toDF().toDF("k", "ver", "payload", "change"),
+      s"$root/cdc2", Seq("k"), 4, s"$root/cdc2_ckpt", versionCols = Seq("ver"))
+    gone.addData((1L, 1L, "a1", "delete"))
+    cdc2.processAllAvailable()
+    gone.addData((2L, 1L, "b1", "upsert"))
+    cdc2.processAllAvailable(); cdc2.stop()
+    assert(graft.sinks.KeyedParquetSink.read(spark, s"$root/cdc2")
+      .as[(Long, Long, String)].collect().toSeq == Seq((2L, 1L, "b1")))
+    // upsertSink: two versions of one key in the first batch keep one row
+    val ups = MemoryStream[(Long, Long, String)]
+    val up = StreamOps.upsertSink(ups.toDF().toDF("k", "ver", "payload"),
+      s"$root/up", Seq("k"), 4, s"$root/up_ckpt", versionCols = Seq("ver"))
+    ups.addData((1L, 2L, "a2"), (1L, 1L, "a1"))
+    up.processAllAvailable(); up.stop()
+    assert(graft.sinks.KeyedParquetSink.read(spark, s"$root/up")
+      .as[(Long, Long, String)].collect().toSeq == Seq((1L, 2L, "a2")))
+  }
+
   test("asofStream: PIT state survives a crash; replayed batch stays exactly-once") {
     import spark.implicits._
     val root = tempDir("recover-asof")
