@@ -1,32 +1,22 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main (driver contract): runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
   *
   * Methodology: each query is fully materialized through the `noop` DSv2
   * sink — `count()` would let Catalyst prune projections/sorts and
-  * under-report compute-heavy queries. Every query runs TWICE — one full
-  * ASCENDING sweep (cold: absorbs first-touch JIT/codegen compilation
-  * and page-cache warming; observed 10-50× inflation on the first
-  * toucher of a kernel, 62 s vs 5.3 s steady for graph_pagerank in the
-  * round-9 audit) and then one full DESCENDING sweep, which is the
-  * record. Two full sweeps instead of per-query back-to-back pairs
-  * (round 17): the recorded sweep starts with a registry-warm JVM, so
-  * the alphabetical head no longer reads young-JVM warmup as that
-  * query's cost (the recurring driver-bench "fresh weak cluster" at the
-  * head of BENCH_r14-r16), and a transient box-noise window can't
-  * inflate both sweeps' reading of the same query. Steady-state is the
-  * number that predicts cluster throughput, where code is JIT-hot and
-  * data is resident; the cold total is still recorded in
-  * bench_latest.json (`cold_value`). An untimed session warm-up absorbs
-  * init so it isn't charged to the first query; the SHARED-FRAME builds
-  * are timed (`shared_warmup_sec`, round-17 verdict) and counted into
-  * `value`. The session is the
-  * tuned GraftSession (AQE, shuffle=cpus). The stdout line also carries
-  * `job_flags` — per-query Spark-job counts checked against the
-  * committed caps (tools/bench_jobs_ref.json): a time blowup with
-  * job_flags=0 is box noise, not a plan change (the round-16
-  * adjudication discriminator, now in the driver-visible artifact).
+  * under-report compute-heavy queries — in the two sweeps of
+  * [[Bench.sweep]]. The DESCENDING sweep is the record: steady state
+  * (code JIT-hot, data resident) predicts cluster throughput; the cold
+  * total is still recorded in bench_latest.json (`cold_value`). The
+  * SHARED-FRAME builds are timed (`shared_warmup_sec`, round-17 verdict)
+  * and counted into `value`. The session is the tuned GraftSession (AQE,
+  * shuffle=cpus). The stdout line also carries `job_flags` — per-query
+  * Spark-job counts checked against the committed caps
+  * (tools/bench_jobs_ref.json): a time blowup with job_flags=0 is box
+  * noise, not a plan change (the round-16 adjudication discriminator).
   * A query or shared-frame build that throws is never timed: its name
   * goes to the `failed` list of both outputs and Bench exits 1.
   */
@@ -38,7 +28,7 @@ object Bench {
     * so the amortized per-query numbers are backed by a paid, visible
     * one-time cost — and the tags of the builds that failed (each also
     * logged to stderr). */
-  def timeSharedWarmup(spark: org.apache.spark.sql.SparkSession,
+  def timeSharedWarmup(spark: SparkSession,
                        sfDir: String): (Double, Seq[String]) = {
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def warm(tag: String)(f: => Unit): Unit = {
@@ -106,6 +96,96 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, failed.toArray(Array.empty[String]).toSeq)
   }
 
+  /** One query's two runs, seconds and Spark jobs: cold ascending, warm descending. */
+  final case class Timing(cold: Double, warm: Double, coldJobs: Long, warmJobs: Long)
+
+  /** What [[sweep]] measured. `timings` holds only the queries that ran
+    * in both sweeps; `failed` names the queries that threw (in either)
+    * and `warmupFailed` the shared-frame builds that threw. */
+  final case class Sweep(sharedWarmupSec: Double, warmupFailed: Seq[String],
+                         timings: Map[String, Timing], failed: Seq[String])
+
+  private def materialize(spark: SparkSession, sfDir: String,
+                          q: graft.queries.Q): Unit = {
+    q(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // Drop dead checkpoint blocks from the finished query so the next
+    // one starts with free storage memory (see graft.Caches).
+    Caches.sweep(spark)
+  }
+
+  /** Untimed session warm-up (a scan+agg and a join query: pure
+    * session/JIT init, no frame survives into a timed query), then the
+    * timed [[timeSharedWarmup]]: (build seconds, failed build tags). */
+  def warmUp(spark: SparkSession, sfDir: String): (Double, Seq[String]) = {
+    try Seq("q_topk", "q3_join_agg")
+      .foreach(n => materialize(spark, sfDir, SparkEntry.queries(n)))
+    catch {
+      case t: Throwable =>
+        System.err.println(s"[bench] session warmup failed: ${t.getMessage}")
+    }
+    timeSharedWarmup(spark, sfDir)
+  }
+
+  /** The registry sweep of both benchmark mains (Bench records it,
+    * BenchCheck gates it): `prepare` (the [[warmUp]]), then every query
+    * in `names` twice: one full ASCENDING sweep (cold: absorbs
+    * first-touch JIT/codegen and page-cache warming, observed 10-50× on
+    * the first toucher of a kernel), then one full DESCENDING sweep. By
+    * then the JVM has executed the whole registry once, so the
+    * alphabetical head does not pay young-JVM warmup, and a rotating
+    * box-noise window can't inflate both readings of the same query. Each run is timed around its
+    * materialization plus `inject` (BenchCheck's self-test hooks), and
+    * its Spark jobs are counted. */
+  def sweep(spark: SparkSession, sfDir: String, names: Seq[String],
+            queries: Map[String, graft.queries.Q] = SparkEntry.queries,
+            inject: String => Unit = _ => (),
+            prepare: (SparkSession, String) => (Double, Seq[String]) = warmUp)
+      : Sweep = {
+    val (sharedWarmupSec, warmupFailed) = prepare(spark, sfDir)
+    val jobsNow = jobCounter(spark)
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timed(name: String): (Double, Long) = {
+      val j0 = jobsNow()
+      val t0 = System.nanoTime()
+      try { materialize(spark, sfDir, queries(name)); inject(name) } catch {
+        case t: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: " +
+            s"${t.getClass.getSimpleName}: ${t.getMessage}")
+      }
+      ((System.nanoTime() - t0) / 1e9, jobsNow() - j0)
+    }
+    val cold = names.map(name => name -> timed(name)).toMap
+    val warm = names.reverse.map(name => name -> timed(name)).toMap
+    val timings = names.filterNot(failed).map(name =>
+      name -> Timing(cold(name)._1, warm(name)._1, cold(name)._2, warm(name)._2)).toMap
+    Sweep(sharedWarmupSec, warmupFailed, timings, failed.toSeq)
+  }
+
+  /** Count the Spark jobs started on `spark` from now on (the structural
+    * gate — see BenchGuard.checkJobs). The listener bus is async, so the
+    * returned reader waits until the count is stable: job counts then
+    * cannot be attributed to the wrong query. */
+  private def jobCounter(spark: SparkSession): () => Long = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      })
+    () => {
+      var prev = -1L
+      var cur = jobs.get()
+      var spins = 0
+      while (cur != prev && spins < 200) {
+        Thread.sleep(10); prev = cur; cur = jobs.get(); spins += 1
+      }
+      cur
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the harness box is 32-core and the driver contract is local[32];
@@ -114,67 +194,20 @@ object Bench {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def materialize(name: String): Unit = {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // Drop dead checkpoint blocks from the finished query so the next
-      // one starts with free storage memory (see graft.Caches).
-      Caches.sweep(spark)
-    }
-
-    // warm-up: a scan+agg and a join query, untimed — pure session/JIT
-    // init, no frame survives into any timed query.
-    try { materialize("q_topk"); materialize("q3_join_agg") }
-    catch {
-      case t: Throwable =>
-        System.err.println(s"[bench] session warmup failed: ${t.getMessage}")
-    }
-    // Shared-frame builds: per-(session, sfDir) intermediates reused
-    // by ~90 consumer queries. The builds are TIMED and their sum
-    // rides the stdout JSON as `shared_warmup_sec`, COUNTED INTO `value`
-    // (round-17 verdict: no per-query number may exist that nobody pays —
-    // the per-query seconds stay amortized reads, but the one-time build
-    // cost is now inside the reported total, exactly once, which is what
-    // a registry-serving deployment pays).
-    val (sharedWarmupSec, warmFailed) = Bench.timeSharedWarmup(spark, sfDir)
-    val failed = scala.collection.mutable.LinkedHashSet.from(warmFailed)
-
-    // per-query Spark-job counter (same structural signal BenchCheck
-    // gates; recorded here so the driver artifact carries it too)
-    val jobsNow = BenchCheck.jobCounter(spark)
-
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      try materialize(name) catch {
-        case t: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name failed: " +
-            s"${t.getClass.getSimpleName}: ${t.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Sweep 1 (ascending) warms: JIT, codegen cache, OS page cache.
-    // Sweep 2 — the RECORD — runs in REVERSE registry order: by the time
-    // it starts the JVM has executed the whole registry once, so the
-    // alphabetical head no longer pays young-JVM warmup (the recurring
-    // driver-bench "fresh weak cluster" at the head of the run), and a
-    // rotating box-noise window can't inflate both sweeps' reading of
-    // the same query.
+    // the warm sweep is the record; its per-query Spark-job counts (the
+    // structural signal BenchCheck gates) ride the driver artifact too
     val allNames = SparkEntry.queries.keys.toSeq.sorted
-    val coldByName = allNames.map(name => name -> timed(name)).toMap
-    val warmPairs = allNames.reverse.map { name =>
-      val j0 = jobsNow()
-      val warm = timed(name)
-      name -> (warm, jobsNow() - j0)
-    }.toMap
+    val run = sweep(spark, sfDir, allNames)
+    val failed = run.warmupFailed ++ run.failed
     // a query that failed in either sweep has no time
-    val names = allNames.filterNot(failed)
-    val results = names.map(n => n -> warmPairs(n)._1)
-    val coldTotal = names.map(coldByName).sum
+    val names = allNames.filter(run.timings.contains)
+    val results = names.map(n => n -> run.timings(n).warm)
+    val coldTotal = names.map(run.timings(_).cold).sum
     // the one-time shared-frame build cost is part of what a user pays to
-    // serve the registry once — count it into the reported total
-    val total = results.map(_._2).sum + sharedWarmupSec
-    val jobs = names.map(n => n -> warmPairs(n)._2)
+    // serve the registry once (round-17 verdict: no per-query number may
+    // exist that nobody pays) — count it into the reported total
+    val total = results.map(_._2).sum + run.sharedWarmupSec
+    val jobs = names.map(n => n -> run.timings(n).warmJobs)
 
     // driver-visible structural summary: job counts at-or-under their
     // committed caps discriminate box noise from plan regressions
@@ -193,7 +226,7 @@ object Bench {
     // included in `value`)
     val flagsJson =
       failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]") +
-      f""","shared_warmup_sec":$sharedWarmupSec%.3f""" +
+      f""","shared_warmup_sec":${run.sharedWarmupSec}%.3f""" +
       s""","job_flags":${jobFlagged.size}""" +
       (if (jobFlagged.nonEmpty)
         jobFlagged.take(20).map("\"" + _ + "\"")

@@ -123,9 +123,9 @@ object BenchGuard {
     Files.writeString(Paths.get(path), render(m))
 }
 
-/** The bench regression gate: two-run steady-state timing of every
-  * registered query against the committed reference, red on anything
-  * outside the noise band.
+/** The bench regression gate: the two sweeps of [[Bench.sweep]] timed
+  * against the committed reference, red on anything outside the noise
+  * band and on any query or shared-frame build that throws.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.BenchCheck"                 # check vs ref
@@ -143,28 +143,33 @@ object BenchCheck {
   val RefPath = "tools/bench_ref.json"
   val JobsRefPath = "tools/bench_jobs_ref.json"
 
-  /** Count the Spark jobs started on `spark` from now on (the structural
-    * gate — see BenchGuard.checkJobs). The listener bus is async, so the
-    * returned reader waits until the count is stable: job counts then
-    * cannot be attributed to the wrong query. */
-  def jobCounter(spark: org.apache.spark.sql.SparkSession): () => Long = {
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
-    () => {
-      var prev = -1L
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != prev && spins < 200) {
-        Thread.sleep(10); prev = cur; cur = jobs.get(); spins += 1
-      }
-      cur
-    }
+  /** The gate's verdict on one sweep: the best-of-2 seconds against the
+    * time reference, the best-of-2 job counts against the caps, and every
+    * shared-frame build or query that threw. */
+  def violations(run: Bench.Sweep, ref: Map[String, Double],
+                 jobsRef: Map[String, Double]): Seq[BenchGuard.Violation] = {
+    val (times, jobs) = best(run)
+    BenchGuard.check(times, ref) ++ BenchGuard.checkJobs(jobs, jobsRef) ++
+      failures(run)
+  }
+
+  private def failures(run: Bench.Sweep): Seq[BenchGuard.Violation] =
+    run.warmupFailed.map(BenchGuard.Violation(_, "shared-frame warmup failed")) ++
+      run.failed.map(BenchGuard.Violation(_, "query failed"))
+
+  /** Best-of-2 on BOTH axes, (seconds, jobs) per timed query: robust to
+    * single-run tail jitter / AQE variance, still red on a real
+    * regression, which inflates both sweeps (the injection hooks prove
+    * the red path). */
+  private def best(run: Bench.Sweep)
+      : (Map[String, Double], Map[String, Double]) =
+    (run.timings.map { case (q, t) => q -> math.min(t.cold, t.warm) },
+      run.timings.map { case (q, t) =>
+        q -> math.min(t.coldJobs, t.warmJobs).toDouble })
+
+  private def fail(vs: Seq[BenchGuard.Violation]): Nothing = {
+    vs.foreach(v => println(s"BENCHCHECK FAIL ${v.name}: ${v.msg}"))
+    sys.exit(1)
   }
 
   def main(args: Array[String]): Unit = {
@@ -175,7 +180,6 @@ object BenchCheck {
     // (re)captured any time the REGISTRY changes, while the TIME anchors
     // stay untouched until the quiet-box lock protocol re-anchors both
     val writeJobs = args.contains("--write-jobs")
-    val names0 = args.filterNot(_.startsWith("--")).toSeq
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val ref =
@@ -187,65 +191,32 @@ object BenchCheck {
       else Map.empty[String, Double]
     val injectSlow = sys.env.get("SPARK_GRAFT_INJECT_SLOW")
     val injectJobs = sys.env.get("SPARK_GRAFT_INJECT_JOBS")
-    val names =
-      if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted
+    val named = args.filterNot(_.startsWith("--")).toSeq
+    val names = if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
 
-    val jobsNow = jobCounter(spark)
-
-    // same warm-up discipline as graft.Bench: absorb session init and the
-    // shared pair index so run1 of the first family member isn't charged
-    def materialize(q: String): Unit = {
-      SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      Caches.sweep(spark)
-    }
-    try { materialize("q_topk"); materialize("q3_join_agg") }
-    catch {
-      case t: Throwable =>
-        System.err.println(s"[benchcheck] session warmup failed: ${t.getMessage}")
-    }
-    // shared-frame builds, timed and surfaced (round-17 verdict: the
-    // warm block's cost must be visible — graft.Bench counts it into its
-    // stdout `value`; here it is printed for the lock-protocol record)
-    val (sharedWarmupSec, warmFailed) = Bench.timeSharedWarmup(spark, dir)
-    println(f"BENCHCHECK shared_warmup_sec=$sharedWarmupSec%.2f")
-
-    def timedOnce(q: String): (Double, Long) = {
-      val j0 = jobsNow()
-      val t0 = System.nanoTime()
-      materialize(q)
+    val run = Bench.sweep(spark, dir, names, inject = q => {
       if (injectJobs.contains(q))
         (1 to 8).foreach(_ => spark.range(1).count())
       if (injectSlow.contains(q))
         Thread.sleep((ref.getOrElse(q, 1.0) * 1000).toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      (dt, jobsNow() - j0)
-    }
-    // Two FULL sweeps, the second in REVERSE registry order (round 17):
-    // a transient box-noise window sits over DIFFERENT queries in each
-    // sweep, so it can never inflate both measurements of the same
-    // query — best-of-2 then discards it — while a real regression
-    // still inflates both sweeps (the injection hooks prove the red
-    // path). The reversed second sweep also starts registry-warm, so
-    // the alphabetical head isn't charged young-JVM warmup.
-    val sweep1 = names.map(q => q -> timedOnce(q)).toMap
-    val sweep2 = names.reverse.map(q => q -> timedOnce(q)).toMap
-    val measured = names.map { q =>
-      val (cold, jCold) = sweep1(q)
-      val (warm, jWarm) = sweep2(q)
-      println(f"TIMING $q $cold%.2f $warm%.2f jobs $jCold $jWarm")
-      // best-of-2 on BOTH axes: robust to single-run tail jitter / AQE
-      // variance, still red on a real regression
-      q -> (math.min(cold, warm), math.min(jCold, jWarm).toDouble)
-    }.toMap
+    })
     spark.stop()
-    val run2 = measured.map { case (q, (t, _)) => q -> t }
-    val runJobs = measured.map { case (q, (_, j)) => q -> j }
+    // the warm block's cost, visible (round-17 verdict): Bench counts it
+    // into its `value`; here it is printed for the lock-protocol record
+    println(f"BENCHCHECK shared_warmup_sec=${run.sharedWarmupSec}%.2f")
+    names.filter(run.timings.contains).foreach { q =>
+      val t = run.timings(q)
+      println(f"TIMING $q ${t.cold}%.2f ${t.warm}%.2f " +
+        s"jobs ${t.coldJobs} ${t.warmJobs}")
+    }
+    val (runTimes, runJobs) = best(run)
 
+    // a reference must not silently lack a query that threw
+    if ((writeRef || writeJobs) && run.failed.nonEmpty) fail(failures(run))
     if (writeRef) {
-      BenchGuard.write(RefPath, run2)
+      BenchGuard.write(RefPath, runTimes)
       BenchGuard.write(JobsRefPath, runJobs)
-      println(s"BENCHCHECK wrote ${run2.size} reference entries to " +
+      println(s"BENCHCHECK wrote ${runTimes.size} reference entries to " +
         s"$RefPath + $JobsRefPath")
     } else if (writeJobs) {
       // merge: a subset run refreshes only the named queries' caps
@@ -254,18 +225,12 @@ object BenchCheck {
       println(s"BENCHCHECK wrote ${runJobs.size} job-count entries " +
         s"(${merged.size} total) to $JobsRefPath")
     } else {
-      val violations = BenchGuard.check(run2, ref) ++
-        BenchGuard.checkJobs(runJobs, jobsRef) ++
-        warmFailed.map(BenchGuard.Violation(_, "shared-frame warmup failed"))
-      if (violations.isEmpty) {
-        val covered = run2.keysIterator.count(ref.contains)
-        println(s"BENCHCHECK PASS ${run2.size} queries " +
-          s"($covered vs ref, ${run2.size - covered} new under ceiling; " +
-          s"job counts vs ${jobsRef.size} caps)")
-      } else {
-        violations.foreach(v => println(s"BENCHCHECK FAIL ${v.name}: ${v.msg}"))
-        sys.exit(1)
-      }
+      val vs = violations(run, ref, jobsRef)
+      if (vs.nonEmpty) fail(vs)
+      val covered = runTimes.keysIterator.count(ref.contains)
+      println(s"BENCHCHECK PASS ${runTimes.size} queries " +
+        s"($covered vs ref, ${runTimes.size - covered} new under ceiling; " +
+        s"job counts vs ${jobsRef.size} caps)")
     }
   }
 }

@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.atomic.AtomicReference
+import java.time.LocalDateTime
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 /** Pipeline runner — the reference's orchestration surface
   * (index.js:46-355: start/force-run/status, etlService.js:416-591:
@@ -71,80 +72,72 @@ object Runner {
   def runHistory(spark: SparkSession, path: String): DataFrame =
     graft.sinks.KeyedParquetSink.read(spark, path)
 
-  /** Cooperative stop (index.js stop endpoint): the current run finishes
-    * its in-flight stage, skips the rest, and scheduled loops exit. */
-  private val stopFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
-  def requestStop(): Unit = stopFlag.set(true)
-  def clearStop(): Unit = stopFlag.set(false)
-  def stopRequested: Boolean = stopFlag.get()
+  /** Validate a 5-field cron pattern (index.js:30-37): Left = the parse
+    * error, or for a parse-valid pattern that never fires (e.g.
+    * "0 0 30 2 *") the error of one probe made up front, so the error
+    * channel fires BEFORE any work runs — and an IllegalArgumentException
+    * thrown later from run()/Spark internals propagates instead of being
+    * misreported as a cron error. */
+  private[graft] def cron(
+      cronExpr: String,
+      now: LocalDateTime = LocalDateTime.now()): Either[String, Cron] =
+    Cron.parse(cronExpr).flatMap { c =>
+      try { c.next(now); Right(c) }
+      catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    }
 
-  /** Fixed-interval repeated runs — the reference's cron loop
-    * (index.js:75-86, node-cron schedule + force-run). Executes the
-    * pipeline `iterations` times, sleeping `intervalMs` between run
-    * STARTS (a run longer than the interval starts the next immediately,
-    * like an overrunning cron with no overlap). Returns every report.
-    * Production deployments would drive this from a real scheduler or a
-    * streaming trigger; the loop gives the library the same
-    * self-contained surface the reference exposes. */
-  def runScheduled(spark: SparkSession, stages: Seq[Stage], intervalMs: Long,
-                   iterations: Int, retries: Int = 3): Seq[RunReport] = {
-    val reports = Seq.newBuilder[RunReport]
+  /** The cron loop (index.js:75-86, node-cron schedule): at each of the
+    * next `iterations` fire times of `cron`, unless `stop` is set, call
+    * `fire`. Cooperative stop (index.js stop endpoint): `stop` belongs to
+    * the caller that started the loop — setting it ends the loop, and a
+    * run given the same flag finishes its in-flight stage and skips the
+    * rest. `now`/`sleep` are injectable so fire-time behavior is testable
+    * without wall-clock waits. [[runCron]] and HttpShell's scheduler both
+    * run this loop. */
+  private[graft] def cronLoop(
+      cron: Cron, iterations: Int, stop: AtomicBoolean,
+      now: () => LocalDateTime = () => LocalDateTime.now(),
+      sleep: Long => Unit = Thread.sleep)(fire: => Unit): Unit = {
     var i = 0
-    while (i < iterations && !stopFlag.get()) {
-      val t0 = System.currentTimeMillis()
-      reports += run(spark, stages, retries)
-      if (i < iterations - 1 && !stopFlag.get()) {
-        val wait = intervalMs - (System.currentTimeMillis() - t0)
-        if (wait > 0) Thread.sleep(wait)
-      }
+    while (i < iterations && !stop.get()) {
+      val t = now()
+      val waitMs = java.time.Duration.between(t, cron.next(t)).toMillis
+      if (waitMs > 0) sleep(waitMs)
+      if (!stop.get()) fire
       i += 1
     }
-    reports.result()
   }
 
   /** Cron-scheduled repeated runs — parity with the reference's node-cron
-    * surface (index.js:30-37 validate, 75-86 schedule). Validates the
-    * 5-field pattern first (Left = the validation error, the analog of
-    * the reference's 400 response), then executes the pipeline at each of
-    * the next `iterations` fire times. `now`/`sleep` are injectable so
-    * fire-time behavior is testable without wall-clock waits. */
+    * surface: validates the pattern first (Left = the validation error,
+    * the analog of the reference's 400 response), then executes the
+    * pipeline at each of the next `iterations` fire times and returns
+    * every report. */
   def runCron(spark: SparkSession, stages: Seq[Stage], cronExpr: String,
               iterations: Int, retries: Int = 3,
-              now: () => java.time.LocalDateTime = () => java.time.LocalDateTime.now(),
-              sleep: Long => Unit = Thread.sleep): Either[String, Seq[RunReport]] =
-    Cron.parse(cronExpr).flatMap { cron =>
-      // parse-valid but unsatisfiable (e.g. "0 0 30 2 *"): probe once up
-      // front so the documented error channel fires BEFORE any work runs —
-      // and so an IllegalArgumentException thrown later from run()/Spark
-      // internals propagates instead of being misreported as cron error
-      val sat = try { cron.next(now()); None }
-                catch { case e: IllegalArgumentException => Some(e.getMessage) }
-      sat match {
-        case Some(err) => Left(err)
-        case None =>
-          val reports = Seq.newBuilder[RunReport]
-          var i = 0
-          while (i < iterations && !stopFlag.get()) {
-            val t = now()
-            val waitMs = java.time.Duration.between(t, cron.next(t)).toMillis
-            if (waitMs > 0) sleep(waitMs)
-            if (!stopFlag.get()) reports += run(spark, stages, retries)
-            i += 1
-          }
-          Right(reports.result())
+              now: () => LocalDateTime = () => LocalDateTime.now(),
+              sleep: Long => Unit = Thread.sleep,
+              stop: AtomicBoolean = new AtomicBoolean(false))
+      : Either[String, Seq[RunReport]] =
+    cron(cronExpr, now()).map { c =>
+      val reports = Seq.newBuilder[RunReport]
+      cronLoop(c, iterations, stop, now, sleep) {
+        reports += run(spark, stages, retries, stop = stop)
       }
+      reports.result()
     }
 
   /** Run stages sequentially; each stage is retried up to `retries` times
     * with linear backoff (reference: RETRY_LIMIT 3, delay between retries).
     * A failing stage stops the pipeline (later stages typically read what
-    * earlier ones wrote). */
+    * earlier ones wrote). Once `stop` is set, no further stage starts. */
   def run(spark: SparkSession, stages: Seq[Stage], retries: Int = 3,
-          backoffMs: Long = 1000): RunReport = {
+          backoffMs: Long = 1000,
+          stop: AtomicBoolean = new AtomicBoolean(false)): RunReport = {
     Progress.attach(spark.sparkContext)
     val out = Seq.newBuilder[StageResult]
     var halted = false
-    for (s <- stages if !halted && !stopFlag.get()) {
+    for (s <- stages if !halted && !stop.get()) {
       var attempt = 0
       var done = false
       var rows = 0L

@@ -3,10 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared capped co-occurrence kernel — ONE definition for the
-  * oracle-checked query (Round9b.text_cooccur_lift) and the scale probe
-  * (ScaleProbe cooccur_pairs_capped), so the probe characterizes the
-  * registered plan.
+/** Capped co-occurrence kernel of the oracle-checked query
+  * Round9b.text_cooccur_lift.
   */
 object Cooccur {
 

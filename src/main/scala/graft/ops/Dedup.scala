@@ -674,8 +674,7 @@ object Dedup {
     * ONCE (localCheckpoint) so the self-join's two sides never
     * re-derive the input scan. Non-block payload columns come back
     * suffixed `_a`/`_b`; pairs are ordered `idCol_a` < `idCol_b`.
-    * ONE definition serves the registered query (dedup_linkage_fs) and
-    * the scale probe. */
+    * The kernel of the registered query (dedup_linkage_fs). */
   def blockedPairs(d: DataFrame, blockCols: Seq[String], idCol: String,
                    cap: Int): DataFrame = {
     val blk = d.groupBy(blockCols.map(col): _*)

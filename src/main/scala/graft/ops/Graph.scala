@@ -3,10 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Shared iterative-graph kernels. ONE definition serves the
-  * oracle-checked query (Round9b.graph_pagerank) and the scale probe
-  * (ScaleProbe pagerank_3iter), so the probed plan IS the registered
-  * query's plan at every multiplier.
+/** Shared iterative-graph kernels. ONE definition serves every
+  * oracle-checked graph query (graph_pagerank and its residual twin,
+  * k-core, k-truss, label propagation, the capped projection).
   */
 object Graph {
 
@@ -230,9 +229,8 @@ object Graph {
     * `rounds` rounds of drop-nodes-with-degree-< k, each one node-sized
     * rollup + two semi-joins, the edge frame re-checkpointed so round
     * r+1 never replays round r's lineage. Returns one summary row per
-    * round (round, n_removed, n_nodes_left, n_edges_left). ONE
-    * definition serves the registered query (graph_kcore_peel) and the
-    * scale probe. */
+    * round (round, n_removed, n_nodes_left, n_edges_left). The kernel
+    * of the registered query (graph_kcore_peel). */
   def kcorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     var edges = pairs.select(col("a"), col("b")).localCheckpoint(true)
     val out = (1 to rounds).map { r =>
@@ -303,8 +301,7 @@ object Graph {
     * round-START edge set (peels apply between rounds, not within), and
     * the surviving frame is re-checkpointed per round so round r+1
     * never replays round r's join lineage. Returns one summary row per
-    * round. ONE definition serves the registered query (graph_ktruss)
-    * and the scale probe. */
+    * round. The kernel of the registered query (graph_ktruss). */
   def ktrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     var e = pairs.select(col("a"), col("b")).localCheckpoint(true)
     val out = (1 to rounds).map { r =>
@@ -338,8 +335,8 @@ object Graph {
     * (lcc = 2·tri / (deg·(deg−1))). Triangle enumeration is the
     * edge-keyed x<y<y2 join (sym adjacency keyed back to the edge,
     * never node×node), so per-edge work is deg-bounded; each triangle
-    * credits its 3 vertices. ONE definition serves the registered query
-    * (graph_local_clustering) and the scale probe. */
+    * credits its 3 vertices. The kernel of the registered query
+    * (graph_local_clustering). */
   def localClustering(pairs: DataFrame): DataFrame = {
     val e = pairs.select(col("a"), col("b"))
     val deg = e.select(col("a").as("node"))
@@ -406,8 +403,8 @@ object Graph {
     * deterministic, so an oracle's chained-CTE replay lands on identical
     * labels. Each round is one keyed join + one (node, label) rollup +
     * a per-node window over ≤ degree rows; the label frame is
-    * re-checkpointed between rounds. Returns final (node, lbl). ONE
-    * definition serves graph_lpa and the scale probe. */
+    * re-checkpointed between rounds. Returns final (node, lbl). The
+    * kernel of graph_lpa. */
   def lpaLabels(pairs: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // partitioned + sorted on the per-round join key (r18): rounds then

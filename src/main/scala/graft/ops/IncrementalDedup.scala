@@ -101,8 +101,7 @@ object IncrementalDedup {
   }
 
   /** Stateless twin of [[verdicts]] for when history arrives as a FRAME
-    * (the oracle-checked `dedup_incremental` query, and the scale probe
-    * — ONE definition so the probe characterizes the registered plan).
+    * (the oracle-checked `dedup_incremental` query).
     * Same exact-then-near structure, but the near verification is exact
     * trigram Jaccard ≥ 0.5 over text (integer cross-mult 2·|∩| ≥ |∪|),
     * with both shingle builds semi-join-pruned to candidate docs —

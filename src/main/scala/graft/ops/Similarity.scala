@@ -98,8 +98,7 @@ object Similarity {
   }
 
   /** [[farthestFirstSeeds]] over raw embeddings, returned as the
-    * (ord, vec_id, mind2) frame sim_farthest_first and the scale probe
-    * emit. The corpus is scanned k times (quantize is a cheap codegen
+    * (ord, vec_id, mind2) frame sim_farthest_first emits. The corpus is scanned k times (quantize is a cheap codegen
     * map riding each scan) — no corpus-sized checkpoint. */
   def farthestFirst(emb: DataFrame, idCol: String, vecCol: String,
                     seedId: Long, k: Int): DataFrame = {
@@ -550,8 +549,8 @@ object Similarity {
     * occupancy grows with the corpus. Per-vector top-1 is a window
     * bounded by the cell's occupancy (~√n); ranking in integer basis
     * points; vectors whose cell holds no other label drop out by
-    * construction. ONE definition serves the registered query
-    * (sim_hard_negatives) and the scale probe. */
+    * construction. The kernel of the registered query
+    * (sim_hard_negatives). */
   def hardNegativesFrom(t: TrainedIvf, labels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the trained assignment carries (vid, cell, xq ≡ milliQuant,

@@ -4,10 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared sketch hashing kernels. ONE definition serves the batch query
-  * (Round9b.q_cms_heavy), the streaming twin (StreamOps.cmsSketchStream)
-  * and the scale probe (ScaleProbe cms_sketch_build), so a probe or a
-  * stream can never silently drift from the oracle-checked query it
-  * claims to characterize.
+  * (Round9b.q_cms_heavy) and the streaming twin
+  * (StreamOps.cmsSketchStream), so the stream can never silently drift
+  * from the oracle-checked query it mirrors.
   *
   * All hashing goes through md5 hex nibbles — engine-portable (DuckDB
   * reproduces it via [[h3Sql]]'s strpos expansion), deterministic, and

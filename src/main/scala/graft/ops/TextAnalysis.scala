@@ -54,8 +54,7 @@ object TextAnalysis {
     * hash-array column `h`, the minimum over the w-length window
     * starting there — the selected-fingerprint sequence before
     * deduplication. `h` must be a PROJECTED attribute (the §6 HOF rule);
-    * callers guard size(h) ≥ w. ONE definition serves text_winnowing
-    * and the scale probe. */
+    * callers guard size(h) ≥ w. The kernel of text_winnowing. */
   def winnowMinima(h: Column, w: Int): Column =
     transform(sequence(lit(1), size(h) - lit(w - 1)),
       i => array_min(slice(h, i, lit(w))))

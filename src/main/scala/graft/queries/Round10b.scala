@@ -58,8 +58,7 @@ object Round10b extends Module {
       // the capped projection is the SHARED per-(session, dataset)
       // frame (GraphShared): built+checkpointed once for the whole
       // graph family. Kernel = graft.ops.Graph.{cappedVia,
-      // projectionPairs}, shared with ScaleProbe so the probed plan IS
-      // the registered one.
+      // projectionPairs}.
       val deg = GraphShared.skDeg(s, dir)
       val pairs = GraphShared.projPairs(s, dir)
       pairs
@@ -153,8 +152,7 @@ object Round10b extends Module {
     // oracle replays it with one flat window; verification is per-pair
     // trigram Jaccard ≥ 0.5 as integer cross-multiplication over the
     // already-carried shingle arrays — no second shuffle.
-    // Kernel = graft.ops.Dedup.snmPairs, shared with ScaleProbe so the
-    // probed plan IS the registered one.
+    // Kernel = graft.ops.Dedup.snmPairs.
     "dedup_sorted_neighborhood" -> ((s, dir) =>
       // the w=2 semantics read off the SHARED w=4 tagged build
       // (SnmShared): a pair's global-order offset is window-invariant

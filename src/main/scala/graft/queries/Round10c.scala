@@ -69,8 +69,7 @@ object Round10c extends Module {
     // round drops nodes with degree < 2 and the edges they carried — the
     // decomposition that separates tight duplicate cliques (survive) from
     // chain/pendant structure (peel away). Reuses the build-once shared
-    // t=0.5 pair index. Kernel = graft.ops.Graph.kcorePeel, shared with
-    // ScaleProbe so the probed plan IS the registered one.
+    // t=0.5 pair index. Kernel = graft.ops.Graph.kcorePeel.
     "graph_kcore_peel" -> ((s, dir) =>
       graft.ops.Graph.kcorePeel(
         TextDedup.sharedPairs05(s, dir).select(col("a"), col("b")), 2, 3)
@@ -234,8 +233,7 @@ object Round10c extends Module {
     // keyed join + one (node, label) rollup + a per-node window over
     // ≤degree rows; the label frame is re-checkpointed between rounds.
     // Output: the bounded community-size histogram.
-    // Kernel = graft.ops.Graph.lpaLabels, shared with ScaleProbe so the
-    // probed plan IS the registered one.
+    // Kernel = graft.ops.Graph.lpaLabels.
     "graph_lpa" -> ((s, dir) =>
       graft.ops.Graph.lpaLabels(
         TextDedup.sharedPairs05(s, dir).select(col("a"), col("b")), 3)
@@ -694,8 +692,7 @@ object Round10c extends Module {
     // TakeOrdered(1) — no step is ever pairwise over the corpus. The
     // classic 2-approximation coreset/init kernel, bit-stable
     // cross-engine because the metric is integer and ties are keyed.
-    // Kernel = graft.ops.Similarity.farthestFirst, shared with
-    // ScaleProbe so the probed plan IS the registered one.
+    // Kernel = graft.ops.Similarity.farthestFirst.
     "sim_farthest_first" -> ((s, dir) =>
       Similarity.farthestFirst(Tables.embeddings(s, dir), "vec_id",
           "embedding", 0L, 4)

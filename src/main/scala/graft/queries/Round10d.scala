@@ -234,7 +234,7 @@ object Round10d extends Module {
     // shared t=0.5 pair index; each triangle credits its 3 vertices.
     "graph_local_clustering" -> ((s, dir) => {
       // shared kernel (graft.ops.Graph.localClustering — the edge-keyed
-      // triangle enumeration, also under the scale probe)
+      // triangle enumeration)
       graft.ops.Graph.localClustering(
           TextDedup.sharedPairs05(s, dir).select(col("a"), col("b")))
         .withColumn("band", idiv(
@@ -249,8 +249,7 @@ object Round10d extends Module {
     // each round keeps only edges with ≥ k−2 triangle support — the
     // EDGE-grain analogue of k-core that strips bridge edges between
     // duplicate cliques while k-core (node grain) would keep them.
-    // Kernel = graft.ops.Graph.ktrussPeel, shared with ScaleProbe so
-    // the probed plan IS the registered one.
+    // Kernel = graft.ops.Graph.ktrussPeel.
     "graph_ktruss" -> ((s, dir) =>
       graft.ops.Graph.ktrussPeel(
         TextDedup.sharedPairs05(s, dir).select(col("a"), col("b")), 3, 2)))

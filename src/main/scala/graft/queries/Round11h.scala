@@ -86,9 +86,8 @@ object Round11h extends Module {
     *     back 1:1.
     *
     * Per-user work is now O(activity log activity) (the sort), never
-    * O(activity²); ScaleProbe's `pit_whale` case pins a 10⁴×10⁴ whale
-    * at seconds. Output (and the DuckDB oracle) are unchanged — the
-    * rewrite is exact. */
+    * O(activity²): a 10⁴×10⁴ whale ran in seconds. Output (and the
+    * DuckDB oracle) are unchanged — the rewrite is exact. */
   def pitLeakage(ev: DataFrame): DataFrame = {
     val labels = ev.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("label_id"),

@@ -62,8 +62,8 @@ object Round11l extends Module {
     // iteration the exact integer L1 and L∞ movement of the rank vector
     // — the evidence behind graph_pagerank's "3 iterations" (residuals
     // must fall monotonically on the fixture; the contraction is the
-    // 0.85 damping). Kernel shared verbatim with graph_pagerank /
-    // ScaleProbe; each iteration adds one |V|-sized residual join.
+    // 0.85 damping). Kernel shared verbatim with graph_pagerank; each
+    // iteration adds one |V|-sized residual join.
     "graph_pagerank_residual" -> ((s, dir) =>
       // shared degree-annotated edge frame (GraphShared): one build
       // serves the whole pagerank family

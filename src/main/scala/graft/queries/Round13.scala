@@ -82,7 +82,7 @@ object Round13 extends Module {
     // (SimIvf.sharedAuto, cells ≈ √n) so the cross-label self-join is
     // bounded by Σ cell² = O(n·√n) — a fixed cell count would go
     // quadratic as occupancy grows with the corpus. Kernel =
-    // Similarity.hardNegativesFrom, shared with the scale probe.
+    // Similarity.hardNegativesFrom.
     "sim_hard_negatives" -> ((s, dir) =>
       Similarity.hardNegativesFrom(SimIvf.sharedAuto(s, dir),
           Tables.embeddings(s, dir)
@@ -132,8 +132,7 @@ object Round13 extends Module {
     // behind the newest event and a 1-day TTL, classify every user's
     // end-of-stream state — active (pending labels / in-horizon
     // features), dominant_only (compacted single feature row, inside
-    // TTL), or evicted — the state-store sizing table the probe
-    // measured live. One user-keyed aggregate + a 1-row scalar
+    // TTL), or evicted — the state-store sizing table. One user-keyed aggregate + a 1-row scalar
     // broadcast (the events_cuped shape); integer-second arithmetic.
     "etl_ttl_eviction_plan" -> ((s, dir) => {
       val ttl = 86400L; val horizon = 3600L

@@ -35,7 +35,6 @@ object Round16 extends Module {
       val port = shell.start()
       val rows =
         try {
-          Runner.clearStop()
           val client = java.net.http.HttpClient.newHttpClient()
           def call(b: java.net.http.HttpRequest.Builder): String =
             client.send(b.build(),

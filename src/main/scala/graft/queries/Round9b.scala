@@ -207,9 +207,8 @@ object Round9b extends Module {
     // node id only); the edge list is built once and checkpointed.
     // No dangling nodes by construction (undirected ⇒ outdeg ≥ 1).
     "graph_pagerank" -> ((s, dir) =>
-      // the iteration kernel lives in graft.ops.Graph — shared verbatim
-      // with ScaleProbe's pagerank_3iter, so the probe characterizes
-      // THIS plan; the degree-annotated edge frame is the SHARED
+      // the iteration kernel lives in graft.ops.Graph, shared verbatim
+      // with graph_pagerank_residual; the degree-annotated edge frame is the SHARED
       // per-(session, dataset) build (GraphShared) every pagerank-family
       // member iterates over (each iteration exchanges only the
       // |V|-sized rank frame)
@@ -375,7 +374,7 @@ object Round9b extends Module {
       val docTok = TokShared.tf(s, dir).select(col("doc_id"), col("tok"))
       val nd = docTok.select(col("doc_id")).distinct()
         .agg(count(lit(1)).as("nd"))
-      // shared kernel (graft.ops.Cooccur) — also what ScaleProbe runs
+      // capped pair kernel (graft.ops.Cooccur)
       val pairs = graft.ops.Cooccur.cappedPairs(docTok, 30)
       pairs.crossJoin(broadcast(nd))
         .withColumn("lift_bp",
@@ -457,10 +456,8 @@ object Round9b extends Module {
     // cross-mult 2·|∩| ≥ |∪|. At 100 TB the daily batch joins a
     // precomputed history index; nothing here rescans history pairs.
     "dedup_incremental" -> ((s, dir) => {
-      // the kernel lives in graft.ops.IncrementalDedup.verdictsInline —
-      // shared verbatim with ScaleProbe (so the probe characterizes
-      // THIS plan) and twinned by the persisted-index production
-      // component (buildIndex/verdicts/append). r18: the k=8 MinHash
+      // the kernel lives in graft.ops.IncrementalDedup.verdictsInline,
+      // twinned by the persisted-index production component (buildIndex/verdicts/append). r18: the k=8 MinHash
       // signatures come as pmod row filters of the session-shared
       // full-corpus frame (LshShared.sigs8) instead of re-tokenizing and
       // re-signing the 80% history slice inside this plan — per-doc

@@ -12,7 +12,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.OracleJson.quote
-import graft.etl.{Cron, Runner}
+import graft.etl.Runner
 
 /** The reference's HTTP control + SSE serving shell (index.js:46-355)
   * re-expressed over the Spark-native [[Runner]] — the process boundary
@@ -35,7 +35,7 @@ import graft.etl.{Cron, Runner}
   *
   * Built on the JDK's embedded HttpServer (no new dependencies). The
   * HTTP layer holds NO pipeline logic: every endpoint delegates to
-  * [[Runner]] (run/runCron semantics, stop flag, history) so the surface
+  * [[Runner]] (run, the cron loop, history) so the surface
   * a curl reaches and the programmatic surface the registry gates are
   * the same code. Runs land in the in-memory log ring (the /api/logs
   * page + SSE feed) and, when `historyPath` is set, in the persisted
@@ -66,6 +66,14 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
   private val startedAt = new AtomicReference[Option[LocalDateTime]](None)
   private val lastRunAt = new AtomicReference[Option[LocalDateTime]](None)
   private val schedThread = new AtomicReference[Option[Thread]](None)
+  // the stop flag of the scheduler loop or forced run last started: each
+  // start makes a fresh one, so a stop reaches only this shell's own run
+  private val stopFlag = new AtomicReference(new AtomicBoolean(false))
+  private def freshStop(): AtomicBoolean = {
+    val f = new AtomicBoolean(false)
+    stopFlag.set(f)
+    f
+  }
   // run ids continue the stored history's, so a restarted shell over the
   // same historyPath does not upsert its run 1 over an earlier run 1
   private val runSeq = new AtomicLong(historyPath
@@ -190,7 +198,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     val pat = """"schedule"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
     val cronExpr = pat.findFirstMatchIn(body)
       .map(_.group(1).replace("\\\"", "\"")).getOrElse("* * * * *")
-    Cron.parse(cronExpr) match {
+    Runner.cron(cronExpr) match {
       case Left(err) =>
         (400, obj("message" -> quote("Invalid cron schedule pattern"),
           "error" -> quote(err),
@@ -200,20 +208,13 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
         // fast-path check above must not start two cron threads (the
         // first would become untracked and uninterruptible)
         if (!running.compareAndSet(false, true)) return alreadyRunning()
-        Runner.clearStop()
+        val stop = freshStop()
         schedule.set(Some(cronExpr))
         startedAt.set(Some(LocalDateTime.now()))
-        val t = new Thread(() => {
-          try {
-            while (running.get() && !Runner.stopRequested) {
-              val now = LocalDateTime.now()
-              val waitMs =
-                java.time.Duration.between(now, cron.next(now)).toMillis
-              if (waitMs > 0) Thread.sleep(waitMs)
-              if (running.get() && !Runner.stopRequested) runOnce()
-            }
-          } catch { case _: InterruptedException => () }
-        }, "graft-http-cron")
+        val t = new Thread(() =>
+          try Runner.cronLoop(cron, Int.MaxValue, stop)(runOnce(stop))
+          catch { case _: InterruptedException => () },
+          "graft-http-cron")
         t.setDaemon(true)
         schedThread.set(Some(t))
         t.start()
@@ -232,9 +233,8 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
           "wait for it to complete."),
         "currentSchedule" -> schedule.get().map(quote).getOrElse("null")))
     try {
-      Runner.clearStop()
       log("Starting forced ETL process")
-      val report = runOnce()
+      val report = runOnce(freshStop())
       val skipped = report.results.count(!_.ok).toLong
       (200, obj(
         "message" -> quote("Forced ETL process completed successfully"),
@@ -253,7 +253,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     if (!running.get())
       return (400, obj(
         "message" -> quote("ETL scheduler is not running")))
-    Runner.requestStop()
+    stopFlag.get().set(true)
     running.set(false)
     schedThread.getAndSet(None).foreach(_.interrupt())
     val stopped = schedule.getAndSet(None)
@@ -307,7 +307,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
 
   /** One pipeline run: Runner.run + per-stage log lines + optional
     * persisted report. The HTTP layer adds nothing to the semantics. */
-  private def runOnce(): Runner.RunReport = {
+  private def runOnce(stop: AtomicBoolean): Runner.RunReport = {
     lastRunAt.set(Some(LocalDateTime.now()))
     // live progress tail while the run executes: poll the Progress
     // listener's per-stage task fractions and stream them as `progress`
@@ -330,7 +330,7 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     poller.setDaemon(true)
     poller.start()
     val report =
-      try Runner.run(spark, stages)
+      try Runner.run(spark, stages, stop = stop)
       finally {
         pollerDone.set(true); poller.interrupt()
         // final snapshot AFTER the run: an attached tail always sees the

@@ -53,4 +53,25 @@ class BenchGuardSpec extends AnyFunSuite {
       "weird\"name" -> 1.25e-1)
     assert(BenchGuard.parse(BenchGuard.render(m)) == m)
   }
+
+  test("the shared sweep reports a throwing query as failed, untimed, and " +
+      "BenchCheck turns it into a violation") {
+    val spark = TestSpark.spark
+    val region: graft.queries.Q = (s, dir) => graft.sources.Tables(s, dir, "region")
+    val fake: Map[String, graft.queries.Q] = Map(
+      "fake_a" -> region,
+      "fake_boom" -> ((_, _) => sys.error("injected failure")),
+      "fake_c" -> region)
+    val names = fake.keys.toSeq.sorted
+    // no warm-up: the shared-frame builds would take the spec past seconds
+    val run = Bench.sweep(spark, TestSpark.sf, names, queries = fake,
+      prepare = (_, _) => (0.0, Nil))
+    assert(run.failed == Seq("fake_boom") && run.warmupFailed.isEmpty)
+    assert(run.timings.keySet == Set("fake_a", "fake_c"))
+    assert(run.timings.values.forall(t =>
+      t.cold > 0 && t.warm > 0 && t.coldJobs >= 1 && t.warmJobs >= 1))
+    val vs = BenchCheck.violations(run,
+      ref = Map("fake_a" -> 60.0, "fake_c" -> 60.0), jobsRef = Map.empty)
+    assert(vs == Seq(BenchGuard.Violation("fake_boom", "query failed")))
+  }
 }

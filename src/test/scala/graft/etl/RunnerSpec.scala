@@ -37,29 +37,40 @@ class RunnerSpec extends AnyFunSuite {
     assert(report.results.head.attempts == 2 && report.results.head.error.contains("permanent"))
   }
 
-  test("runScheduled repeats the pipeline and collects every report") {
-    Runner.clearStop()
+  /** An injected clock for runCron: `sleep` advances it instead of
+    * waiting. */
+  private class FakeClock {
+    var now = java.time.LocalDateTime.of(2026, 1, 1, 0, 0, 30)
+    val slept = Seq.newBuilder[Long]
+    def sleep(ms: Long): Unit = { slept += ms; now = now.plusNanos(ms * 1000000L) }
+  }
+
+  test("runCron repeats the pipeline and collects every report") {
+    val clock = new FakeClock
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => { calls.incrementAndGet(); Seq(1).toDF("x") }))
-    val reports = Runner.runScheduled(spark, stages, intervalMs = 1, iterations = 3)
-    assert(reports.size == 3 && calls.get() == 3 && reports.forall(_.ok))
+    val reports = Runner.runCron(spark, stages, "* * * * *", iterations = 3,
+      now = () => clock.now, sleep = clock.sleep)
+    assert(reports.exists(r => r.size == 3 && r.forall(_.ok)) && calls.get() == 3)
     assert(Runner.history.size >= 3)
   }
 
-  test("requestStop halts a scheduled loop between runs") {
-    Runner.clearStop()
+  test("the loop's own stop flag halts runCron between runs") {
+    val clock = new FakeClock
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => {
-      if (calls.incrementAndGet() == 1) Runner.requestStop()
+      if (calls.incrementAndGet() == 1) stop.set(true)
       Seq(1).toDF("x")
     }))
-    val reports = Runner.runScheduled(spark, stages, intervalMs = 1, iterations = 10)
-    assert(reports.size == 1 && calls.get() == 1)
-    Runner.clearStop()
+    val reports = Runner.runCron(spark, stages, "* * * * *", iterations = 10,
+      now = () => clock.now, sleep = clock.sleep, stop = stop)
+    assert(reports.exists(_.size == 1) && calls.get() == 1)
+    // the flag is the loop's: a run that was not handed it is whole
+    assert(Runner.run(spark, stages, retries = 1).results.size == 1)
   }
 
   test("Progress tallies a stage's tasks via the listener") {
-    Runner.clearStop()
     val stages = Seq(Runner.Stage("prog", s =>
       s.range(0, 1000, 1, 4).toDF("x").groupBy($"x" % 10).count()))
     val report = Runner.run(spark, stages, retries = 1)
@@ -165,23 +176,19 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("runCron fires at cron boundaries with injected clock") {
-    Runner.clearStop()
-    import java.time.LocalDateTime
-    var clock = LocalDateTime.of(2026, 1, 1, 0, 0, 30)
-    val slept = Seq.newBuilder[Long]
+    val clock = new FakeClock
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => { calls.incrementAndGet(); Seq(1).toDF("x") }))
     val got = Runner.runCron(spark, stages, "*/10 * * * *", iterations = 2,
-      now = () => clock,
-      sleep = ms => { slept += ms; clock = clock.plusNanos(ms * 1000000L) })
+      now = () => clock.now, sleep = clock.sleep)
     assert(got.exists(_.size == 2) && calls.get() == 2)
     // 00:00:30 → 00:10 is 570s; 00:10 → 00:20 is 600s
-    assert(slept.result() == Seq(570000L, 600000L))
+    assert(clock.slept.result() == Seq(570000L, 600000L))
     // invalid pattern is rejected up front, nothing runs
     val bad = Runner.runCron(spark, stages, "61 * * * *", 1)
     assert(bad.isLeft && calls.get() == 2)
     // parse-valid but never-firing pattern stays on the error channel
-    val never = Runner.runCron(spark, stages, "0 0 30 2 *", 1, now = () => clock)
+    val never = Runner.runCron(spark, stages, "0 0 30 2 *", 1, now = () => clock.now)
     assert(never.left.exists(_.contains("never fires")) && calls.get() == 2)
   }
 

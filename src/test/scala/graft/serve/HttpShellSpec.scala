@@ -129,11 +129,50 @@ class HttpShellSpec extends AnyFunSuite {
     } finally shell.stop()
   }
 
+  test("stopping a shell's scheduler leaves later Runner.run calls whole") {
+    val shell = new HttpShell(spark, stages)
+    val port = shell.start()
+    try {
+      assert(post(port, "/api/start-etl",
+        """{"schedule": "0 0 1 1 *"}""").statusCode() == 200)
+      assert(post(port, "/api/stop-etl").statusCode() == 200)
+    } finally shell.stop()
+    val two = Seq(Runner.Stage("a", sp => sp.range(2).toDF()),
+      Runner.Stage("b", sp => sp.range(3).toDF()))
+    val report = Runner.run(spark, two, retries = 1)
+    assert(report.results.map(r => (r.stage, r.rows)) ==
+      Seq(("a", 2L), ("b", 3L)))
+  }
+
+  test("stop-etl halts the shell's own run after its in-flight stage") {
+    val inFlight = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val shell = new HttpShell(spark, Seq(
+      Runner.Stage("first", sp => {
+        inFlight.countDown(); release.await(); sp.range(3).toDF()
+      }),
+      Runner.Stage("second", sp => sp.range(5).toDF())))
+    val port = shell.start()
+    try {
+      val forced = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+        post(port, "/api/start-etl-force"))
+      inFlight.await()
+      assert(post(port, "/api/stop-etl").statusCode() == 200)
+      release.countDown()
+      val fr = forced.get()
+      assert(fr.statusCode() == 200 &&
+        fr.body.contains(""""processed": 3"""), fr.body)
+      // a cron pattern that never fires is refused up front
+      val never = post(port, "/api/start-etl", """{"schedule": "0 0 30 2 *"}""")
+      assert(never.statusCode() == 400 && never.body.contains("never fires"),
+        never.body)
+    } finally shell.stop()
+  }
+
   test("a near-term cron schedule actually fires the pipeline") {
     val shell = new HttpShell(spark, stages)
     val port = shell.start()
     try {
-      Runner.clearStop()
       // every minute — worst case ~60 s to the next fire; poll the logs
       // page until the run lands (bounded wait, no internals touched)
       assert(post(port, "/api/start-etl",
