@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 
 /** Benchmark main (driver contract): runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
@@ -142,10 +143,11 @@ object Bench {
             prepare: (SparkSession, String) => (Double, Seq[String]) = warmUp)
       : Sweep = {
     val (sharedWarmupSec, warmupFailed) = prepare(spark, sfDir)
-    val jobsNow = jobCounter(spark)
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // a run's jobs are every job started between the two reads, whatever
+    // its job group (a stream's micro-batches run under the stream's own)
     def timed(name: String): (Double, Long) = {
-      val j0 = jobsNow()
+      val j0 = jobIds(spark)
       val t0 = System.nanoTime()
       try { materialize(spark, sfDir, queries(name)); inject(name) } catch {
         case t: Throwable =>
@@ -153,7 +155,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: " +
             s"${t.getClass.getSimpleName}: ${t.getMessage}")
       }
-      ((System.nanoTime() - t0) / 1e9, jobsNow() - j0)
+      ((System.nanoTime() - t0) / 1e9, (jobIds(spark) -- j0).size.toLong)
     }
     val cold = names.map(name => name -> timed(name)).toMap
     val warm = names.reverse.map(name => name -> timed(name)).toMap
@@ -162,28 +164,11 @@ object Bench {
     Sweep(sharedWarmupSec, warmupFailed, timings, failed.toSeq)
   }
 
-  /** Count the Spark jobs started on `spark` from now on (the structural
-    * gate — see BenchGuard.checkJobs). The listener bus is async, so the
-    * returned reader waits until the count is stable: job counts then
-    * cannot be attributed to the wrong query. */
-  private def jobCounter(spark: SparkSession): () => Long = {
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
-    () => {
-      var prev = -1L
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != prev && spins < 200) {
-        Thread.sleep(10); prev = cur; cur = jobs.get(); spins += 1
-      }
-      cur
-    }
+  /** Ids of the jobs `spark`'s status store holds once every job event
+    * posted so far has reached it. */
+  private def jobIds(spark: SparkSession): Set[Int] = {
+    Bridge.drainListenerBus(spark.sparkContext)
+    Bridge.jobIds(spark.sparkContext).toSet
   }
 
   def main(args: Array[String]): Unit = {

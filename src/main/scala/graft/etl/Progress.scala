@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Bridge
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -9,16 +8,14 @@ import java.util.concurrent.atomic.AtomicLong
   * reference's per-batch progress % (etlService.js:416-591 logs an
   * N-of-total line per 100k-row batch). The reference counts hand-rolled
   * batches; on Spark the engine owns batching, so the honest unit of
-  * progress is the TASK: a SparkListener tallies completed vs launched
-  * tasks for the jobs each named pipeline stage submits (correlated via
-  * the job group id that [[Runner.run]] sets per stage).
+  * progress is the TASK: completed vs launched tasks of the jobs each
+  * named pipeline stage submits, correlated via the job group id that
+  * [[Runner.run]] sets per stage.
   *
-  * Each stage RUN gets a unique group id ([[begin]]), so listener events
-  * still draining from a previous run of the same stage can never credit
-  * the new run's tally; late events for a retired group are dropped by
-  * the null guards. Listener callbacks are driver-side metadata events
-  * (a few per task, zero data-path cost) — the same mechanism the Spark
-  * UI uses.
+  * The tally is read from Spark's own status store (the record behind
+  * its UI, through `statusTracker`), not kept here. Each stage RUN gets a
+  * unique group id ([[begin]]), so a fresh run of the same stage starts
+  * from zero instead of adding to the previous run's jobs.
   */
 object Progress {
 
@@ -32,76 +29,20 @@ object Progress {
       else math.min(1.0, tasksDone.toDouble / tasksTotal)
   }
 
-  private final class Counters {
-    val total = new AtomicLong(0)
-    val done = new AtomicLong(0)
-  }
-
   private val GroupPrefix = "graft-stage-"
   private val runSeq = new AtomicLong(0)
 
   /** stage name → its CURRENT run's group id. */
   private val current = new ConcurrentHashMap[String, String]()
-  /** live group id → counters (retired groups are removed). */
-  private val groups = new ConcurrentHashMap[String, Counters]()
-  /** spark stage id → group id (TaskEnd events don't carry the group,
-    * JobStart's stageInfos do); pruned when the group retires. */
-  private val stageToGroup = new ConcurrentHashMap[Int, String]()
-
-  private object listener extends SparkListener {
-    // JobStart only maps stage ids to the group; totals are tallied at
-    // StageSubmitted, because a job's stageInfos also list parent stages
-    // whose shuffle output already exists — those are SKIPPED (their
-    // tasks never run) and would otherwise inflate the denominator
-    // forever (AQE submits many jobs per query, sharing stages).
-    override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-      Option(jobStart.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .filter(g => g.startsWith(GroupPrefix) && groups.containsKey(g))
-        .foreach { group =>
-          jobStart.stageInfos.foreach(si => stageToGroup.put(si.stageId, group))
-        }
-    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-      val group = stageToGroup.get(s.stageInfo.stageId)
-      if (group != null) {
-        val c = groups.get(group)  // null once the group has retired
-        if (c != null) c.total.addAndGet(s.stageInfo.numTasks.toLong)
-      }
-    }
-    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-      val group = stageToGroup.get(taskEnd.stageId)
-      if (group != null && taskEnd.reason == org.apache.spark.Success) {
-        val c = groups.get(group)
-        if (c != null) c.done.incrementAndGet()
-      }
-    }
-  }
-
-  /** SparkContexts this JVM has attached the listener to (keyed by
-    * application id — a restarted context gets a fresh attach). */
-  private val attachedApps = ConcurrentHashMap.newKeySet[String]()
-
-  /** Idempotently attach the listener to this SparkContext. */
-  def attach(sc: SparkContext): Unit =
-    if (attachedApps.add(sc.applicationId)) sc.addSparkListener(listener)
 
   /** Start a fresh tally for a stage run; returns the unique job-group id
     * the caller must set via `setJobGroup`. The previous run's group (if
-    * any) retires: its counters and stage-id mappings are dropped, so its
-    * still-draining listener events hit the null guards, not this run. */
+    * any) is no longer read. */
   private[etl] def begin(stage: String): String = synchronized {
     // The whole body holds `this`, making begin and pruneOldest mutually
-    // atomic: a concurrent prune can never evict a stage between its
-    // current.put and groups.put (which would orphan the Counters entry
-    // and hide a live run from `of`). Listener callbacks stay lock-free —
-    // they only read the concurrent maps.
+    // atomic: a concurrent prune can never evict the stage being begun.
     val gid = s"$GroupPrefix$stage#${runSeq.incrementAndGet()}"
-    val old = current.put(stage, gid)
-    if (old != null) {
-      groups.remove(old)
-      stageToGroup.entrySet().removeIf(e => e.getValue == old)
-    }
-    groups.put(gid, new Counters)
+    current.put(stage, gid)
     // move-to-back: each name holds exactly ONE slot, so the order
     // structure is bounded by distinct names even when a long-lived
     // cron driver re-begins the same stages forever
@@ -119,9 +60,8 @@ object Progress {
   private[etl] def orderSize: Int = synchronized(beginOrder.size)
   /** The final run of each distinct stage name is kept for the status
     * surface, but not forever: beyond this many distinct stages the
-    * oldest-begun retire fully (their maps are dropped), so a long-lived
-    * driver cycling through generated stage names can't grow without
-    * bound. */
+    * oldest-begun are dropped, so a long-lived driver cycling through
+    * generated stage names can't grow without bound. */
   private val MaxTrackedStages = 256
 
   // caller holds `this`; the just-begun name sits at the back, so the
@@ -129,20 +69,27 @@ object Progress {
   private def pruneOldest(): Unit =
     while (current.size() > MaxTrackedStages && !beginOrder.isEmpty) {
       val it = beginOrder.iterator()
-      val victim = it.next()
+      current.remove(it.next())
       it.remove()
-      val gid = current.remove(victim)
-      if (gid != null) {
-        groups.remove(gid)
-        stageToGroup.entrySet().removeIf(e => e.getValue == gid)
-      }
     }
 
-  /** Current progress of a named stage's latest run, if any. */
+  /** Current progress of a named stage's latest run, if any: tasks over
+    * the distinct Spark stages of the run's jobs. A job also lists parent
+    * stages whose shuffle output already exists; those are SKIPPED (never
+    * submitted, submission time 0) and are left out, or they would
+    * inflate the denominator forever (AQE submits many jobs per query). */
   def of(stage: String): Option[StageProgress] =
-    Option(current.get(stage))
-      .flatMap(gid => Option(groups.get(gid)))
-      .map(c => StageProgress(stage, c.done.get(), c.total.get()))
+    Option(current.get(stage)).map { gid =>
+      val stages = Bridge.activeContext.toSeq.flatMap { sc =>
+        val st = sc.statusTracker
+        st.getJobIdsForGroup(gid).toSeq
+          .flatMap(st.getJobInfo(_).toSeq.flatMap(_.stageIds.toSeq))
+          .distinct.flatMap(st.getStageInfo(_))
+          .filter(_.submissionTime > 0)
+      }
+      StageProgress(stage, stages.map(_.numCompletedTasks.toLong).sum,
+        stages.map(_.numTasks.toLong).sum)
+    }
 
   /** Snapshot of every tracked stage, for a status endpoint. */
   def snapshot(): Seq[StageProgress] = {

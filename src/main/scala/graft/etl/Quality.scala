@@ -23,7 +23,4 @@ object Quality {
   /** Composite-key completeness predicate (all parts non-null). */
   def keysPresent(keys: Seq[String]): Column =
     keys.map(col(_).isNotNull).reduce(_ && _)
-
-  /** Filter to valid records only (the reference's post-validation stream). */
-  def validOnly(df: DataFrame, valid: Column): DataFrame = df.where(valid)
 }

@@ -134,7 +134,6 @@ object Runner {
   def run(spark: SparkSession, stages: Seq[Stage], retries: Int = 3,
           backoffMs: Long = 1000,
           stop: AtomicBoolean = new AtomicBoolean(false)): RunReport = {
-    Progress.attach(spark.sparkContext)
     val out = Seq.newBuilder[StageResult]
     var halted = false
     for (s <- stages if !halted && !stop.get()) {

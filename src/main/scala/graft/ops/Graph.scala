@@ -15,27 +15,6 @@ object Graph {
     pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
 
-  /** Integer fixed-point PageRank over an undirected edge list
-    * (`src`/`dst` columns, no dangling nodes — undirected ⇒ outdeg ≥ 1).
-    *
-    * pr' = (15·(S div n)) div 100 + (85·Σ pr div od) div 100 at scale
-    * `S` — every step integer, so an oracle's chained-CTE replay lands
-    * on identical longs. The out-degree is folded INTO the edge list
-    * once and the list REPARTITIONED BY src before an eager checkpoint:
-    * localCheckpoint preserves the hash partitioning in the LogicalRDD,
-    * so each iteration's pr ⋈ edges join exchanges only the |V|-sized
-    * rank frame — the O(|E|) edge list never shuffles again after the
-    * build (the win that matters when |E| ≫ |V|). Returns (node, pr).
-    */
-  /** Personalized (seeded) PageRank: teleport mass goes ONLY to the
-    * `seeds` node set (one `node` column), so scores measure proximity
-    * to the seeds — the related-item retrieval kernel. Same integer
-    * fixed-point arithmetic and build-once edge layout as [[pagerank]];
-    * the rank frame stays SPARSE (only seeds plus nodes the mass has
-    * reached appear), which is the representation that matters when the
-    * seed set is tiny against a 100 TB graph. The per-iteration
-    * seed-rejoin is a keyed full-outer (a seed may have no inbound mass
-    * yet must keep its base share). */
   /** The build-once layout every pagerank-family iteration scans:
     * (deg = (src, od) node degrees, edgesOd = the degree-annotated edge
     * list REPARTITIONED BY src), both eagerly checkpointed —
@@ -57,15 +36,16 @@ object Graph {
     (deg, edgesOd)
   }
 
-  def personalizedPagerank(edges0: DataFrame, seeds: DataFrame,
-                           iters: Int = 3,
-                           scale: Long = 1000000000L): DataFrame = {
-    val (_, edgesOd) = degreeAnnotated(edges0)
-    personalizedPagerankFrom(edgesOd, seeds, iters, scale)
-  }
-
-  /** [[personalizedPagerank]] over a PREBUILT [[degreeAnnotated]] edge
-    * frame — the shared-projection entry point. */
+  /** Personalized (seeded) PageRank: teleport mass goes ONLY to the
+    * `seeds` node set (one `node` column), so scores measure proximity
+    * to the seeds — the related-item retrieval kernel. Same integer
+    * fixed-point arithmetic and build-once edge layout as [[pagerankFrom]];
+    * the rank frame stays SPARSE (only seeds plus nodes the mass has
+    * reached appear), which is the representation that matters when the
+    * seed set is tiny against a 100 TB graph. The per-iteration
+    * seed-rejoin is a keyed full-outer (a seed may have no inbound mass
+    * yet must keep its base share). Runs over a PREBUILT
+    * [[degreeAnnotated]] edge frame, the shared-projection entry point. */
   def personalizedPagerankFrom(edgesOd: DataFrame, seeds: DataFrame,
                                iters: Int = 3,
                                scale: Long = 1000000000L): DataFrame = {
@@ -93,14 +73,20 @@ object Graph {
     pr
   }
 
-  def pagerank(edges0: DataFrame, iters: Int = 3,
-               scale: Long = 1000000000L): DataFrame = {
-    val (deg, edgesOd) = degreeAnnotated(edges0)
-    pagerankFrom(deg, edgesOd, iters, scale)
-  }
-
-  /** [[pagerank]] over a PREBUILT [[degreeAnnotated]] frame pair — the
-    * shared-projection entry point (edgesOd is scanned `iters`×). */
+  /** Integer fixed-point PageRank over an undirected edge list
+    * (`src`/`dst` columns, no dangling nodes — undirected ⇒ outdeg ≥ 1).
+    *
+    * pr' = (15·(S div n)) div 100 + (85·Σ pr div od) div 100 at scale
+    * `S` — every step integer, so an oracle's chained-CTE replay lands
+    * on identical longs. The out-degree is folded INTO the edge list
+    * once and the list REPARTITIONED BY src before an eager checkpoint:
+    * localCheckpoint preserves the hash partitioning in the LogicalRDD,
+    * so each iteration's pr ⋈ edges join exchanges only the |V|-sized
+    * rank frame — the O(|E|) edge list never shuffles again after the
+    * build (the win that matters when |E| ≫ |V|). Runs over a PREBUILT
+    * [[degreeAnnotated]] frame pair, the shared-projection entry point
+    * (edgesOd is scanned `iters`×). Returns (node, pr).
+    */
   def pagerankFrom(deg: DataFrame, edgesOd: DataFrame, iters: Int = 3,
                    scale: Long = 1000000000L): DataFrame = {
     val nn = deg.agg(count(lit(1)).as("n"))
@@ -127,24 +113,18 @@ object Graph {
     pr
   }
 
-  /** Per-iteration convergence residuals of [[pagerank]] — the
+  /** Per-iteration convergence residuals of [[pagerankFrom]] — the
     * stop-condition readout (run until L1 residual under a threshold,
     * don't guess an iteration count). Same kernel and integer
-    * fixed-point as [[pagerank]]; every iteration's rank frame is
+    * fixed-point as [[pagerankFrom]]; every iteration's rank frame is
     * checkpointed once because it feeds BOTH the next contribution
     * pass and the residual join against its predecessor. On the
     * undirected edge list every ranked node has in- and out-edges, so
     * consecutive rank frames share one node set and the residual join
     * is a plain inner join. Returns (iter, n_nodes, l1_residual,
-    * linf_residual) — |V|-sized joins per iteration, never |E|². */
-  def pagerankResiduals(edges0: DataFrame, iters: Int = 3,
-                        scale: Long = 1000000000L): DataFrame = {
-    val (deg, edgesOd) = degreeAnnotated(edges0)
-    pagerankResidualsFrom(deg, edgesOd, iters, scale)
-  }
-
-  /** [[pagerankResiduals]] over a PREBUILT [[degreeAnnotated]] frame
-    * pair — the shared-projection entry point. */
+    * linf_residual) — |V|-sized joins per iteration, never |E|².
+    * Runs over a PREBUILT [[degreeAnnotated]] frame pair, the
+    * shared-projection entry point. */
   def pagerankResidualsFrom(deg: DataFrame, edgesOd: DataFrame,
                             iters: Int = 3,
                             scale: Long = 1000000000L): DataFrame = {

@@ -33,8 +33,7 @@ object IvfIndex {
 
   final case class BuildReport(cells: Int, nVectors: Long, nCentroids: Long)
 
-  private def ldot(a: Column, b: Column): Column =
-    graft.functions.LongVectorFunctions.vecDotLong(a, b)
+  import Similarity.ldot
 
   /** Train on `emb` (sampled-Lloyd, cells ≈ √n) and persist the index. */
   def build(spark: SparkSession, emb: DataFrame, idCol: String,

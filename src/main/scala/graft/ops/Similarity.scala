@@ -326,12 +326,14 @@ object Similarity {
       .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
       .withColumn("cq", ((col("sx") - col("sx") % col("n")) / col("n")).cast("long"))
 
+  /** Exact dot product of two array<long> vectors. */
+  private[ops] def ldot(a: Column, b: Column): Column =
+    graft.functions.LongVectorFunctions.vecDotLong(a, b)
+
   /** Per-(cell,dim) centroid rows folded to broadcast-ready ARRAYS:
     * (cell, cvec: array<long>, dcc = ‖c‖² exact). The persisted-index
     * layout ([[IvfIndex]]) stores exactly this shape. */
   private[graft] def centroidArrays(cent: DataFrame): DataFrame = {
-    def ldot(a: Column, b: Column): Column =
-      graft.functions.LongVectorFunctions.vecDotLong(a, b)
     cent.groupBy(col("cell"))
       .agg(transform(array_sort(collect_list(struct(col("d"), col("cq")))),
         s => s.getField("cq")).as("cvec"))
@@ -345,8 +347,6 @@ object Similarity {
   private[graft] def lloydRankedArr(quant: DataFrame,
                                     centArr: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def ldot(a: Column, b: Column): Column =
-      graft.functions.LongVectorFunctions.vecDotLong(a, b)
     val w = Window.partitionBy(col("vid")).orderBy(col("cos_bp").desc, col("cell"))
     quant.withColumn("dxx", ldot(col("xq"), col("xq")))
       .crossJoin(broadcast(centArr))
@@ -474,10 +474,6 @@ object Similarity {
       .withColumn("n_cells", lit(t.cells.toLong))
       .orderBy(col("cell"))
 
-  def ivfAutoStats(emb: DataFrame, idCol: String, vecCol: String,
-                   sampleFactor: Int = 8): DataFrame =
-    ivfAutoStatsFrom(ivfAutoTrain(emb, idCol, vecCol, sampleFactor))
-
   /** Search through the scale-adaptive index: exact integer-bp cosine
     * top-k among the vectors assigned to the query's `nprobe` closest
     * TRAINED cells. Candidate work per query is O(nprobe · n/cells) =
@@ -487,8 +483,6 @@ object Similarity {
     * checkpointed quantized corpus. */
   def ivfAutoSearchFrom(t: TrainedIvf, idCol: String, queryId: Long,
                         k: Int, nprobe: Int): DataFrame = {
-    def ldot(a: Column, b: Column): Column =
-      graft.functions.LongVectorFunctions.vecDotLong(a, b)
     val qc = queryProbeCells(t, queryId, nprobe)
     t.assigned.join(broadcast(qc), Seq("cell"))
       .where(col("vid") =!= lit(queryId))
@@ -519,8 +513,6 @@ object Similarity {
                              queryIds: Seq[Long], k: Int,
                              nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def ldot(a: Column, b: Column): Column =
-      graft.functions.LongVectorFunctions.vecDotLong(a, b)
     val qs = lloydRankedArr(
         t.quant.where(col("vid").isin(queryIds.map(Long.box): _*)), t.centArr)
       .where(col("rn") <= nprobe)
@@ -584,8 +576,6 @@ object Similarity {
     * (nprobe, k_exact, n_ann, hits, recall_bp) per point. */
   def ivfAutoProbeCurveFrom(t: TrainedIvf, queryId: Long, k: Int,
                             probes: Seq[Int]): DataFrame = {
-    def ldot(a: Column, b: Column): Column =
-      graft.functions.LongVectorFunctions.vecDotLong(a, b)
     // the query's rank of EVERY cell — ≤cells rows, one one-row map stage
     val qRanks = lloydRankedArr(
         t.quant.where(col("vid") === lit(queryId)), t.centArr)
@@ -660,12 +650,6 @@ object Similarity {
     }
     pts.reduce(_ unionByName _).orderBy(col("nprobe"))
   }
-
-  def ivfAutoProbeCurve(emb: DataFrame, idCol: String, vecCol: String,
-                        queryId: Long, k: Int, probes: Seq[Int],
-                        sampleFactor: Int = 8): DataFrame =
-    ivfAutoProbeCurveFrom(ivfAutoTrain(emb, idCol, vecCol, sampleFactor),
-      queryId, k, probes)
 
   def ivfTrainStats(emb: DataFrame, idCol: String, vecCol: String,
                     cells: Int, iters: Int = 1): DataFrame = {

@@ -146,8 +146,6 @@ object Round11 extends Module {
           explode(split(col("text"), "")).as("c"))
         .groupBy(col("source"), col("doc_id"), col("c"))
         .agg(count(lit(1)).as("nc"))
-      def ilog2(c: org.apache.spark.sql.Column) =
-        (length(bin(c)) - 1).cast("long")
       val perDoc = ch
         .withColumn("n", sum(col("nc")).over(
           Window.partitionBy(col("doc_id"))))

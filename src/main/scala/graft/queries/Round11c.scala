@@ -50,8 +50,6 @@ object Round11c extends Module {
     // corpus pass; the only shuffle is the map-side-combinable
     // (source, bigram) rollup.
     "text_bigram_entropy" -> ((s, dir) => {
-      def ilog2(c: org.apache.spark.sql.Column) =
-        (length(bin(c)) - 1).cast("long")
       // the (source, bg, c) rollup IS the shared BigramShared frame
       // (a <2-token doc has no bigrams, so the old toks≥2 guard only
       // pruned rows the shingle explode already dropped)

@@ -14,8 +14,6 @@ import graft.sources.Tables
   */
 object Round11d extends Module {
 
-  private def ilog2(c: Column): Column = (length(bin(c)) - 1).cast("long")
-
   val queries: Map[String, Q] = Map(
 
     // Matryoshka (MRL) prefix-dim recall: top-10 by cosine over the

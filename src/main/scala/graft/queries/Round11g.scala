@@ -13,9 +13,6 @@ import graft.sources.Tables
   */
 object Round11g extends Module {
 
-  private def ilog2(c: org.apache.spark.sql.Column) =
-    (length(bin(c)) - 1).cast("long")
-
   val queries: Map[String, Q] = Map(
 
     // Closed-form hashed-feature training: per md5-h3 mod 16 bucket the

@@ -38,8 +38,6 @@ object Round11t extends Module {
     // fans out. Transition counts are the events_markov rollup; the
     // entropy fold runs over ≤types rows per state.
     "events_markov_entropy" -> ((s, dir) => {
-      def ilog2(c: org.apache.spark.sql.Column) =
-        (length(bin(c)) - 1).cast("long")
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val trans = Tables.events(s, dir)

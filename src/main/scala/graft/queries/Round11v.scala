@@ -23,8 +23,6 @@ object Round11v extends Module {
     // that keeps events_ab_lift honest. One scan for the per-user
     // pre/post rollup, one banded conditional rollup.
     "events_hte_bands" -> ((s, dir) => {
-      def ilog2(c: org.apache.spark.sql.Column) =
-        (length(bin(c)) - 1).cast("long")
       val ev = Tables.events(s, dir)
         .where(col("ts").isNotNull && col("user_id").isNotNull)
       val mx = ev.agg(
@@ -55,8 +53,6 @@ object Round11v extends Module {
     // IVF index serves worst). One broadcast-8 assignment pass, output
     // ≤ 64 bands forever.
     "sim_ood_bands" -> ((s, dir) => {
-      def ilog2(c: org.apache.spark.sql.Column) =
-        (length(bin(c)) - 1).cast("long")
       val m = SimShared.miln(s, dir)
       val cb = m.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
         .limit(8)

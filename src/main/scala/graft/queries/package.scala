@@ -28,6 +28,11 @@ package object queries {
     * bits past 2⁵³. */
   def idiv(a: Column, b: Column): Column = call_function("div", a, b)
 
+  /** ⌊log2 c⌋ of a positive long, exact: the length of its binary
+    * string minus one (the integer entropy surrogate of the text, events
+    * and sim entropy queries). */
+  def ilog2(c: Column): Column = (length(bin(c)) - 1).cast("long")
+
   /** DuckDB tokenizer fragment — the oracle twin of TextAnalysis.tokens.
     * Single definition so the Spark and SQL sides can't drift. */
   val toksSql: String = "string_split(trim(text), ' ')"

@@ -309,8 +309,8 @@ class HttpShell(spark: SparkSession, stages: Seq[Runner.Stage],
     * persisted report. The HTTP layer adds nothing to the semantics. */
   private def runOnce(stop: AtomicBoolean): Runner.RunReport = {
     lastRunAt.set(Some(LocalDateTime.now()))
-    // live progress tail while the run executes: poll the Progress
-    // listener's per-stage task fractions and stream them as `progress`
+    // live progress tail while the run executes: poll Progress's
+    // per-stage task fractions and stream them as `progress`
     // SSE events — the serving twin of the reference's live log %.
     // Poll-only-when-watched: zero cost without attached clients.
     def emitProgress(): Unit =

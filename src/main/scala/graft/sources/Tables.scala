@@ -46,8 +46,6 @@ object Tables {
     memo(spark, (dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val converted =
       if (name == "events" && df.schema("ts").dataType == LongType)

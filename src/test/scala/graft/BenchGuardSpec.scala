@@ -58,20 +58,32 @@ class BenchGuardSpec extends AnyFunSuite {
       "BenchCheck turns it into a violation") {
     val spark = TestSpark.spark
     val region: graft.queries.Q = (s, dir) => graft.sources.Tables(s, dir, "region")
+    // fake_d runs one more job than fake_c under a job group that is not
+    // the sweep's, as a stream's micro-batches run under the stream's own
+    val otherGroup: graft.queries.Q = (s, dir) => {
+      s.sparkContext.setJobGroup("bench-guard-other", "not the sweep's group")
+      try s.sparkContext.parallelize(1 to 4, 2).count()
+      finally s.sparkContext.clearJobGroup()
+      region(s, dir)
+    }
     val fake: Map[String, graft.queries.Q] = Map(
       "fake_a" -> region,
       "fake_boom" -> ((_, _) => sys.error("injected failure")),
-      "fake_c" -> region)
+      "fake_c" -> region,
+      "fake_d" -> otherGroup)
     val names = fake.keys.toSeq.sorted
     // no warm-up: the shared-frame builds would take the spec past seconds
     val run = Bench.sweep(spark, TestSpark.sf, names, queries = fake,
       prepare = (_, _) => (0.0, Nil))
     assert(run.failed == Seq("fake_boom") && run.warmupFailed.isEmpty)
-    assert(run.timings.keySet == Set("fake_a", "fake_c"))
+    assert(run.timings.keySet == Set("fake_a", "fake_c", "fake_d"))
     assert(run.timings.values.forall(t =>
       t.cold > 0 && t.warm > 0 && t.coldJobs >= 1 && t.warmJobs >= 1))
+    val (c, d) = (run.timings("fake_c"), run.timings("fake_d"))
+    assert(d.coldJobs == c.coldJobs + 1 && d.warmJobs == c.warmJobs + 1)
     val vs = BenchCheck.violations(run,
-      ref = Map("fake_a" -> 60.0, "fake_c" -> 60.0), jobsRef = Map.empty)
+      ref = Map("fake_a" -> 60.0, "fake_c" -> 60.0, "fake_d" -> 60.0),
+      jobsRef = Map.empty)
     assert(vs == Seq(BenchGuard.Violation("fake_boom", "query failed")))
   }
 }

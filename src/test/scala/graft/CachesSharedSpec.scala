@@ -54,19 +54,12 @@ class CachesSharedSpec extends AnyFunSuite {
 
   test("session-keyed caching lives only in Caches: no isStopped eviction " +
       "or SparkSession-keyed TrieMap elsewhere in src/main/scala") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), "run from the repository root")
     val sessionKeyedTrieMap =
       """TrieMap\s*\.?\s*(?:empty)?\s*\[\s*\(\s*(?:[\w.]*\.)?SparkSession\b""".r
-    val offenders = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Caches.scala")
-      .filter { p =>
-        val src = java.nio.file.Files.readString(p)
-        src.contains("isStopped") || sessionKeyedTrieMap.findFirstIn(src).isDefined
-      }
-      .map(root.relativize(_).toString).toSeq.sorted
+    val offenders = TestSpark.mainSources.collect {
+      case (path, src) if path != "graft/Caches.scala" &&
+        (src.contains("isStopped") || sessionKeyedTrieMap.findFirstIn(src).isDefined) => path
+    }
     assert(offenders.isEmpty,
       s"use Caches.SessionMemo instead of a hand-rolled session cache in: $offenders")
   }

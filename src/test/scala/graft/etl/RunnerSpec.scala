@@ -75,15 +75,10 @@ class RunnerSpec extends AnyFunSuite {
       s.range(0, 1000, 1, 4).toDF("x").groupBy($"x" % 10).count()))
     val report = Runner.run(spark, stages, retries = 1)
     assert(report.ok)
-    // listener events are async — poll until the tally converges
+    // the status store fills from the listener bus: drain it, then read
     def settled(): Progress.StageProgress = {
-      val deadline = System.nanoTime() + 10000000000L
-      var p = Progress.of("prog").get
-      while ((p.tasksTotal == 0 || p.tasksDone < p.tasksTotal) &&
-             System.nanoTime() < deadline) {
-        Thread.sleep(50); p = Progress.of("prog").get
-      }
-      p
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      Progress.of("prog").get
     }
     val p = settled()
     assert(p.tasksTotal > 0 && p.tasksDone == p.tasksTotal && p.fraction == 1.0)

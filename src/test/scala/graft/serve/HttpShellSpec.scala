@@ -225,8 +225,8 @@ class HttpShellSpec extends AnyFunSuite {
       val events = readUntil("open_orders: ok")
       assert(events.contains("event: log") &&
         events.contains("clean_customer"), events.take(500))
-      // ... and live per-stage task fractions from the Progress
-      // listener (at least the guaranteed end-of-run snapshot)
+      // ... and live per-stage task fractions from Progress (at least
+      // the guaranteed end-of-run snapshot)
       assert(events.contains("event: progress") &&
         events.contains("\"tasks_total\""), events.take(500))
       sock.close()

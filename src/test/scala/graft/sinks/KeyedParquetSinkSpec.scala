@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.sources.Formats
+import org.apache.spark.sql.graft.Bridge
 import java.nio.file.Files
 
 class KeyedParquetSinkSpec extends AnyFunSuite {
@@ -11,36 +12,15 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** Spark jobs `body` runs, counted under a job group of its own (AQE
-    * stage jobs inherit it). The listener bus is asynchronous: every job
-    * of `body` has ended when it returns, so the count is read once each
-    * start seen has its end and nothing more arrives. */
+    * stage jobs inherit it), read from the status store once every job
+    * event posted so far has reached it. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"sink-spec-${java.util.UUID.randomUUID}"
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          ids.add(e.jobId)
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (ids.contains(e.jobId)) ended.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "sink job count")
-      try body finally sc.clearJobGroup()
-      var stable = 0
-      var last = -1
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val n = ids.size
-        stable = if (n == last && n == ended.get) stable + 1 else 0
-        last = n
-      }
-      ids.size
-    } finally sc.removeSparkListener(listener)
+    sc.setJobGroup(group, "sink job count")
+    try body finally sc.clearJobGroup()
+    Bridge.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
   }
 
   /** Bucket of a single-column key, the writer's hash. */
