@@ -52,6 +52,16 @@ object GraftSession {
       // must be set before the first SparkSession in the JVM.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      .config(localFs.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
+
+  /** `file:` resolves to graft's local filesystem, which creates files and
+    * directories without forking `chmod` or `readlink`
+    * (graft.sources.LocalFs), for the `FileSystem` and the `FileContext`
+    * API. A `FileSystem` the JVM cached before these were set stays in
+    * use; that changes speed, not results. */
+  private val localFs = Seq(
+    "fs.file.impl" -> classOf[graft.sources.GraftLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.GraftLocalFs].getName)
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     configure(SparkSession.builder().master(master).appName("graft"), shufflePartitions)
@@ -62,7 +72,7 @@ object GraftSession {
     * construction). Idempotent: what the session already has — from an
     * earlier call or from the `builder` extensions — is not added again. */
   def adopt(spark: SparkSession): SparkSession = {
-    Seq(
+    (Seq(
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.ansi.enabled" -> "false",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -71,7 +81,10 @@ object GraftSession {
       // session with the actual parallelism instead of the 200 default
       "spark.sql.shuffle.partitions" ->
         spark.sparkContext.defaultParallelism.toString
-    ).foreach { case (k, v) => spark.conf.set(k, v) }
+      // graft's `file:` filesystem as session confs: `newHadoopConf`
+      // copies them into every Hadoop conf the session makes, so nothing
+      // global changes
+    ) ++ localFs).foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.VectorFunctions.register(spark)
     graft.plans.AsOfStrategy.ensureOn(spark)
     spark

@@ -563,13 +563,17 @@ object Round10c extends Module {
     // wants (the sim_cov_moments convention). Day index is relative to
     // the type's own first day, so the sums are small and stable.
     "events_trend_ingredients" -> ((s, dir) => {
-      val daily = Tables.events(s, dir).where(col("ts").isNotNull)
+      // the type's first day is a window over `daily`, not a join of
+      // `daily` with its own aggregate: one plan over the series, so the
+      // entry runs the same Spark jobs every time (the join's null-type
+      // drop is the filter)
+      val daily = Tables.events(s, dir)
+        .where(col("ts").isNotNull && col("event_type").isNotNull)
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 86400000000").as("d"))
         .agg(count(lit(1)).as("y"))
-      val base = daily.groupBy(col("event_type")).agg(min(col("d")).as("d0"))
-      daily.join(base, Seq("event_type"))
-        .withColumn("x", col("d") - col("d0"))
+      daily.withColumn("x",
+          col("d") - min(col("d")).over(Window.partitionBy(col("event_type"))))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),

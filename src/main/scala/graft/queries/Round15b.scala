@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -25,50 +23,45 @@ import graft.streaming.{CdcOp, PitEvent, StreamOps}
   */
 object Round15b extends Module {
 
-  private val sinkSeq = new AtomicInteger(0)
-
   /** Replay `rows` through a streaming operator in `chunks` ascending
-    * micro-batches (+ optional flush sentinel); returns the memory sink
-    * as a DataFrame. */
+    * micro-batches (+ optional flush sentinel); returns the memory sink's
+    * rows as a DataFrame of `s`. The stream runs in a clone of `s`, so
+    * its confs and its sink view never reach the caller's session. */
   private def replay[T <: Product : org.apache.spark.sql.Encoder](
       s: SparkSession, rows: Seq[T], sentinel: Option[T],
       build: DataFrame => Dataset[_], chunks: Int = 3): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val sink = s"graft_replay_${sinkSeq.incrementAndGet()}"
-    val input = MemoryStream[T]
+    val run = org.apache.spark.sql.graft.Bridge.cloneSession(s)
     // a replay is a handful of micro-batches over a driver-fed slice:
     // the dominant cost is per-(batch × state-partition) store IO, so
     // run the stream with few state partitions (the conf is fixed into
-    // the query's checkpoint at start; the session value is restored —
-    // a real deployment sizes this to its key cardinality instead)
-    val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val oldNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    // the query's checkpoint at start — a real deployment sizes this to
+    // its key cardinality instead)
+    run.conf.set("spark.sql.shuffle.partitions", "4")
     // every finalization here rides a DATA batch (ascending delivery +
     // flush sentinel), so timeout-only wake batches add latency, never
     // output — skip them for the replay
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    run.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = run.sqlContext
+    val input = MemoryStream[T]
+    // the sink's view lives in the clone's catalog, so one name serves
+    // every replay
+    val q = build(input.toDF()).writeStream
+      .outputMode("append").format("memory").queryName("graft_replay").start()
     try {
-      val q = build(input.toDF()).writeStream
-        .outputMode("append").format("memory").queryName(sink).start()
-      try {
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          input.addData(c); q.processAllAvailable()
-        }
-        // twice: the watermark computed FROM a batch only governs the
-        // NEXT batch, and wake-only batches are disabled above — the
-        // second sentinel batch runs with the far-future watermark in
-        // force and finalizes every remaining horizon
-        sentinel.foreach { x =>
-          input.addData(x); q.processAllAvailable()
-          input.addData(x); q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
-    }
-    s.table(sink)
+      rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
+        input.addData(c); q.processAllAvailable()
+      }
+      // twice: the watermark computed FROM a batch only governs the
+      // NEXT batch, and wake-only batches are disabled above — the
+      // second sentinel batch runs with the far-future watermark in
+      // force and finalizes every remaining horizon
+      sentinel.foreach { x =>
+        input.addData(x); q.processAllAvailable()
+        input.addData(x); q.processAllAvailable()
+      }
+    } finally q.stop()
+    val out = run.table("graft_replay")
+    s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   val queries: Map[String, Q] = Map(

@@ -241,9 +241,16 @@ object KeyedParquetSink {
     writeMeta(df.sparkSession, path, numBuckets)
   }
 
-  /** Read the table back (bucket column dropped). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop(BucketCol)
+  /** Read the table back (bucket column dropped): every bucket directory
+    * of one driver listing, under the footer schema, so no schema job runs
+    * before the caller's. Past `parallelPartitionDiscoveryThreshold` (32)
+    * bucket directories Spark still lists them in a parallel job. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = bucketDirs(fs, root).toSeq.sortBy(_._1).map(_._2)
+    scan(spark, path, tableSchema(spark, path, fs, dirs.iterator), dirs).drop(BucketCol)
+  }
 
   /** Bucket-pruned POINT READ: scan only the bucket directories that hold
     * one of the `wanted` key tuples (a small frame carrying the key

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 
 /** Thin accessor for `private[sql]`/`private[spark]` Spark internals the
   * graft extension layer needs: Column <-> Expression conversion, runtime
-  * function registration, and reads of the driver's status store (the
-  * job and stage record Spark's own UI shows). Lives under
+  * function registration, session cloning, and reads of the driver's
+  * status store (the job and stage record Spark's own UI shows). Lives under
   * org.apache.spark.sql (the standard pattern for Spark extension
   * libraries) and contains no logic of its own. */
 object Bridge {
@@ -26,6 +26,11 @@ object Bridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A new session with a copy of `spark`'s confs, temp views and
+    * functions: what it sets or registers stays out of `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** The JVM's running SparkContext, if any. */
   def activeContext: Option[SparkContext] = SparkContext.getActive

@@ -610,6 +610,19 @@ class Round10cSpec extends AnyFunSuite {
     assert(got.exists(g => g._7 != 0))
   }
 
+  test("events_trend_ingredients: the same Spark jobs on every run in one session") {
+    val sc = spark.sparkContext
+    val runs = (1 to 4).map { _ =>
+      val group = s"trend-jobs-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "events_trend_ingredients job count")
+      val rows = try run("events_trend_ingredients").collect().toSeq finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      (sc.statusTracker.getJobIdsForGroup(group).length, rows)
+    }
+    assert(runs.map(_._1).distinct.size == 1, s"jobs per run: ${runs.map(_._1).mkString(", ")}")
+    assert(runs.map(_._2).distinct.size == 1)
+  }
+
   test("sim_filtered_topk: pre-filter semantics — ranked within the segment only") {
     val got = run("sim_filtered_topk").collect().map(r =>
       (r.getAs[Long]("vec_id"), r.getAs[Number]("label").longValue, r.getAs[Long]("cos_bp")))

@@ -11,6 +11,26 @@ class Round15Spec extends AnyFunSuite {
   private def run(name: String) =
     SparkEntry.queries(name)(spark, TestSpark.sf)
 
+  test("stream replays run in a session clone: the caller's confs hold, no sink view is left") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    def confs = keys.map(k => spark.conf.getOption(k))
+    val before = confs
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Seq[Option[String]]]()
+    @volatile var replaying = true
+    val reader = new Thread(() => while (replaying) { seen.add(confs); Thread.sleep(1) })
+    reader.start()
+    val names = Seq("stream_cdc_replay", "stream_seq_gaps_replay", "stream_pit_replay")
+    val outs =
+      try names.map(n => run(n).collect().toSeq)
+      finally { replaying = false; reader.join() }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == Set(before))
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_replay")))
+    assert(outs.forall(_.nonEmpty))
+    assert(names.map(n => run(n).collect().toSeq) == outs)
+  }
+
   test("etl_jdbc_roundtrip: target equals the relational pipeline result") {
     val got = run("etl_jdbc_roundtrip").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))

@@ -68,6 +68,22 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
       spark.read.parquet(dir).drop("_bucket").schema)
   }
 
+  test("read: a full-table read runs only its caller's jobs, under the table's own schema") {
+    val dir = Files.createTempDirectory("graft_sink_full_read").toString + "/t"
+    val rows = (1L to 100L).map(i => (i, s"n$i", i * 0.5))
+    KeyedParquetSink.write(rows.toDF("id", "name", "v"), dir, Seq("id"), 16)
+    val built = KeyedParquetSink.read(spark, dir)
+    val callers = jobsOf(built.count())
+    var n = 0L
+    val jobs = jobsOf { n = KeyedParquetSink.read(spark, dir).count() }
+    assert(jobs == callers, s"$jobs jobs, the count alone runs $callers")
+    // Spark's path read infers the schema in a job of its own
+    assert(jobsOf(spark.read.parquet(dir).count()) > callers)
+    assert(n == 100L)
+    assert(built.schema == spark.read.parquet(dir).drop("_bucket").schema)
+    assert(built.as[(Long, String, Double)].collect().sortBy(_._1).toSeq == rows)
+  }
+
   test("one merge empties a touched bucket, keeps another, creates a third") {
     val dir = Files.createTempDirectory("graft_sink_dirs").toString + "/t"
     val byBucket = bucketOf(1L to 64L, 8).toSeq.groupBy(_._2).view
