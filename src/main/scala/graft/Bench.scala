@@ -235,7 +235,12 @@ object Bench {
       java.nio.file.Files.write(p,
         s"""{"metric":"total","value":$total,"unit":"sec","cold_value":$coldTotal,"cpus":$cpus$flagsJson,"queries":$full,"jobs":$fullJobs,"sf":"$sfDir"}\n"""
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch {
+      // the stdout line below still carries the result; say the record is
+      // missing instead of leaving a stale file looking current
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] could not write bench_latest.json: $e")
+    }
 
     // The harness captures only the last ~2000 chars of output (plus sbt's
     // trailing "[success]" line), so the JSON line must fit that window or

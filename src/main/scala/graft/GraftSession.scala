@@ -67,10 +67,11 @@ object GraftSession {
     configure(SparkSession.builder().master(master).appName("graft"), shufflePartitions)
       .withExtensions(new graft.functions.GraftExtensions()(_))
 
-  /** Apply graft's runtime-settable configs, functions and planner
-    * strategy to an existing session (used when the harness owns session
-    * construction). Idempotent: what the session already has — from an
-    * earlier call or from the `builder` extensions — is not added again. */
+  /** Apply graft's runtime-settable configs, functions, optimizer rule
+    * and planner strategy to an existing session (used when the harness
+    * owns session construction). Idempotent: what the session already
+    * has — from an earlier call or from the `builder` extensions — is not
+    * added again. */
   def adopt(spark: SparkSession): SparkSession = {
     (Seq(
       "spark.sql.session.timeZone" -> "UTC",
@@ -86,6 +87,7 @@ object GraftSession {
       // global changes
     ) ++ localFs).foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.VectorFunctions.register(spark)
+    graft.functions.CosineFusion.ensureOn(spark)
     graft.plans.AsOfStrategy.ensureOn(spark)
     spark
   }

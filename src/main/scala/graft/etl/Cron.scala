@@ -102,8 +102,6 @@ object Cron {
     }
   }
 
-  def isValid(expr: String): Boolean = parse(expr).isRight
-
   private def parseField(f: String, spec: FieldSpec): Either[String, Set[Int]] = {
     val parts = f.split(",", -1).toSeq
     if (parts.exists(_.isEmpty)) return Left("empty list element")

@@ -59,205 +59,4 @@ object Pipelines {
         KeyedParquetSink.read(s, targetPath)
       })))
   }
-
-  /** End-to-end corpus-rewrite report: what the dedup dropped, what the
-    * batched load wrote, what the compaction pass reclaimed. */
-  final case class CorpusRewriteReport(
-      rowsIn: Long, rowsKept: Long, dupsDropped: Long,
-      filesBefore: Long, bytesBefore: Long,
-      filesAfter: Long, bytesAfter: Long, partitionsCompacted: Int)
-
-  /** The end-to-end LLM-corpus production job — the §2.9 pieces composed
-    * into ONE pipeline (the reference's whole job is extract → clean →
-    * upsert; this is that composition at the corpus grain):
-    *
-    *  1. DEDUP — near-dup clusters from the shingle pair index at
-    *     t = 0.5 (transitive closure via min-label rounds), keeper =
-    *     LONGEST member (ties → min id; the `dedup_keeper_strategies`
-    *     policy that keeps the most complete copy for training);
-    *  2. LAYOUT KEY — a 32-bit Z-order key interleaving clamped doc
-    *     length with a source-hash lane ([[graft.ops.Layout.mortonKey]]),
-    *     so per-file min/max prune BOTH length-band and source scans;
-    *  3. BATCHED LOAD — the kept corpus appends in `loadBatches`
-    *     key-disjoint batches through [[KeyedParquetSink.append]] (the
-    *     reference pages 100k rows per batch, etlService.js:446-449 —
-    *     same shape, Spark owns the paging), accreting ≥1 file per
-    *     bucket per batch;
-    *  4. MAINTENANCE — [[graft.sinks.Compaction.compact]] with
-    *     sortCols = zk merges each bucket back to its byte target and
-    *     pays for the Z-order clustering while the data is moving
-    *     anyway.
-    *
-    * Idempotent by construction: keepers of distinct clusters are never
-    * near-dups of each other (the closure is exhaustive at t), so
-    * re-running over the rewritten corpus drops 0 rows — the spec pins
-    * that, plus set-identity modulo dropped dups and per-file zk
-    * sortedness. */
-  def corpusRewrite(spark: SparkSession, docs: DataFrame, targetPath: String,
-                    numBuckets: Int = 16, loadBatches: Int = 4,
-                    targetBytes: Long = 256L * 1024): CorpusRewriteReport = {
-    import graft.ops.{Dedup, Layout}
-    val rowsIn = docs.count()
-    // 1. near-dup clusters → longest-keeper policy
-    val pairs = Dedup.pairIndex(docs, "doc_id", "text", 3, 0.5)
-    // connected components RUN TO CONVERGENCE: a chain of near-dups of
-    // any eccentricity collapses to one label, so keepers of distinct
-    // clusters are never near-dups — the idempotence invariant below,
-    // and the same closure the hash-checked corpus_rewrite_plan uses
-    val labels = Dedup.connectedComponents(pairs)
-    val members = labels.join(
-      docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-    // keeper = (n_chars DESC, id ASC): max over the struct (n_chars, -id)
-    // is exact for ANY id range (no scaled-arithmetic encoding)
-    val keepers = members.groupBy(col("label"))
-      .agg(max(struct(col("n_chars").as("k1"), (-col("id")).as("k2"),
-        col("id").as("kid"))).as("p"))
-      .select(col("p.kid").as("id"))
-    val drops = labels.select(col("id"))
-      .join(keepers, Seq("id"), "left_anti")
-      .withColumnRenamed("id", "doc_id")
-      .localCheckpoint(true)
-    val kept = docs.join(drops, Seq("doc_id"), "left_anti")
-    // 2. Z-order layout key: (clamped length) × (source-hash lane)
-    val keptZk = kept.withColumn("zk", Layout.mortonKey(
-      least(col("n_chars"), lit(65535L)),
-      pmod(crc32(coalesce(col("source"), lit(""))), lit(256L))))
-    // 3. batched keyed load (key-disjoint slices → append accretes files)
-    (0 until loadBatches).foreach { b =>
-      KeyedParquetSink.append(
-        keptZk.where(pmod(col("doc_id"), lit(loadBatches)) === b),
-        targetPath, Seq("doc_id"), numBuckets)
-    }
-    val before = graft.sinks.Compaction.partitionStats(spark, targetPath)
-    // 4. compaction = the Z-order layout rewrite
-    val plans = graft.sinks.Compaction.compact(spark, targetPath,
-      targetBytes, sortCols = Seq("zk"))
-    val after = graft.sinks.Compaction.partitionStats(spark, targetPath)
-    val rowsKept = KeyedParquetSink.read(spark, targetPath).count()
-    CorpusRewriteReport(rowsIn, rowsKept, rowsIn - rowsKept,
-      before.map(_.nFiles.toLong).sum, before.map(_.bytes).sum,
-      after.map(_.nFiles.toLong).sum, after.map(_.bytes).sum, plans.size)
-  }
-
-  /** What one continuous-ingest tick did, per stage. */
-  final case class IngestReport(rowsIn: Long, exactDups: Long,
-      nearDups: Long, uniques: Long, tokensSeen: Long, piecesSeen: Long,
-      vectorsAppended: Long)
-
-  /** One tick of the CONTINUOUS ingest loop — the reference's cron'd
-    * extract → clean → upsert cycle (index.js:75-86, etlService.js:416-
-    * 591) in stored-artifact form, composing the three persisted
-    * artifacts so every step answers from its STORE, never from a
-    * training corpus:
-    *
-    *  1. NORMALIZE — trim text, drop key-less/empty rows (the clean
-    *     step at document grain; no case folding — the dedup index
-    *     hashes raw content);
-    *  2. DEDUP VERDICTS — [[graft.ops.IncrementalDedup.verdicts]]
-    *     against the stored hash + band index: exact/near dups drop,
-    *     uniques continue;
-    *  3. INDEX FOLD — the uniques' hashes/bands/sigs upsert into the
-    *     dedup index, so RE-DELIVERY of the same batch verdicts every
-    *     row a dup: the whole tick is idempotent (spec-pinned — the
-    *     second run ingests 0 docs and appends 0 vectors);
-    *  4. TOKENIZE STATS — [[graft.ops.TokenizerModel.segment]] with the
-    *     stored BPE merges prices the uniques (tokens/pieces) for the
-    *     packing planner;
-    *  5. ANN APPEND — the uniques' embeddings assign against the STORED
-    *     centroids ([[graft.ops.IvfIndex.append]], no retrain) and are
-    *     immediately searchable.
-    *
-    * `batch` carries (doc_id, text, embedding); rows with a NULL
-    * embedding still dedup + price but skip the ANN append. Returns the
-    * per-stage counts. */
-  def ingest(spark: SparkSession, batch: DataFrame, dedupPath: String,
-             bpePath: String, ivfPath: String, dedupBuckets: Int = 8,
-             ivfBuckets: Int = 16): IngestReport = {
-    import graft.ops.{IncrementalDedup, IvfIndex, TokenizerModel}
-    val norm = batch
-      .where(col("doc_id").isNotNull)
-      .withColumn("text", trim(col("text")))
-      .where(col("text").isNotNull && length(col("text")) > 0)
-      .localCheckpoint(true) // feeds verdicts, the uniques join, counts
-    val rowsIn = norm.count()
-    val v = IncrementalDedup.verdicts(spark, norm, "doc_id", "text",
-        dedupPath)
-      .localCheckpoint(true)
-    val byStatus = v.groupBy(col("status")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val uniq = norm.join(
-        v.where(col("status") === "unique").select(col("doc_id")),
-        Seq("doc_id"))
-      .localCheckpoint(true) // feeds THREE artifact writes + the stats
-    val nUniq = uniq.count()
-    val (tokens, pieces, appended) =
-      if (nUniq == 0L) (0L, 0L, 0L)
-      else {
-        IncrementalDedup.append(spark, uniq, "doc_id", "text", dedupPath,
-          numBuckets = dedupBuckets)
-        val s = TokenizerModel.segment(spark, uniq, "doc_id", "text", bpePath)
-          .agg(coalesce(sum(col("n_tokens")), lit(0L)).as("t"),
-            coalesce(sum(col("n_pieces")), lit(0L)).as("p")).head
-        val a = IvfIndex.append(spark,
-          uniq.where(col("embedding").isNotNull)
-            .select(col("doc_id"), col("embedding")),
-          "doc_id", "embedding", ivfPath, ivfBuckets)
-        (s.getLong(0), s.getLong(1), a)
-      }
-    IngestReport(rowsIn, byStatus.getOrElse("exact_dup", 0L),
-      byStatus.getOrElse("near_dup", 0L), nUniq, tokens, pieces, appended)
-  }
-
-  /** What one subject-erasure run removed, per stored artifact. */
-  final case class EraseReport(subjects: Long, dedupHashes: Long,
-      dedupBands: Long, dedupSigs: Long, annRows: Long)
-
-  /** Subject ERASURE across the ingest loop's stored artifacts — the
-    * lifecycle complement of [[ingest]], and the execution of the plan
-    * the batch audits (etl_subject_access / etl_erasure_audit) produce:
-    * every row DERIVED from the subjects' content leaves every store,
-    * bucket-pruned per table, in one call —
-    *   - dedup index: signatures, band rows, and the exact-hash rows
-    *     the subjects keep ([[graft.ops.IncrementalDedup.erase]] — an
-    *     identical text re-ingested later verdicts `unique` again;
-    *     erasure beats dedup memory);
-    *   - ANN index: the subjects' stored vectors
-    *     ([[graft.ops.IvfIndex.delete]]).
-    * The tokenizer model (and the ANN centroids) stay: they are
-    * aggregate statistics over many documents, not subject rows — the
-    * same contract as append's no-retrain. Idempotent: a second run
-    * removes 0 everywhere (the erasure receipt a re-audit checks). */
-  def erase(spark: SparkSession, ids: DataFrame, idCol: String,
-            dedupPath: String, ivfPath: String, dedupBuckets: Int = 8,
-            ivfBuckets: Int = 16): EraseReport = {
-    import graft.ops.{IncrementalDedup, IvfIndex}
-    val idf = ids.select(col(idCol).cast("long").as("doc")).distinct()
-      .localCheckpoint(true)
-    val n = idf.count()
-    val (h, b, s) = IncrementalDedup.erase(spark, idf, "doc", dedupPath,
-      dedupBuckets)
-    val ann = IvfIndex.delete(spark, ivfPath,
-      idf.select(col("doc").as("vid")), "vid", ivfBuckets)
-    EraseReport(n, h, b, s, ann)
-  }
-
-  /** Layout audit over a written corpus table: one row per data file —
-    * rows, zk min/max, and the count of ORDER INVERSIONS of zk in file
-    * order (0 = the file is clustered; parquet row-group min/max stats
-    * are then tight and skippable). File order comes from
-    * monotonically_increasing_id over single-split reads — exact at
-    * maintenance-window file sizes; a petabyte audit would read
-    * row-group footers instead of rows. */
-  def layoutAudit(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("f")).orderBy(col("rid"))
-    spark.read.parquet(path)
-      .select(col("zk"), input_file_name().as("f"),
-        monotonically_increasing_id().as("rid"))
-      .withColumn("prev", lag(col("zk"), 1).over(w))
-      .groupBy(col("f"))
-      .agg(count(lit(1)).as("rows"), min(col("zk")).as("zk_min"),
-        max(col("zk")).as("zk_max"),
-        sum((col("prev") > col("zk")).cast("long")).as("inversions"))
-  }
 }

@@ -56,8 +56,6 @@ object Progress {
     * back on re-begin), for bounded eviction. Guarded by `this`. */
   private val beginOrder = new java.util.LinkedHashSet[String]()
 
-  /** Test hook: size of the eviction-order structure. */
-  private[etl] def orderSize: Int = synchronized(beginOrder.size)
   /** The final run of each distinct stage name is kept for the status
     * surface, but not forever: beyond this many distinct stages the
     * oldest-begun are dropped, so a long-lived driver cycling through

@@ -40,18 +40,12 @@ object Runner {
   private val lastRun = new AtomicReference[Option[RunReport]](None)
   def status: Option[RunReport] = lastRun.get()
 
-  /** Bounded run-log history — the queryable analog of the reference's SSE
-    * log stream (index.js:200-240). */
-  private val historyRef = new AtomicReference[List[RunReport]](Nil)
-  private val HistoryLimit = 100
-  def history: Seq[RunReport] = historyRef.get()
-
   /** Persist a finished run's report into a keyed parquet run-history
     * table — the durable twin of the reference's append-only run log
     * (utils/logger.js writes RSBSAetl.log; /api/logs serves it back,
     * index.js:200-240). One row per (run_id, stage), keyed upsert so a
     * re-persisted run replaces itself instead of duplicating; the table
-    * survives session restarts, unlike the in-memory [[history]]. */
+    * survives session restarts. */
   // 4 buckets: the run log is (runs × stages) rows — metadata-sized at
   // any data scale (a year of hourly 20-stage runs is ~175k short rows),
   // so 16 near-empty bucket dirs only multiplied write tasks + commit
@@ -92,8 +86,7 @@ object Runner {
     * the caller that started the loop — setting it ends the loop, and a
     * run given the same flag finishes its in-flight stage and skips the
     * rest. `now`/`sleep` are injectable so fire-time behavior is testable
-    * without wall-clock waits. [[runCron]] and HttpShell's scheduler both
-    * run this loop. */
+    * without wall-clock waits. HttpShell's scheduler runs this loop. */
   private[graft] def cronLoop(
       cron: Cron, iterations: Int, stop: AtomicBoolean,
       now: () => LocalDateTime = () => LocalDateTime.now(),
@@ -107,25 +100,6 @@ object Runner {
       i += 1
     }
   }
-
-  /** Cron-scheduled repeated runs — parity with the reference's node-cron
-    * surface: validates the pattern first (Left = the validation error,
-    * the analog of the reference's 400 response), then executes the
-    * pipeline at each of the next `iterations` fire times and returns
-    * every report. */
-  def runCron(spark: SparkSession, stages: Seq[Stage], cronExpr: String,
-              iterations: Int, retries: Int = 3,
-              now: () => LocalDateTime = () => LocalDateTime.now(),
-              sleep: Long => Unit = Thread.sleep,
-              stop: AtomicBoolean = new AtomicBoolean(false))
-      : Either[String, Seq[RunReport]] =
-    cron(cronExpr, now()).map { c =>
-      val reports = Seq.newBuilder[RunReport]
-      cronLoop(c, iterations, stop, now, sleep) {
-        reports += run(spark, stages, retries, stop = stop)
-      }
-      reports.result()
-    }
 
   /** Run stages sequentially; each stage is retried up to `retries` times
     * with linear backoff (reference: RETRY_LIMIT 3, delay between retries).
@@ -163,7 +137,6 @@ object Runner {
     }
     val report = RunReport(out.result())
     lastRun.set(Some(report))
-    historyRef.updateAndGet(h => (report :: h).take(HistoryLimit))
     report
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Multiply, Sqrt}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -26,4 +27,13 @@ object CosineFusion extends Rule[LogicalPlan] {
            b1.semanticEquals(b2) && b2.semanticEquals(b3) =>
         VectorCosine(a1, b1)
     }
+
+  /** Add the rule to a session built without GraftExtensions (e.g. a
+    * harness-owned one) as an extra optimization; a session whose
+    * optimizer already has it, from the extensions or an earlier call,
+    * is left as is. */
+  def ensureOn(spark: SparkSession): Unit =
+    if (!spark.sessionState.optimizer.extendedOperatorOptimizationRules.contains(this) &&
+        !spark.experimental.extraOptimizations.contains(this))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ this
 }

@@ -38,21 +38,6 @@ object Dedup {
       graft.functions.TextFunctions.minhashSigs(
         array_distinct(tokens(col(textCol))), k).as("sig"))
 
-  /** Long-format (doc, seed, mh) signatures — same values as the array
-    * form, exposed for inspection/joins. Still shuffle-free. */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int): DataFrame =
-    minhashSignatureArray(docs, idCol, textCol, k)
-      .select(col("doc"), posexplode(col("sig")).as(Seq("seed", "mh")))
-
-  /** Band-key array for a `k`-slot signature: one xxhash64 long per band
-    * (shared by the batch banding below and the streaming near-dedup so
-    * the two can never drift). */
-  def bandKeyArray(sig: org.apache.spark.sql.Column, k: Int,
-                   rowsPerBand: Int): org.apache.spark.sql.Column =
-    transform(sequence(lit(0), lit(k / rowsPerBand - 1)),
-      b => xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
-
   /** LSH bands from an array signature: band b's key is the comma-join of
     * its `rowsPerBand` signature slots, folded to a 64-bit xxhash so the
     * equi-join and distinct run on fixed-width longs instead of ~131-char
@@ -347,8 +332,11 @@ object Dedup {
       .where(col("jaccard") >= lit(threshold))
       .select(col("a"), col("b"), col("inter"), col("jaccard"))
 
-  /** Containment scoring + threshold over a pair-count frame — the tail
-    * of [[containmentPairs]]. */
+  /** N-gram CONTAINMENT scoring + threshold over a pair-count frame
+    * (a, b, inter, na, nb) — the asymmetric near-dup test Jaccard
+    * misses: a short doc pasted inside a long one has tiny Jaccard
+    * (union is dominated by the long doc) but containment
+    * inter/min(|A|,|B|) ≈ 1. */
   private[graft] def containmentFromCounts(pc: DataFrame,
                                            threshold: Double): DataFrame =
     pc.withColumn("containment",
@@ -385,19 +373,6 @@ object Dedup {
                 n: Int, threshold: Double, maxDf: Int = 50): DataFrame =
     ngramJaccardPairs(docs, idCol, textCol, n, threshold, maxDf)
       .localCheckpoint(true)
-
-  /** N-gram CONTAINMENT pairs — the asymmetric near-dup test Jaccard
-    * misses: a short doc pasted inside a long one has tiny Jaccard
-    * (union is dominated by the long doc) but containment
-    * inter/min(|A|,|B|) ≈ 1. Same df-capped inverted-index candidate
-    * generation as [[ngramJaccardPairs]] (pair work ∝ true overlap, a
-    * stop-shingle can never emit m² rows), one extra `least()` in the
-    * final score — no new shuffle. */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, threshold: Double, maxDf: Int = 50): DataFrame =
-    containmentFromCounts(
-      pairCounts(filteredPostings(docs, idCol, textCol, n, maxDf), threshold),
-      threshold)
 
   /** Duplicate-cluster assembly from candidate pairs: `iters` rounds of
     * min-label propagation (each node takes the least label among itself
@@ -598,18 +573,14 @@ object Dedup {
     * straddling an edge is lost. Verification is per-pair trigram
     * Jaccard ≥ 0.5 as integer cross-multiplication over the carried
     * shingle arrays — no second shuffle.
-    * Returns (a, b, inter, uni, jaccard_bp), a < b. */
-  def snmPairs(docs: DataFrame, idCol: String, textCol: String,
-               n: Int = 3, window: Int = 2): DataFrame =
-    snmPairsDist(docs, idCol, textCol, n, window).drop("dist")
-
-  /** [[snmPairs]] with each verified pair tagged by its GLOBAL-sort-order
+    * Each verified pair is tagged by its GLOBAL-sort-order
     * neighbor offset `dist` ∈ [1, window] (blocks are contiguous key
     * ranges of the global order, so block-local and carry offsets are the
     * same coordinate; a pair appears at exactly one offset). The w-sweep
     * audit reads this once and evaluates every w ≤ window from the same
     * frame — pricing the SNM operating point costs ONE pair build, not
-    * one per candidate w. */
+    * one per candidate w. Returns (a, b, inter, uni, jaccard_bp) plus
+    * `dist`, a < b. */
   def snmPairsDist(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, window: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -18,21 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Left-to-right double fold of the elementwise product — deterministic
-    * for a fixed element order. Native codegen'd expression
-    * (graft.functions.VectorDot); the HOF `aggregate(zip_with(...))`
-    * equivalent is CodegenFallback and boxes every element. */
-  def dot(x: Column, y: Column): Column = graft.functions.VectorFunctions.vecDot(x, y)
-
-  /** Vector L2 norm. Precompute this per ROW before a pair join — then
-    * each pair costs one dot product instead of three. */
-  def norm(v: Column): Column = sqrt(dot(v, v))
-
-  /** Cosine similarity of two float arrays — one pass, three accumulators
-    * (graft.functions.VectorCosine). */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.vecCosine(a, b)
-
   /** Brute-force top-k by cosine against the vector of `queryId`.
     * The single-row query side is broadcast; squared norms are computed
     * once per row pre-join; tiebreak on id keeps the top-k deterministic.
@@ -397,8 +382,9 @@ object Similarity {
     *
     * Returns per-cell occupancy of the full-corpus assignment plus the
     * chosen cell count: (cell, n, min_id, c_norm_milli, n_cells). All
-    * arithmetic is the exact-integer milli-unit chain of
-    * [[ivfTrainStats]], so the build is bit-stable across engines. */
+    * arithmetic is the exact-integer milli-unit Lloyd chain
+    * ([[lloydCent]] / [[lloydAssign]]), so the build is bit-stable
+    * across engines. */
   /** The shared sampled-Lloyd train: (checkpointed quantized corpus,
     * trained centroid frame, chosen cell count). */
   private def ivfAutoTrained(emb: DataFrame, idCol: String, vecCol: String,
@@ -426,8 +412,7 @@ object Similarity {
 
   /** A trained scale-adaptive IVF index held as checkpointed frames —
     * build ONCE ([[ivfAutoTrain]]), serve stats / search / probe-curve /
-    * recall from the same frames (the `*From` consumers), persist with
-    * [[IvfIndex.build]]. `assigned` is the full-corpus argmax assignment
+    * recall from the same frames (the `*From` consumers). `assigned` is the full-corpus argmax assignment
     * (vid, cell, xq, dxx, dcc): every consumer's candidate frame, so no
     * consumer ever replays training or the corpus-wide centroid cross. */
   final case class TrainedIvf(quant: DataFrame, centArr: DataFrame,
@@ -437,8 +422,7 @@ object Similarity {
     * ([[ivfAutoTrained]]) + ONE broadcast-centroids assignment scan of
     * the full corpus, both checkpointed. This is the frame the four
     * sim_ivf_auto* registry entries share (one train per session per
-    * dataset, not one per entry) and the exact content
-    * [[IvfIndex.build]] persists. */
+    * dataset, not one per entry). */
   def ivfAutoTrain(emb: DataFrame, idCol: String, vecCol: String,
                    sampleFactor: Int = 8): TrainedIvf = {
     val (quant, cent, cells) = ivfAutoTrained(emb, idCol, vecCol, sampleFactor)
@@ -492,12 +476,6 @@ object Similarity {
       .orderBy(col("cos_bp").desc, col(idCol))
       .limit(k)
   }
-
-  def ivfAutoSearch(emb: DataFrame, idCol: String, vecCol: String,
-                    queryId: Long, k: Int, nprobe: Int,
-                    sampleFactor: Int = 8): DataFrame =
-    ivfAutoSearchFrom(ivfAutoTrain(emb, idCol, vecCol, sampleFactor),
-      idCol, queryId, k, nprobe)
 
   /** BATCHED multi-query search — the production retrieval shape (one
     * request carries Q queries, not one): all Q query rows rank their
@@ -651,22 +629,10 @@ object Similarity {
     pts.reduce(_ unionByName _).orderBy(col("nprobe"))
   }
 
-  def ivfTrainStats(emb: DataFrame, idCol: String, vecCol: String,
-                    cells: Int, iters: Int = 1): DataFrame = {
-    require(iters >= 1, "ivfTrainStats: iters must be >= 1")
-    val quant = quantized(emb, idCol, vecCol)
-    // round 0: float-cosine assignment to the hash-sampled raw seeds
-    var assign = ivfAssign(emb, idCol, vecCol, cells)
-      .select(col(idCol).as("vid"), col("cell"))
-    for (_ <- 1 to iters)
-      assign = lloydAssign(quant, lloydCent(quant, assign))
-    ivfStatsFrom(assign)
-  }
-
-  /** The per-cell stats tail of [[ivfTrainStats]] over a (vid, cell,
-    * dcc) assignment — split out so a session-shared Lloyd-round chain
-    * ([[graft.queries.LloydShared]]) can serve several iteration
-    * depths. c_norm in integer MILLI-UNITS: floor over an IEEE-exact
+  /** Per-cell IVF training stats over a (vid, cell, dcc) Lloyd-round
+    * assignment (the session-shared chain of
+    * [[graft.queries.LloydShared]] serves several iteration depths):
+    * (cell, n, min_id, c_norm_milli). c_norm in integer MILLI-UNITS: floor over an IEEE-exact
     * sqrt of the exact integer dcc — round(double, 4) emission (the r6
     * hash-break class) never appears. */
   private[graft] def ivfStatsFrom(assign: DataFrame): DataFrame =
@@ -675,25 +641,12 @@ object Similarity {
         floor(sqrt(max(col("dcc")).cast("double"))).cast("long").as("c_norm_milli"))
       .orderBy(col("cell"))
 
-  /** K-means convergence audit: per cell, the L1 centroid movement
-    * (milli-units) between Lloyd round 1 and round 2, plus the worst
-    * single-dimension shift and the round-2 member count — the "has
-    * training settled" readout an IVF index build gates its stop
-    * condition on. Exactly the ivfTrainStats rounds (shared lloydCent /
-    * lloydAssign kernels), diffed instead of discarded. */
-  def ivfCentroidDrift(emb: DataFrame, idCol: String, vecCol: String,
-                       cells: Int): DataFrame = {
-    val quant = quantized(emb, idCol, vecCol)
-    val a0 = ivfAssign(emb, idCol, vecCol, cells)
-      .select(col(idCol).as("vid"), col("cell"))
-    val cent1 = lloydCent(quant, a0).localCheckpoint(true) // read by a1 AND the diff
-    val a1 = lloydAssign(quant, cent1)
-    val cent2 = lloydCent(quant, a1)
-    ivfCentroidDriftFrom(cent1, cent2)
-  }
-
-  /** The diff tail of [[ivfCentroidDrift]] over two (cell, d, cq, n)
-    * centroid rounds — split out for the shared Lloyd-round chain. */
+  /** K-means convergence audit over two (cell, d, cq, n) centroid
+    * rounds of the shared Lloyd-round chain: per cell, the L1 centroid
+    * movement (milli-units) between the rounds, the worst
+    * single-dimension shift and the later round's member count — the
+    * "has training settled" readout an IVF index build gates its stop
+    * condition on. */
   private[graft] def ivfCentroidDriftFrom(cent1: DataFrame,
                                           cent2: DataFrame): DataFrame =
     cent1.select(col("cell"), col("d"), col("cq").as("cq1"))
@@ -797,7 +750,7 @@ object Similarity {
     * milli-unit integer arithmetic: one posexplode + one (label, dim)
     * aggregate + one per-label rollup, all map-side-combinable, so a
     * 100 TB corpus pools in two shuffles of label-keyed partial sums.
-    * Truncating integer mean — same division contract as ivfTrainStats.
+    * Truncating integer mean — same division contract as [[lloydCent]].
     * Output: (label, n, c_norm_milli, c0_milli). */
   def centroidStats(emb: DataFrame, vecCol: String, labelCol: String): DataFrame = {
     val cent = emb
@@ -884,18 +837,9 @@ object Similarity {
     * approximate distance is the sum of its codes' table entries — an
     * equi-join + keyed sum, no vector math on the scored side at all.
     * Exact integer arithmetic end-to-end, so the ranking (asc distance,
-    * id tiebreak) is engine-reproducible. */
-  def pqSearchAdc(emb: DataFrame, idCol: String, vecCol: String,
-                  queryId: Long, k: Int, dim: Int, subs: Int,
-                  codebook: Int): DataFrame = {
-    val seeds = pqSeeds(emb, idCol, vecCol, codebook)
-    val codes = pqCodes(emb, idCol, vecCol, dim, subs, seeds)
-    pqSearchAdcWith(emb, idCol, vecCol, queryId, k, dim, subs, seeds, codes)
-  }
-
-  /** [[pqSearchAdc]] over a PREBUILT (seeds, codes) pair — the variant
-    * the registry feeds from [[graft.queries.PqShared]] so one encode
-    * serves every PQ consumer in a session. */
+    * id tiebreak) is engine-reproducible. `seeds`/`codes` come prebuilt
+    * (the registry feeds them from [[graft.queries.PqShared]] so one
+    * encode serves every PQ consumer in a session). */
   def pqSearchAdcWith(emb: DataFrame, idCol: String, vecCol: String,
                       queryId: Long, k: Int, dim: Int, subs: Int,
                       seeds: DataFrame, codes: DataFrame): DataFrame = {
@@ -919,25 +863,12 @@ object Similarity {
     * and scores through the PRECOMPUTED codeword-to-codeword table
     * (codebook²×subs rows, broadcast) — the mode a disk-resident index
     * uses when the query arrives already encoded, trading a second
-    * quantization error for a query-independent LUT. One seeds+codes
-    * build feeds both paths (codes checkpointed once); each path is a
+    * quantization error for a query-independent LUT. One prebuilt
+    * seeds+codes pair feeds both paths (`codes` must already be
+    * materialized — both paths read it); each path is a
     * broadcast-LUT equi-join + keyed sum, top-k via TakeOrdered, rank
     * assigned over the k-row result only. Output: (method, rank, id,
     * dist) — the rank-agreement readout IS the emitted comparison. */
-  def pqAdcSdcCompare(emb: DataFrame, idCol: String, vecCol: String,
-                      queryId: Long, k: Int, dim: Int, subs: Int,
-                      codebook: Int): DataFrame = {
-    val seeds = pqSeeds(emb, idCol, vecCol, codebook)
-    // checkpoint: the codes feed BOTH scoring paths below
-    val codes = pqCodes(emb, idCol, vecCol, dim, subs, seeds)
-      .localCheckpoint(true)
-    pqAdcSdcCompareWith(emb, idCol, vecCol, queryId, k, dim, subs,
-      seeds, codes)
-  }
-
-  /** [[pqAdcSdcCompare]] over a PREBUILT (seeds, codes) pair — `codes`
-    * must already be materialized (checkpointed); both scoring paths
-    * read it. */
   def pqAdcSdcCompareWith(emb: DataFrame, idCol: String, vecCol: String,
                           queryId: Long, k: Int, dim: Int, subs: Int,
                           seeds: DataFrame, codes: DataFrame): DataFrame = {
@@ -976,7 +907,7 @@ object Similarity {
 
   /** One training round for the PQ codebook — upgrading the hash-sampled
     * codewords to genuinely trained per-subspace centroids, exactly the
-    * way [[ivfTrainStats]] upgrades the IVF seeds, and under the same
+    * way the Lloyd rounds ([[lloydCent]]) upgrade the IVF seeds, and under the same
     * reproducibility contract: per-(subspace, codeword, dim) centroid
     * means are exact milli-unit integer sums + one truncating division,
     * re-assignment is an integer L2 argmin with a codeword-id tiebreak.
@@ -986,14 +917,8 @@ object Similarity {
     * re-encode; codebooks are broadcast at every step (subs·codebook
     * rows). Returns the post-training assignment census per (sub, code):
     * (sub, code, n, min_id, c_norm_milli) — codewords that attract no vectors
-    * drop out, mirroring k-means cluster death. */
-  def pqTrainStats(emb: DataFrame, idCol: String, vecCol: String,
-                   dim: Int, subs: Int, codebook: Int): DataFrame =
-    pqTrainStatsWith(emb, idCol, vecCol, dim, subs,
-      pqSeeds(emb, idCol, vecCol, codebook))
-
-  /** [[pqTrainStats]] over a PREBUILT seed codebook — see
-    * [[pqSearchAdcWith]]. */
+    * drop out, mirroring k-means cluster death. `seeds` is the prebuilt
+    * codebook; `codesOpt` its already-materialized encode, if any. */
   def pqTrainStatsWith(emb: DataFrame, idCol: String, vecCol: String,
                        dim: Int, subs: Int, seeds: DataFrame,
                        codesOpt: Option[DataFrame] = None): DataFrame = {
@@ -1049,17 +974,7 @@ object Similarity {
     * canonical billion-scale ANN shape: the inverted file bounds the
     * candidate set, the product quantizer bounds the bytes touched per
     * candidate. Exact integer ADC arithmetic keeps the ranking
-    * engine-reproducible. */
-  def ivfPqSearch(emb: DataFrame, idCol: String, vecCol: String,
-                  queryId: Long, k: Int, cells: Int, dim: Int, subs: Int,
-                  codebook: Int): DataFrame = {
-    val seeds = pqSeeds(emb, idCol, vecCol, codebook)
-    val codes = pqCodes(emb, idCol, vecCol, dim, subs, seeds)
-    ivfPqSearchWith(emb, idCol, vecCol, queryId, k, cells, dim, subs,
-      seeds, codes)
-  }
-
-  /** [[ivfPqSearch]] over a PREBUILT (seeds, codes) pair; `assignedOpt`
+    * engine-reproducible. `seeds`/`codes` come prebuilt; `assignedOpt`
     * optionally supplies an already-materialized (idCol, cell) IVF
     * assignment so an audit computing both the search and its exact
     * twin pays the coarse quantizer once. */

@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared sketch hashing kernels. ONE definition serves the batch query
-  * (Round9b.q_cms_heavy) and the streaming twin
-  * (StreamOps.cmsSketchStream), so the stream can never silently drift
-  * from the oracle-checked query it mirrors.
+  * (Round9b.q_cms_heavy) and its probes, so the sketch build and its
+  * readers can never silently drift from each other.
   *
   * All hashing goes through md5 hex nibbles — engine-portable (DuckDB
   * reproduces it via [[h3Sql]]'s strpos expansion), deterministic, and
@@ -70,8 +69,7 @@ object Sketch {
     * mergeable quantile-approximation state: two sub-streams' vectors
     * merge by adding the sums and min/max-ing the extremes, so 1000
     * executors combine per-group O(1) state without reshuffling rows.
-    * ONE definition serves q_moment_sketch and momentSketchStream (the
-    * same groupBy becomes a stateful streaming aggregate).
+    * The same groupBy runs unchanged as a stateful streaming aggregate.
     *
     * OVERFLOW BOUND: the powers and sums accumulate in DECIMAL(38,0),
     * never raw long arithmetic — q⁴ up to |q| ≈ 3·10⁹ and group sums up
@@ -113,8 +111,8 @@ object Sketch {
     * leading-zero rank (rho = 25 − length(bin(rem)) on the 24-bit
     * remainder — all integer via bin()). Registers MAX-merge across
     * sub-streams/executors; ≤256 rows of state no matter the volume.
-    * ONE definition serves q_hll_sketch and hllRegistersStream (a
-    * streaming groupBy-max over the same cells). Returns (bucket, m). */
+    * The same groupBy-max runs unchanged as a streaming aggregate.
+    * Returns (bucket, m). */
   def hllRegisters(keyed: org.apache.spark.sql.DataFrame,
                    keyCol: String): org.apache.spark.sql.DataFrame =
     keyed

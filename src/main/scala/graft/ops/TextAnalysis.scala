@@ -110,23 +110,16 @@ object TextAnalysis {
   def bpeTokenCount(c: Column): Column =
     size(regexp_extract_all(c, lit(bpePattern), lit(0))).cast("long")
 
-  /** Bag-of-words fingerprint: md5 over the sorted distinct token set.
-    * Catches word-order-permuted duplicates. */
-  def bowFingerprint(c: Column): Column = bowFingerprintOf(tokens(c))
-
-  /** [[bowFingerprint]] from an already-split token-array column. */
+  /** Bag-of-words fingerprint of an already-split token-array column: md5
+    * over the sorted distinct token set. Catches word-order-permuted
+    * duplicates. */
   def bowFingerprintOf(toks: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(toks))))
 
-  /** Winnowing-style fingerprint: minimum md5 over word-3-gram shingles
-    * (native codegen'd kernel — the `array_min(transform(..., md5))` HOF
-    * form is CodegenFallback). Hot paths should project `tokens(text)`
-    * first and call [[minShingleFingerprintOf]] — see [[shinglesOf]]. */
-  def minShingleFingerprint(c: Column, n: Int = 3): Column =
-    minShingleFingerprintOf(tokens(c), n)
-
-  /** [[minShingleFingerprint]] from an already-split token-array column
-    * (linear: the shingle HOF walks a materialized attribute). */
+  /** Winnowing-style fingerprint of an already-split token-array column:
+    * minimum md5 over word-n-gram shingles (native codegen'd kernel — the
+    * `array_min(transform(..., md5))` HOF form is CodegenFallback; linear,
+    * because the shingle HOF walks a materialized attribute). */
   def minShingleFingerprintOf(toks: Column, n: Int = 3): Column =
     graft.functions.TextFunctions.md5Min(shinglesOf(toks, n))
 

@@ -427,7 +427,7 @@ object Analytics extends Module {
         .orderBy(col("n").desc, col("user_id"))
     }),
 
-    // Batch twin of streaming heavyHittersStream: top-3 event types per
+    // Heavy hitters: top-3 event types per
     // tumbling hour by exact count (rank window runs over the hour×type
     // AGGREGATE — a few rows per hour — never over raw events).
     "events_heavy_hitters" -> ((s, dir) => {

@@ -27,7 +27,7 @@ object LloydShared {
       val quant = graft.Caches.shared(
         Similarity.quantized(emb, "vec_id", "embedding"))
       // round 0: float-cosine assignment to the hash-sampled raw seeds
-      // (identical to the opening step of ivfTrainStats/ivfCentroidDrift)
+      // (Similarity.ivfAssign, the opening step of every IVF train)
       val a0 = Similarity.ivfAssign(emb, "vec_id", "embedding", 8)
         .select(col("vec_id").as("vid"), col("cell"))
       val cent1 = graft.Caches.shared(Similarity.lloydCent(quant, a0))

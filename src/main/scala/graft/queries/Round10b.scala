@@ -152,7 +152,7 @@ object Round10b extends Module {
     // oracle replays it with one flat window; verification is per-pair
     // trigram Jaccard ≥ 0.5 as integer cross-multiplication over the
     // already-carried shingle arrays — no second shuffle.
-    // Kernel = graft.ops.Dedup.snmPairs.
+    // Kernel = graft.ops.Dedup.snmPairsDist.
     "dedup_sorted_neighborhood" -> ((s, dir) =>
       // the w=2 semantics read off the SHARED w=4 tagged build
       // (SnmShared): a pair's global-order offset is window-invariant

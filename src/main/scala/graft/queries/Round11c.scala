@@ -19,8 +19,8 @@ object Round11c extends Module {
     // codeword×codeword LUT) top-10, side by side — the rank-agreement
     // readout that says what the second quantization error costs. One
     // seeds+codes build feeds both paths (checkpointed); each path is a
-    // broadcast-LUT equi-join + keyed sum. Kernel shared with the spec
-    // via Similarity.pqAdcSdcCompare; seeds + codes from the shared
+    // broadcast-LUT equi-join + keyed sum. Kernel:
+    // Similarity.pqAdcSdcCompareWith; seeds + codes from the shared
     // PqShared build (encode once, serve every PQ entry).
     "sim_pq_adc_sdc" -> ((s, dir) =>
       Similarity.pqAdcSdcCompareWith(Tables.embeddings(s, dir), "vec_id",

@@ -100,7 +100,7 @@ object Round12 extends Module {
     // Recall@10 of the scale-adaptive index vs exact cosine — the eval
     // number that says what the sqrt(n) candidate bound costs: exact
     // top-10 (one corpus scan vs the broadcast query vector) against
-    // ivfAutoSearch's nprobe = 2 picks; emits the sim_recall_audit
+    // the index's nprobe = 2 picks; emits the sim_recall_audit
     // shape (k_exact, n_ann, hits, recall_bp), all counts over
     // checkpointed <=10-row frames.
     "sim_ivf_auto_recall" -> ((s, dir) => {
@@ -244,9 +244,8 @@ object Round12 extends Module {
         .orderBy(col("day"))
     }),
 
-    // The corpus-rewrite decision table, oracle-gated (the pipeline
-    // composition graft.etl.Pipelines.corpusRewrite executes it; this
-    // query makes the dedup-drop plan itself hash-checked): per near-dup
+    // The corpus-rewrite decision table, oracle-gated (the dedup-drop
+    // plan of a corpus rewrite, hash-checked): per near-dup
     // cluster the member count, the LONGEST-keeper pick (ties -> min
     // id) and the exact chars kept vs dropped. Clusters ride the
     // build-once shared t = 0.5 pair index; one rollup over the member

@@ -128,8 +128,8 @@ object Round17 extends Module {
     // Two-tier IVFADC + refine IN the hash gate: the query's IVF cell
     // bounds candidates, ADC over codes shortlists 40, and ONLY those
     // 40 ids' full-precision vectors are re-scored by the exact
-    // integer cosine — the serving composition searchPqRerank runs
-    // against the store, here in its stateless oracle-checkable form.
+    // integer cosine — the two-tier serving composition in its
+    // stateless oracle-checkable form.
     // Raw-vector reads after the coarse+code tiers: O(shortlist).
     "sim_ivf_pq_rerank" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)

@@ -456,8 +456,8 @@ object Round9b extends Module {
     // cross-mult 2·|∩| ≥ |∪|. At 100 TB the daily batch joins a
     // precomputed history index; nothing here rescans history pairs.
     "dedup_incremental" -> ((s, dir) => {
-      // the kernel lives in graft.ops.IncrementalDedup.verdictsInline,
-      // twinned by the persisted-index production component (buildIndex/verdicts/append). r18: the k=8 MinHash
+      // the kernel lives in graft.ops.IncrementalDedup.verdictsInline.
+      // r18: the k=8 MinHash
       // signatures come as pmod row filters of the session-shared
       // full-corpus frame (LshShared.sigs8) instead of re-tokenizing and
       // re-signing the 80% history slice inside this plan — per-doc

@@ -723,7 +723,7 @@ object SimMm extends Module {
     * assignment, re-assigns by integer-dot cosine into a(i). comp2 (the
     * milli-unit quantized components) and dxx are iteration-invariant and
     * hoisted; each round is textually identical modulo its index, exactly
-    * like the Scala loop in Similarity.ivfTrainStats. */
+    * like the Scala rounds of LloydShared. */
   /** The Lloyd-training CTE chain through `iters` rounds (cent$i / dcc$i /
     * a$i per round) — shared by the train-stats oracles and the
     * centroid-drift oracle so the replayed rounds cannot diverge. */
@@ -1099,8 +1099,8 @@ object SimMm extends Module {
     // Lloyd rounds: milli-unit integer means (// truncates like the
     // Spark-side `(sx - sx % n) / n`), integer dot-product re-assignment.
     // The CTE chain is GENERATED per iteration so the 1- and 2-round
-    // oracles can't drift from each other (mirrors the Scala loop in
-    // Similarity.ivfTrainStats).
+    // oracles can't drift from each other (mirrors the Scala rounds of
+    // LloydShared).
     "sim_ivf_train" -> ivfTrainSql(1),
     "sim_ivf_train2" -> ivfTrainSql(2),
 

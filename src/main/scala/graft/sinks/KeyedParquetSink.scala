@@ -226,21 +226,6 @@ object KeyedParquetSink {
       keepEmptySchema(spark, path, df.schema)
   }
 
-  /** Append a batch into the keyed layout (streaming-append / batched-
-    * load shape): rows land in their key buckets WITHOUT touching
-    * existing files, so each batch adds ≥1 file per touched bucket —
-    * the small-file accretion [[Compaction]] exists to clean up. Use
-    * [[upsert]] when keys may repeat across batches; append trusts the
-    * caller's batches to be key-disjoint. */
-  def append(df: DataFrame, path: String, keys: Seq[String],
-             numBuckets: Int): Unit = {
-    validateBuckets(df.sparkSession, path, numBuckets)
-    withBucket(df, keys, numBuckets)
-      .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode("append").parquet(path)
-    writeMeta(df.sparkSession, path, numBuckets)
-  }
-
   /** Read the table back (bucket column dropped): every bucket directory
     * of one driver listing, under the footer schema, so no schema job runs
     * before the caller's. Past `parallelPartitionDiscoveryThreshold` (32)
@@ -271,19 +256,6 @@ object KeyedParquetSink {
     scan(spark, path, schema, present).drop(BucketCol)
   }
 
-  /** Write as a BUCKETED catalog table (bucketBy + sortBy on the key):
-    * two tables bucketed the same way join WITHOUT any shuffle — the
-    * co-located fact-fact join that makes repeated large joins cheap at
-    * 100 TB. Requires the session catalog (saveAsTable); plain
-    * `write.parquet` cannot persist bucketing metadata. */
-  def writeBucketed(df: DataFrame, table: String, keys: Seq[String],
-                    numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** MERGE-like upsert: last-write-wins on `keys`, ties between multiple
     * updates for one key broken by `versionCols` descending. Only the
     * partitions containing updated keys are read and rewritten. */
@@ -312,69 +284,29 @@ object KeyedParquetSink {
                 versionCols: Seq[String] = Nil): Unit = {
     validateBuckets(spark, path, numBuckets)
     val up = withBucket(source, keys, numBuckets)
-    rewriteBuckets(spark, path, bucketsOf(up)) { base =>
-      graft.etl.Merge.merge(
-        base.repartition(col(BucketCol)),
-        up.repartition(col(BucketCol)),
-        BucketCol +: keys, updateMatched, insertUnmatched, deleteCond, versionCols)
-    }
-  }
-
-  /** Row-level DELETE against a NON-unique keyed table (one the MERGE
-    * path cannot serve: `keys` here is a layout key like the IVF cell,
-    * shared by many rows, so a keyed merge would collapse them). Rows of
-    * `victims` identify their targets by `matchCols`; victims must ALSO
-    * carry the `keys` columns, which prune the rewrite — only the
-    * bucket directories the victims' keys hash into are read,
-    * anti-joined on `matchCols`, and dynamic-partition-overwritten, so
-    * an erasure batch costs |touched buckets| / numBuckets of the table,
-    * never a full rewrite. A bucket whose rows were ALL victims is
-    * dropped explicitly (the same resurrection blind spot mergeInto
-    * covers). Untouched bucket directories are never opened or
-    * rewritten. Idempotent: re-deleting the same victims matches
-    * nothing. Returns the number of rows removed, counted as the rows
-    * read minus the rows written. */
-  def deleteMatching(spark: SparkSession, path: String, keys: Seq[String],
-                     numBuckets: Int, victims: DataFrame,
-                     matchCols: Seq[String]): Long = {
-    validateBuckets(spark, path, numBuckets)
-    val vb = withBucket(victims, keys, numBuckets)
-    val readN, keptN = org.apache.spark.sql.Observation()
-    val wrote = rewriteBuckets(spark, path, bucketsOf(vb)) { base =>
-      base.observe(readN, count(lit(1)).as("n"))
-        .join(vb.select(matchCols.map(col): _*), matchCols, "left_anti")
-        .repartition(col(BucketCol))
-        .observe(keptN, count(lit(1)).as("n"))
-    }
-    if (!wrote) 0L
-    else readN.get("n").asInstanceOf[Long] - keptN.get("n").asInstanceOf[Long]
-  }
-
-  /** The read/rewrite core of [[mergeInto]] and [[deleteMatching]]:
-    * `rewrite` turns the rows of the `touched` bucket directories that
-    * exist (with `_bucket`) into their replacement, hash-partitioned on
-    * `_bucket` so each bucket is written as one file, and that
-    * dynamic-partition-overwrites just those buckets. Dynamic overwrite
-    * only replaces partitions PRESENT in the output: a touched bucket
-    * whose rows were ALL deleted writes nothing, and its stale directory
-    * would resurrect the deleted keys. Its data file names are the ones
-    * it had before the overwrite, so it is found and deleted. Returns
-    * false, having written nothing, when no bucket is touched. */
-  private def rewriteBuckets(spark: SparkSession, path: String, touched: Seq[Int])
-                            (rewrite: DataFrame => DataFrame): Boolean = {
-    if (touched.isEmpty) return false
+    val touched = bucketsOf(up)
+    if (touched.isEmpty) return
     val (fs, present, schema) = locate(spark, path, touched)
     val before = present.map(d => d -> dataFiles(fs, d))
-    rewrite(scan(spark, path, schema, present))
+    // hash-partitioned on `_bucket`, so each bucket is written as one
+    // file and the overwrite replaces just the touched buckets
+    graft.etl.Merge.merge(
+        scan(spark, path, schema, present).repartition(col(BucketCol)),
+        up.repartition(col(BucketCol)),
+        BucketCol +: keys, updateMatched, insertUnmatched, deleteCond, versionCols)
       .write.partitionBy(BucketCol).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(path)
+    // dynamic overwrite only replaces partitions PRESENT in the output: a
+    // touched bucket whose rows were ALL deleted writes nothing, and its
+    // stale directory would resurrect the deleted keys. Its data file
+    // names are the ones it had before the overwrite, so it is found and
+    // deleted.
     val emptied = before.collect { case (d, files) if dataFiles(fs, d) == files => d }
     emptied.foreach(fs.delete(_, true))
-    // a rewrite that deleted the table's last rows must leave a
+    // a merge that deleted the table's last rows must leave a
     // schema-bearing empty file, or the next read fails inference
     if (emptied.nonEmpty && bucketDirs(fs, new Path(path)).isEmpty)
       keepEmptySchema(spark, path, schema)
-    true
   }
 }

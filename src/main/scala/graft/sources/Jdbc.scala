@@ -14,9 +14,7 @@ import org.apache.spark.sql.types._
   * over a 4-connection pool. The Spark-native shape is the JDBC DataSource
   * with *pushdown*: filters on the returned frame compile into the remote
   * WHERE clause and `numPartitions`/`partitionColumn` split the scan into
-  * concurrent range queries (the pool, but planned by the engine). For a
-  * key-list extract, [[readPredicates]] issues one remote query per
-  * predicate — the reference's per-reference_no loop, parallelized.
+  * concurrent range queries (the pool, but planned by the engine).
   *
   * WRITE — the reference loads via batched
   * `INSERT … ON DUPLICATE KEY UPDATE` with retry ×3 + delay per batch
@@ -31,42 +29,6 @@ import org.apache.spark.sql.types._
   * only |changed rows| / numPartitions flows through each connection.
   */
 object Jdbc {
-
-  /** Env-driven pool config ≡ the reference's config/db.js loader: the
-    * `SOURCE_`/`TARGET_`-prefixed variable family (<P>DB_HOST /
-    * <P>DB_USER / <P>DB_PASSWORD / <P>DB_NAME) becomes a MySQL JDBC
-    * url + option map carrying the same fixed pool settings the
-    * reference hardcodes (connectionLimit 10 → the numPartitions cap
-    * for [[readPartitioned]]/[[upsert]], connectTimeout 10000 ms,
-    * utf8mb4). Credentials stay OUT of the url (option map / connection
-    * properties), so they never land in plans or logs. */
-  final case class EnvPool(url: String, user: Option[String],
-                           password: Option[String],
-                           connectionLimit: Int = 10,
-                           connectTimeoutMs: Int = 10000) {
-    /** Options for `spark.read.format("jdbc").options(...)`. */
-    def options: Map[String, String] =
-      Map("url" -> url, "connectTimeout" -> connectTimeoutMs.toString) ++
-        user.map("user" -> _) ++ password.map("password" -> _)
-  }
-
-  /** Load a pool from the environment; `prefix` is "SOURCE_" or
-    * "TARGET_" (config/db.js:5-19, 21-35). Missing host/name fail
-    * loudly with the exact variable names — the reference would pass
-    * `undefined` into the driver and fail later, opaquely. `env` is
-    * injectable for tests. */
-  def fromEnv(prefix: String,
-              env: Map[String, String] = sys.env): EnvPool = {
-    def req(k: String): String = env.getOrElse(prefix + k,
-      throw new IllegalArgumentException(
-        s"jdbc fromEnv: missing env var $prefix$k"))
-    val host = req("DB_HOST")
-    val db = req("DB_NAME")
-    EnvPool(
-      url = s"jdbc:mysql://$host/$db?characterEncoding=utf8mb4",
-      user = env.get(prefix + "DB_USER"),
-      password = env.get(prefix + "DB_PASSWORD"))
-  }
 
   /** Whole-table read with pushdown: `.where`/`.select` on the result
     * reach the remote engine (PushedFilters in the scan). */
@@ -87,15 +49,6 @@ object Jdbc {
       .option("lowerBound", lower).option("upperBound", upper)
       .option("numPartitions", numPartitions)
       .load()
-
-  /** One remote query per predicate string — the reference's per-key
-    * `WHERE reference_no = ?` loop (etlService.js:17-23) as explicit
-    * partition predicates. Caller chunks a key list into ≤ a few hundred
-    * predicates (e.g. `reference_no IN ('a','b',…)` per chunk). */
-  def readPredicates(spark: SparkSession, url: String, table: String,
-                     predicates: Seq[String]): DataFrame =
-    spark.read.jdbc(url, table, predicates.toArray,
-      new java.util.Properties())
 
   /** Changelog-driven incremental extract over JDBC — the EtlLogger page
     * + per-key select (models/EtlLogger.js:6-17, etlService.js:446-449)

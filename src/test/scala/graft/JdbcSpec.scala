@@ -93,15 +93,6 @@ class JdbcSpec extends AnyFunSuite {
     assert(df.count() === 4)
   }
 
-  test("readPredicates issues one remote query per predicate") {
-    seed()
-    val df = Jdbc.readPredicates(spark, url, "customers_src",
-      Seq("C_ID IN (1, 2)", "C_ID IN (3)"))
-    assert(df.rdd.getNumPartitions === 2)
-    assert(df.select("C_ID").collect().map(_.getLong(0)).sorted
-      === Array(1L, 2L, 3L))
-  }
-
   test("changelog-extract -> clean -> upsert round-trips into the target") {
     seed()
     // preload target with a stale row for key 1 and an untouched row 99
@@ -268,33 +259,5 @@ class JdbcSpec extends AnyFunSuite {
       Jdbc.upsert(df.withColumnRenamed("NAME", "evil name\""),
         url, "ok_tgt", Seq("C_ID"))
     }
-  }
-
-  test("fromEnv mirrors the reference's SOURCE_/TARGET_ pool contract") {
-    val env = Map(
-      "SOURCE_DB_HOST" -> "src.example.internal",
-      "SOURCE_DB_USER" -> "etl",
-      "SOURCE_DB_PASSWORD" -> "s3cret",
-      "SOURCE_DB_NAME" -> "vouchers",
-      "TARGET_DB_HOST" -> "tgt.example.internal",
-      "TARGET_DB_NAME" -> "warehouse")
-    val src = Jdbc.fromEnv("SOURCE_", env)
-    assert(src.url ==
-      "jdbc:mysql://src.example.internal/vouchers?characterEncoding=utf8mb4")
-    assert(src.user.contains("etl") && src.password.contains("s3cret"))
-    assert(src.connectionLimit == 10 && src.connectTimeoutMs == 10000,
-      "the reference's hardcoded pool settings carry over")
-    // credentials ride the option map, never the url
-    assert(!src.url.contains("s3cret") &&
-      src.options("user") == "etl" && src.options("password") == "s3cret")
-    // optional credentials may be absent (e.g. socket auth)
-    val tgt = Jdbc.fromEnv("TARGET_", env)
-    assert(tgt.user.isEmpty && tgt.password.isEmpty &&
-      !tgt.options.contains("user"))
-    // missing REQUIRED vars fail loudly with the exact variable name
-    val ex = intercept[IllegalArgumentException] {
-      Jdbc.fromEnv("SOURCE_", env - "SOURCE_DB_NAME")
-    }
-    assert(ex.getMessage.contains("SOURCE_DB_NAME"))
   }
 }

@@ -16,49 +16,4 @@ class PipelinesSpec extends AnyFunSuite {
     val r2 = Pipelines.referenceSync(spark, TestSpark.sf, target, numBuckets = 8)
     assert(r2.ok && KeyedParquetSink.read(spark, target).count() == n1)
   }
-
-  test("corpusRewrite: data-identical modulo dropped dups, idempotent, clustered") {
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_corpus").toString
-    val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
-    val r = Pipelines.corpusRewrite(spark, docs, s"$root/corpus",
-      numBuckets = 8, loadBatches = 4, targetBytes = 256L * 1024)
-    // 1. data-identical modulo dropped dups: the read-back table equals
-    // the source minus exactly the non-keeper cluster members, computed
-    // INDEPENDENTLY here (convergent components, longest keeper,
-    // ties → min id — the same closure the pipeline runs)
-    val labels = graft.ops.Dedup.connectedComponents(
-      graft.ops.Dedup.pairIndex(docs, "doc_id", "text", 3, 0.5))
-    val expectDrop = labels
-      .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-          .orderBy(col("n_chars").desc, col("id"))))
-      .where(col("rk") > 1).select(col("id")).collect().map(_.getLong(0)).toSet
-    assert(r.dupsDropped == expectDrop.size && r.rowsIn - r.rowsKept == r.dupsDropped)
-    val kept = KeyedParquetSink.read(spark, s"$root/corpus").drop("zk")
-    val diff = kept.exceptAll(docs.where(!col("doc_id").isin(
-      expectDrop.toSeq.map(Long.box): _*))).count() +
-      docs.where(!col("doc_id").isin(expectDrop.toSeq.map(Long.box): _*))
-        .exceptAll(kept).count()
-    assert(diff == 0, "read-back corpus == source minus non-keepers, row-exact")
-    // 2. compaction did real work on the batched load and shrank files
-    assert(r.filesBefore > r.filesAfter && r.partitionsCompacted > 0,
-      s"batched load must accrete files: ${r.filesBefore} -> ${r.filesAfter}")
-    assert(r.bytesAfter > 0 && r.filesAfter > 0)
-    // 3. clustered: every post-compaction file is zk-sorted (0 inversions)
-    val audit = Pipelines.layoutAudit(spark, s"$root/corpus").collect()
-    assert(audit.nonEmpty && audit.forall(a =>
-      a.getAs[Long]("inversions") == 0L),
-      "every rewritten file must be Z-order sorted")
-    // 4. idempotent: a second rewrite over the deduped corpus drops 0
-    // rows and reproduces the identical table
-    val r2 = Pipelines.corpusRewrite(spark, kept, s"$root/corpus2",
-      numBuckets = 8, loadBatches = 4, targetBytes = 256L * 1024)
-    assert(r2.dupsDropped == 0L && r2.rowsKept == r.rowsKept,
-      "keepers of distinct clusters are never near-dups: rerun is a no-op")
-    val kept2 = KeyedParquetSink.read(spark, s"$root/corpus2").drop("zk")
-    assert(kept2.exceptAll(kept).count() == 0 &&
-      kept.exceptAll(kept2).count() == 0, "rerun reproduces the table")
-  }
 }

@@ -3,7 +3,7 @@ package graft.etl
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 class RunnerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -37,7 +37,7 @@ class RunnerSpec extends AnyFunSuite {
     assert(report.results.head.attempts == 2 && report.results.head.error.contains("permanent"))
   }
 
-  /** An injected clock for runCron: `sleep` advances it instead of
+  /** An injected clock for the cron loop: `sleep` advances it instead of
     * waiting. */
   private class FakeClock {
     var now = java.time.LocalDateTime.of(2026, 1, 1, 0, 0, 30)
@@ -45,27 +45,37 @@ class RunnerSpec extends AnyFunSuite {
     def sleep(ms: Long): Unit = { slept += ms; now = now.plusNanos(ms * 1000000L) }
   }
 
-  test("runCron repeats the pipeline and collects every report") {
+  /** Run `stages` from the cron loop HttpShell's scheduler runs, at the
+    * next `iterations` fire times of `cronExpr`; the reports of the runs. */
+  private def cronRuns(stages: Seq[Runner.Stage], cronExpr: String, iterations: Int,
+                       clock: FakeClock,
+                       stop: AtomicBoolean = new AtomicBoolean(false)): Seq[Runner.RunReport] = {
+    val reports = Seq.newBuilder[Runner.RunReport]
+    Runner.cronLoop(Runner.cron(cronExpr, clock.now).toOption.get, iterations, stop,
+      () => clock.now, clock.sleep) {
+      reports += Runner.run(spark, stages, retries = 3, stop = stop)
+    }
+    reports.result()
+  }
+
+  test("cronLoop repeats the pipeline at each fire time") {
     val clock = new FakeClock
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => { calls.incrementAndGet(); Seq(1).toDF("x") }))
-    val reports = Runner.runCron(spark, stages, "* * * * *", iterations = 3,
-      now = () => clock.now, sleep = clock.sleep)
-    assert(reports.exists(r => r.size == 3 && r.forall(_.ok)) && calls.get() == 3)
-    assert(Runner.history.size >= 3)
+    val reports = cronRuns(stages, "* * * * *", 3, clock)
+    assert(reports.size == 3 && reports.forall(_.ok) && calls.get() == 3)
   }
 
-  test("the loop's own stop flag halts runCron between runs") {
+  test("the loop's own stop flag halts cronLoop between runs") {
     val clock = new FakeClock
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val stop = new AtomicBoolean(false)
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => {
       if (calls.incrementAndGet() == 1) stop.set(true)
       Seq(1).toDF("x")
     }))
-    val reports = Runner.runCron(spark, stages, "* * * * *", iterations = 10,
-      now = () => clock.now, sleep = clock.sleep, stop = stop)
-    assert(reports.exists(_.size == 1) && calls.get() == 1)
+    val reports = cronRuns(stages, "* * * * *", 10, clock, stop)
+    assert(reports.size == 1 && calls.get() == 1)
     // the flag is the loop's: a run that was not handed it is whole
     assert(Runner.run(spark, stages, retries = 1).results.size == 1)
   }
@@ -99,45 +109,45 @@ class RunnerSpec extends AnyFunSuite {
   test("Progress eviction structures stay bounded under re-begun stage names") {
     // the long-lived cron case: the SAME stage name begins forever — each
     // name holds exactly one order slot (move-to-back), so nothing grows
-    val base = Progress.orderSize
+    val base = Progress.snapshot().size
     (1 to 500).foreach(_ => Progress.begin("cron-recycled"))
-    assert(Progress.orderSize <= base + 1)
+    assert(Progress.snapshot().size <= base + 1)
     assert(Progress.of("cron-recycled").isDefined)
     // generated distinct names beyond the cap retire the stalest fully
     (1 to 300).foreach(i => Progress.begin(s"gen-bounded-$i"))
-    assert(Progress.orderSize <= 256)
+    assert(Progress.snapshot().size <= 256)
     assert(Progress.of("gen-bounded-300").isDefined)
   }
 
   test("Cron.parse validates patterns like the reference's cron.validate") {
-    assert(Cron.isValid("* * * * *"))
-    assert(Cron.isValid("*/15 0-6 1,15 * 1-5"))
-    assert(Cron.isValid("0 9 * * 7"))          // 7 ≡ Sunday
-    assert(!Cron.isValid("* * * *"))           // 4 fields
-    assert(!Cron.isValid("60 * * * *"))        // minute out of range
-    assert(!Cron.isValid("* * 0 * *"))         // dom starts at 1
-    assert(!Cron.isValid("*/0 * * * *"))       // zero step
-    assert(!Cron.isValid("5-1 * * * *"))       // inverted range
-    assert(!Cron.isValid("a * * * *"))
+    assert(Cron.parse("* * * * *").isRight)
+    assert(Cron.parse("*/15 0-6 1,15 * 1-5").isRight)
+    assert(Cron.parse("0 9 * * 7").isRight)    // 7 ≡ Sunday
+    assert(Cron.parse("* * * *").isLeft)       // 4 fields
+    assert(Cron.parse("60 * * * *").isLeft)    // minute out of range
+    assert(Cron.parse("* * 0 * *").isLeft)     // dom starts at 1
+    assert(Cron.parse("*/0 * * * *").isLeft)   // zero step
+    assert(Cron.parse("5-1 * * * *").isLeft)   // inverted range
+    assert(Cron.parse("a * * * *").isLeft)
     assert(Cron.parse("* * * *").left.exists(_.contains("5 fields")))
   }
 
   test("Cron node-cron parity: optional seconds field and month/day names") {
     import java.time.LocalDateTime
     // 6-field form: seconds validated for range, then floored
-    assert(Cron.isValid("0 */15 * * * *"))
-    assert(!Cron.isValid("60 * * * * *"))       // seconds out of range
-    assert(!Cron.isValid("* * * * * * *"))      // 7 fields
+    assert(Cron.parse("0 */15 * * * *").isRight)
+    assert(Cron.parse("60 * * * * *").isLeft)       // seconds out of range
+    assert(Cron.parse("* * * * * * *").isLeft)      // 7 fields
     val t = LocalDateTime.of(2026, 8, 12, 10, 7)
     def n(e: String, from: LocalDateTime = t) = Cron.parse(e).toOption.get.next(from)
     assert(n("30 */15 * * * *") == n("*/15 * * * *"))
     // 3-letter names, case-insensitive, in values and range endpoints
-    assert(Cron.isValid("0 9 * JAN-MAR MON-FRI"))
+    assert(Cron.parse("0 9 * JAN-MAR MON-FRI").isRight)
     assert(n("0 9 * * MON") == n("0 9 * * 1"))
     assert(n("0 0 1 jan *") == n("0 0 1 1 *"))
     assert(n("0 9 * * mon-fri") == n("0 9 * * 1-5"))
-    assert(!Cron.isValid("0 9 * XYZ *"))        // unknown name
-    assert(!Cron.isValid("0 MON * * *"))        // name in a numeric field
+    assert(Cron.parse("0 9 * XYZ *").isLeft)        // unknown name
+    assert(Cron.parse("0 MON * * *").isLeft)        // name in a numeric field
   }
 
   test("Cron vixie semantics: value/step expansion and star-with-step day rule") {
@@ -170,65 +180,16 @@ class RunnerSpec extends AnyFunSuite {
     assert(n("30 2 29 2 *") == LocalDateTime.of(2028, 2, 29, 2, 30))
   }
 
-  test("runCron fires at cron boundaries with injected clock") {
+  test("cronLoop fires at cron boundaries with injected clock") {
     val clock = new FakeClock
     val calls = new AtomicInteger(0)
     val stages = Seq(Runner.Stage("tick", s => { calls.incrementAndGet(); Seq(1).toDF("x") }))
-    val got = Runner.runCron(spark, stages, "*/10 * * * *", iterations = 2,
-      now = () => clock.now, sleep = clock.sleep)
-    assert(got.exists(_.size == 2) && calls.get() == 2)
+    assert(cronRuns(stages, "*/10 * * * *", 2, clock).size == 2 && calls.get() == 2)
     // 00:00:30 → 00:10 is 570s; 00:10 → 00:20 is 600s
     assert(clock.slept.result() == Seq(570000L, 600000L))
-    // invalid pattern is rejected up front, nothing runs
-    val bad = Runner.runCron(spark, stages, "61 * * * *", 1)
-    assert(bad.isLeft && calls.get() == 2)
-    // parse-valid but never-firing pattern stays on the error channel
-    val never = Runner.runCron(spark, stages, "0 0 30 2 *", 1, now = () => clock.now)
-    assert(never.left.exists(_.contains("never fires")) && calls.get() == 2)
-  }
-
-  test("streaming dispatchSink routes a mixed CDC stream into per-entity tables") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dispatch").toString
-    val input = MemoryStream[(String, Long, String, Long)]
-    val stream = input.toDF().toDF("table", "id", "payload", "ver")
-    val q = graft.streaming.StreamOps.dispatchSink(
-      stream, "table",
-      Map("cust" -> ((s"$dir/cust", Seq("id"), 4)),
-          "ord" -> ((s"$dir/ord", Seq("id"), 4))),
-      checkpoint = s"$dir/ckpt", versionCols = Seq("ver"))
-    input.addData(("cust", 1L, "a", 1L), ("ord", 1L, "x", 1L), ("zzz", 9L, "ignored", 1L))
-    q.processAllAvailable()
-    input.addData(("cust", 1L, "a2", 2L), ("ord", 2L, "y", 1L))
-    q.processAllAvailable()
-    q.stop()
-    val cust = graft.sinks.KeyedParquetSink.read(spark, s"$dir/cust")
-      .orderBy("id").as[(Long, String, Long)].collect().toSeq
-    val ord = graft.sinks.KeyedParquetSink.read(spark, s"$dir/ord")
-      .orderBy("id").as[(Long, String, Long)].collect().toSeq
-    assert(cust == Seq((1L, "a2", 2L)))                    // last write wins
-    assert(ord == Seq((1L, "x", 1L), (2L, "y", 1L)))       // routed separately
-    // the unconfigured 'zzz' row went nowhere
-    assert(!new java.io.File(s"$dir/zzz").exists())
-  }
-
-  test("streaming upsertSink converges the keyed table across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_supsert").toString
-    val input = MemoryStream[(Long, String, Long)]
-    val stream = input.toDF().toDF("id", "payload", "ver")
-    val q = graft.streaming.StreamOps.upsertSink(
-      stream, s"$dir/table", Seq("id"), numBuckets = 4,
-      checkpoint = s"$dir/ckpt", versionCols = Seq("ver"))
-    input.addData((1L, "a", 1L), (2L, "b", 1L))
-    q.processAllAvailable()
-    input.addData((2L, "b2", 2L), (3L, "c", 1L))
-    q.processAllAvailable()
-    q.stop()
-    val got = graft.sinks.KeyedParquetSink.read(spark, s"$dir/table")
-      .orderBy("id").as[(Long, String, Long)].collect().toSeq
-    assert(got == Seq((1L, "a", 1L), (2L, "b2", 2L), (3L, "c", 1L)))
+    // an invalid pattern is rejected up front, before any run
+    assert(Runner.cron("61 * * * *").isLeft)
+    // a parse-valid but never-firing pattern stays on the error channel
+    assert(Runner.cron("0 0 30 2 *", clock.now).left.exists(_.contains("never fires")))
   }
 }

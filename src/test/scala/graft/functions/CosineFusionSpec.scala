@@ -37,4 +37,29 @@ class CosineFusionSpec extends AnyFunSuite {
       .flatMap(_.collect { case c: VectorCosine => c })
     assert(fused.isEmpty)
   }
+
+  test("adopt plans a session without extensions like builder: fusion on, once") {
+    val vanilla = org.apache.spark.sql.graft.TestSessions.withoutExtensions(spark)
+    graft.GraftSession.adopt(vanilla)
+    graft.GraftSession.adopt(vanilla)
+    assert(vanilla.experimental.extraOptimizations.count(_ == CosineFusion) == 1,
+      "a second adopt adds nothing")
+    // a builder session has the rule from its extensions: adopt adds none
+    graft.GraftSession.adopt(spark)
+    assert(!spark.experimental.extraOptimizations.contains(CosineFusion))
+    // the adopted session fuses the hand-written form ...
+    val v = vanilla.createDataFrame(vecs.collect().toSeq.map(r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray))).toDF("id", "v")
+    val hand = v.as("l").crossJoin(v.as("r")).select(
+      (VectorFunctions.vecDot($"l.v", $"r.v") / (sqrt(VectorFunctions.vecDot($"l.v", $"l.v")) *
+        sqrt(VectorFunctions.vecDot($"r.v", $"r.v")))).as("cos"))
+    assert(hand.queryExecution.optimizedPlan.expressions
+      .exists(_.exists(_.isInstanceOf[VectorCosine])))
+    // ... and optimizes a registry cosine query to the builder's plan
+    // (expression ids and lambda-variable suffixes differ per session)
+    def plan(s: org.apache.spark.sql.SparkSession): String =
+      graft.SparkEntry.queries("sim_topk_brute")(s, graft.TestSpark.sf)
+        .queryExecution.optimizedPlan.treeString.replaceAll("(_\\d+)?#\\d+L?", "#")
+    assert(plan(vanilla) == plan(spark))
+  }
 }

@@ -21,14 +21,12 @@ class EdgeSpec extends AnyFunSuite {
     assert(Dedup.exactGroups(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.ngramJaccardPairs(emptyDocs, "doc_id", "text", 3, 0.5).count() == 0)
     assert(Dedup.ngramJaccardPairs(emptyDocs, "doc_id", "text", 3, 0.0).count() == 0)
-    assert(Dedup.containmentPairs(emptyDocs, "doc_id", "text", 3, 0.8).count() == 0)
     assert(Dedup.lshCandidatePairs(emptyDocs, "doc_id", "text", 8, 4).count() == 0)
     assert(Dedup.simhashBuckets(emptyDocs, "doc_id", "text").count() == 0)
   }
 
   test("dedup operators emit no pairs for a single document") {
     assert(Dedup.ngramJaccardPairs(oneDoc, "doc_id", "text", 3, 0.5).count() == 0)
-    assert(Dedup.containmentPairs(oneDoc, "doc_id", "text", 3, 0.8).count() == 0)
     assert(Dedup.lshCandidatePairs(oneDoc, "doc_id", "text", 8, 4).count() == 0)
     assert(Dedup.exactGroups(oneDoc, "doc_id", "text").count() == 1)
   }

@@ -4,14 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.queries.PqShared
-import graft.sinks.KeyedParquetSink
 
-/** The PQ-coded persisted ANN artifact: codes + codebook live beside the
-  * raw-vector buckets, ADC search reads CODES only (bucket-pruned to the
-  * probe cells), the optional exact re-rank refines the ADC shortlist
-  * from the raw buckets, and append/delete maintain both tiers. The
-  * store answers with the training corpus GONE, and the member-query
-  * path is bit-equal to the oracle-green inline sim_ivf_pq_search. */
+/** The PQ-coded persisted ANN store behind `sim_ivf_pq_store`: it
+  * answers with the training corpus GONE, and its member-query search
+  * is bit-equal to the oracle-green inline sim_ivf_pq_search. */
 class IvfIndexPqSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -22,21 +18,6 @@ class IvfIndexPqSpec extends AnyFunSuite {
   }
 
   private def emb = graft.sources.Tables.embeddings(spark, TestSpark.sf)
-
-  /** Build the member-servable store from the inline kernels' frames —
-    * exactly what the gated sim_ivf_pq_store entry persists. */
-  private def buildMemberStore(path: String): Unit = {
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", 8)
-      .select(col("vec_id").as("vid"), col("cell"))
-      .localCheckpoint(true)
-    val (seeds, codes) = PqShared.seedsCodes(spark, TestSpark.sf)
-    val quant = emb.select(col("vec_id").as("vid"),
-      Similarity.milliQuant(col("embedding")).as("xq"))
-    IvfIndex.buildPqStore(spark, quant, assigned, seeds,
-      codes.select(col("vec_id").as("vid"), col("sub"), col("code")),
-      path, subs = PqShared.Subs, dim = PqShared.Dim, numBuckets = 16)
-    ()
-  }
 
   test("store build → corpus deleted → searchPqById == inline ivfPqSearch") {
     val root = java.nio.file.Files.createTempDirectory("graft_pqst").toString
@@ -68,195 +49,6 @@ class IvfIndexPqSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == want,
       "stored ADC member search == inline sim_ivf_pq_search, in order")
-    deleteRec(root)
-  }
-
-  test("two-tier buildPq: external-query ADC == in-memory ADC over the " +
-      "same codes; rerank returns exact-cosine order of the shortlist") {
-    val root = java.nio.file.Files.createTempDirectory("graft_pq2").toString
-    val t = Similarity.ivfAutoTrain(emb, "vec_id", "embedding")
-    IvfIndex.buildPq(spark, t, s"$root/idx", codebook = PqShared.Codebook,
-      subs = PqShared.Subs, dim = PqShared.Dim, numBuckets = 16)
-    val qVec = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).head.getSeq[Float](0)
-
-    // in-memory expected: same seeds/codes derivation as buildPq, scored
-    // by ADC over the SAME candidate set (the query's nprobe=2 cells)
-    val quant = t.quant.select(col("vid"), col("xq").as("mq"))
-    val seeds = Similarity.pqSeedsQuant(quant, "vid", PqShared.Codebook)
-    val codes = Similarity.pqCodesQuant(quant, "vid", PqShared.Dim,
-      PqShared.Subs, seeds).localCheckpoint(true)
-    val probeCells = Similarity.lloydRankedArr(
-        t.quant.where(col("vid") === 0L), t.centArr)
-      .where(col("rn") <= 2).select(col("cell"))
-    val candIds = t.assigned
-      .join(broadcast(probeCells), Seq("cell"), "left_semi")
-      .where(col("vid") =!= 0L).select(col("vid"))
-    val subLen = PqShared.Dim / PqShared.Subs
-    val q = emb.where(col("vec_id") === 0L)
-      .select(Similarity.milliQuant(col("embedding")).as("qx"))
-    val lut = seeds.crossJoin(broadcast(q))
-      .select(col("code"), posexplode(array((0 until PqShared.Subs).map(s =>
-        graft.functions.LongVectorFunctions.vecL2SqSlice(
-          col("qx"), col("cq"), s * subLen, subLen)): _*))
-        .as(Seq("sub", "qd")))
-    val want = codes.join(broadcast(candIds), Seq("vid"), "left_semi")
-      .join(broadcast(lut), Seq("code", "sub"))
-      .groupBy(col("vid")).agg(sum(col("qd")).as("adist"))
-      .orderBy(col("adist").asc, col("vid")).limit(10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-    val got = IvfIndex.searchPqAdc(spark, s"$root/idx", qVec, 10,
-        nprobe = 2, numBuckets = 16, idCol = "vec_id",
-        excludeId = Some(0L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == want, "stored external-query ADC == in-memory ADC")
-
-    // re-rank: the shortlist's EXACT cosine order, from the raw buckets
-    val shortIds = got.map(_._1).toSet
-    val wantRr = Similarity.topKBrute(emb, "vec_id", "embedding", 0L, 1000)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .filter(x => shortIds.contains(x._1)).take(5).toSeq
-    val gotRr = IvfIndex.searchPqRerank(spark, s"$root/idx", qVec, 5,
-        nprobe = 2, shortlist = 10, numBuckets = 16, idCol = "vec_id",
-        excludeId = Some(0L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(gotRr == wantRr,
-      "rerank = exact integer cosine over the ADC shortlist, desc")
-    deleteRec(root)
-  }
-
-  test("searchPqBatch == per-query searchPqAdc; code scan is bucket-pruned") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pqb").toString
-    val t = Similarity.ivfAutoTrain(emb, "vec_id", "embedding")
-    IvfIndex.buildPq(spark, t, s"$root/idx", codebook = PqShared.Codebook,
-      subs = PqShared.Subs, dim = PqShared.Dim, numBuckets = 16)
-    val qs = emb.where(col("vec_id").isin(3L, 11L))
-      .select((col("vec_id") * -1L - 1L).as("qid"), col("embedding"))
-      .localCheckpoint(true) // external ids, disjoint from stored vids
-    val batch = IvfIndex.searchPqBatch(spark, s"$root/idx", qs, "qid",
-        "embedding", k = 5, nprobe = 2, numBuckets = 16, idCol = "vec_id")
-    batch.collect() // materialize so the executed plan is final
-    val perQuery = qs.collect().map { r =>
-      val qid = r.getLong(0)
-      val v = r.getSeq[Float](1)
-      qid -> IvfIndex.searchPqAdc(spark, s"$root/idx", v, 5, nprobe = 2,
-          numBuckets = 16, idCol = "vec_id")
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
-    }.toMap
-    val byQid = batch.collect()
-      .groupBy(_.getLong(0)).view
-      .mapValues(_.sortBy(_.getLong(3)).map(x => (x.getLong(1), x.getLong(2))).toSeq)
-      .toMap
-    assert(byQid == perQuery, "batched ADC == per-query ADC, per qid")
-
-    def leaves(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        leaves(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        leaves(q.plan)
-      case _ if p.children.isEmpty => Seq(p)
-      case _ => p.children.flatMap(leaves)
-    }
-    val single = IvfIndex.searchPqAdc(spark, s"$root/idx",
-      emb.where(col("vec_id") === 3L).select(col("embedding"))
-        .head.getSeq[Float](0), 5, nprobe = 2, numBuckets = 16)
-    single.collect()
-    val scans = leaves(single.queryExecution.executedPlan).collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata.get("Location").exists(_.contains("pq_codes")) =>
-        f.selectedPartitions.partitionCount
-    }
-    val totalBuckets = new java.io.File(s"$root/idx/pq_codes")
-      .listFiles.count(_.getName.startsWith("_bucket="))
-    assert(scans.nonEmpty && scans.forall(_ <= 2),
-      s"pq_codes scan must touch <= nprobe bucket partitions, got $scans")
-    assert(totalBuckets > 2, "the store has more buckets than were read")
-    deleteRec(root)
-  }
-
-  test("appendPq lands in both tiers; deletePq erases from both tiers") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pqad").toString
-    val t = Similarity.ivfAutoTrain(emb, "vec_id", "embedding")
-    IvfIndex.buildPq(spark, t, s"$root/idx", codebook = PqShared.Codebook,
-      subs = PqShared.Subs, dim = PqShared.Dim, numBuckets = 16)
-    val n0 = KeyedParquetSink.read(spark, s"$root/idx/vectors").count()
-
-    // append a shifted copy of vector 5 under a fresh id
-    val v5 = emb.where(col("vec_id") === 5L)
-      .select(col("embedding")).head.getSeq[Float](0)
-    val batch = Seq((900001L, v5)).toDF("vec_id", "embedding")
-    val appended = IvfIndex.appendPq(spark, batch, "vec_id", "embedding",
-      s"$root/idx", numBuckets = 16)
-    assert(appended == 1L)
-    assert(KeyedParquetSink.read(spark, s"$root/idx/vectors").count() == n0 + 1)
-    val packed = KeyedParquetSink.read(spark, s"$root/idx/pq_codes")
-      .where(col("vid") === 900001L)
-      .select(size(col("codes"))).collect().map(_.getInt(0)).toSeq
-    assert(packed == Seq(PqShared.Subs),
-      "append packs ONE sub-ordered code array for the new vector")
-    // a near-duplicate query must now surface the appended id by ADC
-    val hits = IvfIndex.searchPqAdc(spark, s"$root/idx", v5, 3, nprobe = 2,
-        numBuckets = 16, excludeId = Some(5L))
-      .collect().map(_.getLong(0)).toSeq
-    assert(hits.contains(900001L),
-      s"appended vector must be ADC-retrievable, got $hits")
-
-    // erase it (plus a pre-existing id): gone from BOTH tiers + search
-    val removed = IvfIndex.deletePq(spark, s"$root/idx",
-      Seq(900001L, 5L).toDF("vec_id"), "vec_id", numBuckets = 16)
-    assert(removed == 2L, s"two raw rows removed, got $removed")
-    assert(KeyedParquetSink.read(spark, s"$root/idx/vectors")
-      .where(col("vid").isin(900001L, 5L)).count() == 0)
-    assert(KeyedParquetSink.read(spark, s"$root/idx/pq_codes")
-      .where(col("vid").isin(900001L, 5L)).count() == 0)
-    val after = IvfIndex.searchPqAdc(spark, s"$root/idx", v5, 10,
-        nprobe = 2, numBuckets = 16)
-      .collect().map(_.getLong(0)).toSet
-    assert(!after.contains(900001L) && !after.contains(5L),
-      "erased ids can never be returned by a later search")
-    // idempotent
-    assert(IvfIndex.deletePq(spark, s"$root/idx",
-      Seq(900001L).toDF("vec_id"), "vec_id", 16) == 0L)
-    deleteRec(root)
-  }
-
-  test("append-churn maintenance: compaction over BOTH tiers leaves " +
-      "ADC search row-identical") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pqcmp").toString
-    val t = Similarity.ivfAutoTrain(emb, "vec_id", "embedding")
-    IvfIndex.buildPq(spark, t, s"$root/idx", codebook = PqShared.Codebook,
-      subs = PqShared.Subs, dim = PqShared.Dim, numBuckets = 16)
-    // 4 small appends accrete ~1 file per touched bucket each (the
-    // production ingest cadence)
-    (0 until 4).foreach { i =>
-      val b = emb.where(pmod(col("vec_id"), lit(31L)) === i.toLong)
-        .select((col("vec_id") + 1000000L * (i + 1)).as("vec_id"),
-          col("embedding"))
-      IvfIndex.appendPq(spark, b, "vec_id", "embedding", s"$root/idx", 16)
-    }
-    val qv = emb.where(col("vec_id") === 2L)
-      .select(col("embedding")).head.getSeq[Float](0)
-    def top(): Seq[(Long, Long)] =
-      IvfIndex.searchPqAdc(spark, s"$root/idx", qv, 10, nprobe = 2,
-          numBuckets = 16, excludeId = Some(2L))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val pre = top()
-    for (tier <- Seq("vectors", "pq_codes")) {
-      val before = graft.sinks.Compaction
-        .partitionStats(spark, s"$root/idx/$tier").map(_.nFiles.toLong).sum
-      graft.sinks.Compaction.compact(spark, s"$root/idx/$tier",
-        targetBytes = 64L * 1024 * 1024)
-      val after = graft.sinks.Compaction
-        .partitionStats(spark, s"$root/idx/$tier").map(_.nFiles.toLong).sum
-      assert(after < before,
-        s"$tier: compaction must merge the churn files ($before -> $after)")
-    }
-    assert(top() == pre, "ADC search identical through compaction")
     deleteRec(root)
   }
 }

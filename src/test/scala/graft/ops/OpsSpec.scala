@@ -30,7 +30,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("TextAnalysis.bowFingerprint is permutation-invariant") {
-    val fps = docs.select($"doc_id", TextAnalysis.bowFingerprint($"text").as("fp"))
+    val fps = docs.select($"doc_id", TextAnalysis.bowFingerprintOf(TextAnalysis.tokens($"text")).as("fp"))
       .as[(Long, String)].collect().toMap
     assert(fps(1L) == fps(3L) && fps(1L) != fps(4L))
   }
@@ -42,8 +42,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("Dedup.minhash+LSH flags exact and permuted dups as candidates") {
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 8)
-    assert(sigs.count() == 4 * 8)
+    val sigs = Dedup.minhashSignatureArray(docs, "doc_id", "text", 8)
+    assert(sigs.where(size($"sig") === 8).count() == 4)
     val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text", 8, 4)
       .as[(Long, Long)].collect().toSet
     // permutation has identical token set → identical signature → all
@@ -190,7 +190,7 @@ class OpsSpec extends AnyFunSuite {
   test("Similarity.cosine basic geometry") {
     val c = vecs.as("l").crossJoin(vecs.as("r"))
       .select($"l.vec_id".as("a"), $"r.vec_id".as("b"),
-        round(Similarity.cosine($"l.embedding", $"r.embedding"), 4).as("c"))
+        round(graft.functions.VectorFunctions.vecCosine($"l.embedding", $"r.embedding"), 4).as("c"))
       .as[(Long, Long, Double)].collect()
       .map(x => (x._1, x._2) -> x._3).toMap
     assert(c((0L, 0L)) == 1.0 && c((0L, 2L)) == 0.0 && c((0L, 3L)) == -1.0)
@@ -364,7 +364,12 @@ class OpsSpec extends AnyFunSuite {
       if (i % 2 == 0) (i, Array(1f + (i % 5) * 0.01f, 0.02f, 0f))
       else (i, Array(0.02f, 1f + (i % 5) * 0.01f, 0f))
     }.toDF("vec_id", "embedding")
-    val stats = Similarity.ivfTrainStats(vs, "vec_id", "embedding", 2)
+    // round 0 assigns to the hash seeds; one Lloyd round re-assigns
+    val quant = Similarity.quantized(vs, "vec_id", "embedding")
+    val a0 = Similarity.ivfAssign(vs, "vec_id", "embedding", 2)
+      .select($"vec_id".as("vid"), $"cell")
+    val stats = Similarity.ivfStatsFrom(
+        Similarity.lloydAssign(quant, Similarity.lloydCent(quant, a0)))
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(stats.map(_._2).sum == 20L)          // every vector assigned once
     assert(stats.size == 2 && stats.forall(_._2 == 10L)) // clean 10/10 split
@@ -460,7 +465,8 @@ class OpsSpec extends AnyFunSuite {
     assert(byVec(7L) == byVec(0L) && byVec(6L) == byVec(0L))
     assert(byVec(1L) == Seq(1L, 1L, 1L, 1L))            // other cluster, distinct code
     assert(codes.filter(c => Set(0L, 6L, 7L)(c._1)).forall(_._4 == 0L)) // exact self-dist
-    val top = Similarity.pqSearchAdc(vs, "vec_id", "embedding", 0L, 3, 64, 4, 8)
+    val top = Similarity.pqSearchAdcWith(vs, "vec_id", "embedding", 0L, 3, 64, 4,
+        seeds, Similarity.pqCodes(vs, "vec_id", "embedding", 64, 4, seeds))
       .as[(Long, Long)].collect().toSeq
     assert(top == Seq((6L, 0L), (7L, 0L), (4L, 64L)))
   }

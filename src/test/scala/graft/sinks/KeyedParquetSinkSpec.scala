@@ -3,7 +3,6 @@ package graft.sinks
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.sources.Formats
 import org.apache.spark.sql.graft.Bridge
 import java.nio.file.Files
 
@@ -31,6 +30,18 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
 
   private def bucketDirs(dir: String): Set[String] =
     new java.io.File(dir).list().filter(_.startsWith("_bucket=")).toSet
+
+  /** Delete `ids` from a table keyed on `id` through mergeInto's delete
+    * clause; returns the rows removed. */
+  private def deleteIds(dir: String, ids: Seq[Long], numBuckets: Int): Long = {
+    val table = KeyedParquetSink.read(spark, dir)
+    val before = table.count()
+    val victims = ids.toDF("id").select(table.schema.map(f =>
+      if (f.name == "id") $"id" else lit(null).cast(f.dataType).as(f.name)): _*)
+    KeyedParquetSink.mergeInto(spark, dir, victims, Seq("id"), numBuckets,
+      deleteCond = Some(lit(true)))
+    before - KeyedParquetSink.read(spark, dir).count()
+  }
 
   test("mergeInto on a 16-bucket table runs at most 3 Spark jobs (4 from a non-local frame)") {
     val dir = Files.createTempDirectory("graft_sink_jobs").toString + "/t"
@@ -121,8 +132,8 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
 
     KeyedParquetSink.mergeInto(spark, dir, Seq((key(mergeB, 0), "m")).toDF("id", "name"),
       Seq("id"), 8)
-    assert(KeyedParquetSink.deleteMatching(spark, dir, Seq("id"), 8,
-      Seq(Tuple1(key(deleteB, 0))).toDF("id"), Seq("id")) == 1L)
+    KeyedParquetSink.mergeInto(spark, dir, Seq((key(deleteB, 0), "")).toDF("id", "name"),
+      Seq("id"), 8, deleteCond = Some(lit(true)))
     val read = KeyedParquetSink.readBuckets(spark, dir, Seq("id"), 8,
         Seq(key(mergeB, 0), key(readB, 0)).toDF("id"))
       .as[(Long, String)].collect().toMap
@@ -188,82 +199,20 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
     assert(got == Seq((1L, 2L, "v2")))
   }
 
-  test("bucketed tables join without a shuffle") {
-    for (t <- Seq("graft_bt_facts", "graft_bt_dims")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) { // stale location from an aborted run blocks CREATE
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(loc)
-      }
-    }
-    val facts = (1L to 1000L).map(i => (i, i * 2)).toDF("id", "a")
-    val dims = (1L to 1000L).map(i => (i, s"n$i")).toDF("id", "b")
-    KeyedParquetSink.writeBucketed(facts, "graft_bt_facts", Seq("id"), 8)
-    KeyedParquetSink.writeBucketed(dims, "graft_bt_dims", Seq("id"), 8)
-    // force a sort-merge join (hint on the input) so the bucketing is
-    // what saves the shuffle, not a broadcast
-    val noBroadcast = spark.table("graft_bt_facts").hint("merge")
-      .join(spark.table("graft_bt_dims"), Seq("id"))
-    val plan = noBroadcast.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-    assert(noBroadcast.count() == 1000)
-    spark.sql("DROP TABLE graft_bt_facts"); spark.sql("DROP TABLE graft_bt_dims")
-  }
-
-  test("Formats round-trips CSV and JSON lines with explicit schemas") {
-    val tmp = Files.createTempDirectory("graft_fmt").toString
-    val df = Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "name", "v")
-    df.coalesce(1).write.option("header", "true").csv(s"$tmp/csv")
-    df.coalesce(1).write.json(s"$tmp/json")
-    val csvBack = Formats.readCsv(spark, s"$tmp/csv", df.schema)
-      .orderBy("id").as[(Long, String, Double)].collect().toSeq
-    val jsonBack = Formats.readJsonLines(spark, s"$tmp/json", df.schema)
-      .orderBy("id").as[(Long, String, Double)].collect().toSeq
-    val want = Seq((1L, "x", 1.5), (2L, "y", 2.5))
-    assert(csvBack == want && jsonBack == want)
-  }
-
-  test("Formats round-trips ORC and pushes filters into the ORC scan") {
-    val tmp = Files.createTempDirectory("graft_orc").toString
-    val df = graft.sources.Tables.orders(spark, graft.TestSpark.sf)
-      .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-    Formats.writeOrc(df, s"$tmp/orc")
-    val back = Formats.readOrc(spark, s"$tmp/orc", df.schema)
-    assert(back.count() == df.count())
-    // byte-identical values through the round trip
-    assert(back.orderBy("o_orderkey").as[(Long, Long, Double)].collect().toSeq ==
-      df.orderBy("o_orderkey").as[(Long, Long, Double)].collect().toSeq)
-    // predicate + projection reach the ORC scan like parquet
-    val plan = back.where($"o_orderkey" < 100).select($"o_orderkey")
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("PushedFilters:") && plan.contains("LessThan(o_orderkey"),
-      s"no ORC pushdown:\n$plan")
-  }
-
   test("bucket-count mismatch is rejected loudly, never silently partial") {
     val dir = Files.createTempDirectory("graft_sink_meta").toString + "/t"
     val base = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     KeyedParquetSink.write(base, dir, Seq("id"), numBuckets = 8)
     assert(KeyedParquetSink.storedBuckets(spark, dir).contains(8))
-    val victims = Seq(Tuple1(1L)).toDF("id")
-    val e = intercept[IllegalArgumentException] {
-      KeyedParquetSink.deleteMatching(spark, dir, Seq("id"),
-        numBuckets = 16, victims, Seq("id"))
-    }
+    val e = intercept[IllegalArgumentException](deleteIds(dir, Seq(1L), numBuckets = 16))
     assert(e.getMessage.contains("bucket-count mismatch"))
     val e2 = intercept[IllegalArgumentException] {
-      KeyedParquetSink.upsert(spark, dir, victims.withColumn("name", lit("x")),
+      KeyedParquetSink.upsert(spark, dir, Seq((1L, "x")).toDF("id", "name"),
         Seq("id"), numBuckets = 4)
     }
     assert(e2.getMessage.contains("bucket-count mismatch"))
     // the correct count still works
-    val n = KeyedParquetSink.deleteMatching(spark, dir, Seq("id"),
-      numBuckets = 8, victims, Seq("id"))
-    assert(n == 1L)
+    assert(deleteIds(dir, Seq(1L), numBuckets = 8) == 1L)
   }
 
   test("empty or corrupt bucket metadata degrades to trust-the-caller") {
@@ -279,19 +228,14 @@ class KeyedParquetSinkSpec extends AnyFunSuite {
     assert(KeyedParquetSink.storedBuckets(spark, dir).isEmpty)
     // and keyed operations proceed on the caller's count (pre-metadata
     // behavior) instead of crashing every read/merge/delete
-    val n = KeyedParquetSink.deleteMatching(spark, dir, Seq("id"),
-      numBuckets = 8, Seq(Tuple1(1L)).toDF("id"), Seq("id"))
-    assert(n == 1L)
+    assert(deleteIds(dir, Seq(1L), numBuckets = 8) == 1L)
   }
 
   test("full-table erasure leaves a readable zero-row table") {
     val dir = Files.createTempDirectory("graft_sink_empty").toString + "/t"
     val base = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "name", "v")
     KeyedParquetSink.write(base, dir, Seq("id"), numBuckets = 4)
-    val victims = Seq(Tuple1(1L), Tuple1(2L)).toDF("id")
-    val removed = KeyedParquetSink.deleteMatching(spark, dir, Seq("id"),
-      numBuckets = 4, victims, Seq("id"))
-    assert(removed == 2L)
+    assert(deleteIds(dir, Seq(1L, 2L), numBuckets = 4) == 2L)
     // the erased-empty table still reads (0 rows, schema intact) ...
     val back = KeyedParquetSink.read(spark, dir)
     assert(back.count() == 0L)

@@ -25,102 +25,6 @@ class StreamOpsSpec extends AnyFunSuite {
     (sos.map(_.numRowsTotal).max, sos.map(_.memoryUsedBytes).max)
   }
 
-  test("windowedAgg aggregates tumbling event-time windows") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(
-      Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 1, "click", 2.0),
-      Ev(3, ts(5), 2, "view", 5.0))
-    val q = StreamOps.windowedAgg(input.toDF(), "ts", "event_type", "value",
-        windowLen = "10 minutes", watermark = "5 minutes")
-      .writeStream.outputMode("complete").format("memory").queryName("wagg").start()
-    q.processAllAvailable(); q.stop()
-    val byType = spark.table("wagg").select($"event_type", $"n", $"total")
-      .as[(String, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(byType("click") == ((2L, 3.0)) && byType("view") == ((1L, 5.0)))
-  }
-
-  test("windowedAgg slides: each event lands in windowLen/slide windows") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(Ev(1, ts(12), 1, "click", 1.0))
-    val q = StreamOps.windowedAgg(input.toDF(), "ts", "event_type", "value",
-        windowLen = "10 minutes", watermark = "5 minutes", slide = Some("5 minutes"))
-      .writeStream.outputMode("complete").format("memory").queryName("swagg").start()
-    q.processAllAvailable(); q.stop()
-    val wins = spark.table("swagg").select($"win_start").collect()
-      .map(_.getTimestamp(0).toString).sorted
-    // 00:12 is inside [00:05,00:15) and [00:10,00:20) — exactly 2 windows
-    assert(wins.toSeq == Seq("2024-01-01 00:05:00.0", "2024-01-01 00:10:00.0"))
-  }
-
-  test("dedupByKey drops duplicate keys within the watermark") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(
-      Ev(10, ts(1), 1, "click", 1.0), Ev(10, ts(1), 1, "click", 1.0),
-      Ev(11, ts(2), 1, "view", 2.0))
-    val q = StreamOps.dedupByKey(input.toDF(), "ts", Seq("event_id"))
-      .writeStream.outputMode("append").format("memory").queryName("dedup").start()
-    q.processAllAvailable(); q.stop()
-    assert(spark.table("dedup").count() == 2)
-  }
-
-  test("sessionWindowAgg merges events within gap and agrees with sessionizeStream") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // user 1: events at 1,2 (one session), then 40 (new session: gap>30m);
-    // user 2: single event
-    input.addData(
-      Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 1, "click", 1.0),
-      Ev(3, ts(40), 1, "click", 1.0), Ev(4, ts(5), 2, "view", 1.0))
-    val q = StreamOps.sessionWindowAgg(input.toDF(), "ts", "user_id",
-        gap = "30 minutes", watermark = "10 minutes")
-      .writeStream.outputMode("complete").format("memory").queryName("sessw").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("sessw")
-      .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted
-    // user 1 → sessions of 2 and 1 events, user 2 → one 1-event session
-    assert(rows.toSeq == Seq((1L, 1L), (1L, 2L), (2L, 1L)))
-    // session end extends gap past the last event
-    val u2 = spark.table("sessw").where($"user_id" === 2)
-      .select($"sess_start", $"sess_end").head
-    assert(u2.getTimestamp(0) == ts(5) && u2.getTimestamp(1) == ts(35))
-  }
-
-  test("sessionizeStream closes sessions on gap and on watermark timeout") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // user 1: events at 0 and 10 min (one session), then 50 min (gap > 30
-    // closes the first in-batch). user 2: single event at 5 min.
-    input.addData(
-      Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(10), 1, "click", 1.0),
-      Ev(3, ts(50), 1, "click", 1.0), Ev(4, ts(5), 2, "view", 1.0))
-    val q = StreamOps.sessionizeStream(input.toDF(), gapMinutes = 30, watermark = "0 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("sess").start()
-    q.processAllAvailable()
-    // the in-batch gap closes user 1's first session; the watermark (00:50
-    // with 0s delay) already passes user 2's timeout (00:05 + 30min), so
-    // that session flushes too. User 1's open session (last 00:50) stays.
-    val afterGap = spark.table("sess").as[SessionOut].collect().toSet
-    assert(afterGap.map(s => (s.user_id, s.n_events, s.dur_sec)) ==
-      Set((1L, 2L, 600L), (2L, 1L, 0L)))
-    // a later event advances the watermark past every open session's
-    // last + gap → the remaining sessions time out and flush
-    input.addData(Ev(5, ts(59), 3, "click", 1.0))
-    q.processAllAvailable()
-    input.addData(Ev(6, java.sql.Timestamp.valueOf("2024-01-01 23:00:00"), 3, "click", 1.0))
-    q.processAllAvailable(); q.stop()
-    val all = spark.table("sess").as[SessionOut].collect().toSet
-      .map((s: SessionOut) => (s.user_id, s.n_events, s.dur_sec))
-    assert(all.contains((1L, 1L, 0L)) && all.contains((2L, 1L, 0L)) && all.contains((3L, 1L, 0L)))
-  }
-
   test("correlateEvents stream-stream interval join pairs within the window") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
@@ -135,332 +39,6 @@ class StreamOpsSpec extends AnyFunSuite {
     q.processAllAvailable(); q.stop()
     val got = spark.table("corr").as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 1L, 2L)))
-  }
-
-  test("bandJoinStream pairs on time alone via bucket expansion") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val la = MemoryStream[Ev]; val lb = MemoryStream[Ev]
-    // band width 600 s: one pair must cross a bucket edge
-    val evsA = Seq(
-      Ev(1, ts(9), 1, "error", 0.0),    // 00:09
-      Ev(2, ts(40), 1, "error", 0.0))   // 00:40
-    val evsB = Seq(
-      Ev(10, ts(12), 7, "purchase", 1.0), // 3 min after a=1 → pair
-      Ev(11, ts(18), 8, "purchase", 1.0), // 9 min after a=1 → pair (edge-cross)
-      Ev(12, ts(25), 9, "purchase", 1.0)) // 16/15 min from both → no pair
-    la.addData(evsA); lb.addData(evsB)
-    val q = StreamOps.bandJoinStream(la.toDF(), lb.toDF(), 600L)
-      .writeStream.outputMode("append").format("memory").queryName("band").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("band").select($"a_id", $"b_id").as[(Long, Long)]
-      .collect().toSet
-    assert(got == Set((1L, 10L), (1L, 11L)),
-      s"expected the two within-600s pairs, got $got")
-    // batch agreement: the same kernel on STATIC frames gives the same set
-    val batch = StreamOps.bandJoinStream(evsA.toDF(), evsB.toDF(), 600L)
-      .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    assert(batch == got, "streamed band pairs == batch band pairs")
-  }
-
-  test("freshnessStream tracks the per-type max event time across batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(5), 1, "view", 2.0))
-    val q = StreamOps.freshnessStream(input.toDF(), "ts", "event_type")
-      .writeStream.outputMode("complete").format("memory").queryName("fresh").start()
-    q.processAllAvailable()
-    // a later batch advances only its own type's freshness
-    input.addData(Ev(3, ts(30), 2, "click", 3.0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("fresh").select($"event_type", $"n", $"max_ts_s")
-      .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(got("click") == ((2L, ts(30).getTime / 1000)))
-    assert(got("view") == ((1L, ts(5).getTime / 1000)))
-  }
-
-  test("typeOverlapStream emits a change only when a user's mask grows") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 2, "view", 1.0))
-    val q = StreamOps.typeOverlapStream(input.toDF(), "event_type", "user_id")
-      .writeStream.outputMode("append").format("memory").queryName("masks").start()
-    q.processAllAvailable()
-    // user 1 adds purchase (grows 1 → 5); a repeat click must NOT emit
-    input.addData(Ev(3, ts(3), 1, "purchase", 1.0), Ev(4, ts(4), 1, "click", 1.0),
-      Ev(5, ts(5), 2, "view", 1.0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("masks").as[MaskChange].collect()
-      .groupBy(_.user_id).view.mapValues(_.sortBy(_.new_mask).toSeq).toMap
-    assert(got(1L) == Seq(MaskChange(1, 0, 1), MaskChange(1, 1, 5)))
-    assert(got(2L) == Seq(MaskChange(2, 0, 16)), "user 2's repeat view must not emit")
-    // replaying the final masks reconstructs the batch histogram rollup
-    val masks = got.values.map(_.maxBy(_.new_mask).new_mask).toSeq
-    assert(masks.sorted == Seq(5L, 16L))
-  }
-
-  test("nearDedupStream flags later near-dup docs against the first keeper") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val same = "the quick brown fox jumps over the lazy dog again and again"
-    input.addData((1L, ts(1), same), (3L, ts(3), "completely different words with no overlap at all here"))
-    val q = StreamOps.nearDedupStream(
-        input.toDF().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
-        k = 8, rowsPerBand = 4)
-      .writeStream.outputMode("append").format("memory").queryName("ndup").start()
-    q.processAllAvailable()
-    // identical text arrives LATER (second micro-batch): state must route
-    // it to doc 1's buckets
-    input.addData((2L, ts(5), same))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("ndup").as[NearDupVerdict].collect().toSeq
-    // doc 1 claims both its bands; doc 2 collides with keeper 1 in both
-    assert(got.filter(_.doc_id == 1L).forall(_.keeper == 1L))
-    val d2 = got.filter(_.doc_id == 2L)
-    assert(d2.nonEmpty && d2.forall(_.keeper == 1L))
-    // the unrelated doc claims its own buckets, never doc 1's
-    assert(got.filter(_.doc_id == 3L).forall(_.keeper == 3L))
-    // batch twin agreement: the same texts pair in batch candidate gen
-    val batch = graft.ops.Dedup.lshCandidatePairs(
-      Seq((1L, same), (2L, same), (3L, "completely different words with no overlap at all here"))
-        .toDF("doc_id", "text"), "doc_id", "text", 8, 4)
-      .as[(Long, Long)].collect().toSet
-    assert(batch == Set((1L, 2L)))
-  }
-
-  test("enrichStream joins streaming events to a broadcast static dim") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Ev]
-    input.addData(
-      Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 2, "view", 2.0),
-      Ev(3, ts(3), 9, "click", 3.0)) // user 9 has no dim row
-    val q = StreamOps.enrichStream(input.toDF(), dim, Seq("user_id"), "left_outer")
-      .select($"event_id", $"tier")
-      .writeStream.outputMode("append").format("memory").queryName("enrich").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("enrich").as[(Long, Option[String])].collect()
-      .map(r => r._1 -> r._2).toMap
-    assert(got == Map(1L -> Some("gold"), 2L -> Some("basic"), 3L -> None))
-  }
-
-  test("cleanStream applies the batch Normalize kernel to a stream") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    input.addData(Ev(1, ts(1), 1, " error ", 0.0), Ev(2, ts(2), 2, "click", 3.5))
-    val q = StreamOps.cleanStream(input.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("clean").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("clean").orderBy("event_id")
-      .select($"val", $"iserr", $"et").collect()
-      .map(r => (Option(r.get(0)), r.getInt(1), r.getString(2))).toSeq
-    // " error " is upper-trimmed but bool01 compares the raw value
-    assert(got == Seq((None, 0, "ERROR"), (Some(3.5), 0, "CLICK")))
-  }
-
-  test("heavyHittersStream emits exact window top-k when keys fit capacity") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // window [00:00, 00:10): user 1 ×3, user 2 ×2, user 3 ×1 clicks
-    input.addData(
-      Ev(1, ts(1), 1, "click", 0), Ev(2, ts(2), 1, "click", 0),
-      Ev(3, ts(3), 1, "click", 0), Ev(4, ts(4), 2, "click", 0),
-      Ev(5, ts(5), 2, "click", 0), Ev(6, ts(6), 3, "click", 0))
-    val q = StreamOps.heavyHittersStream(input.toDF(), "event_type", "user_id",
-        "ts", winMinutes = 10, capacity = 8, k = 2, watermark = "0 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("hh").start()
-    q.processAllAvailable()
-    assert(spark.table("hh").isEmpty)   // window still open
-    // an event far past the window end advances the watermark → flush
-    input.addData(Ev(7, ts(31), 9, "click", 0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("hh").as[HhOut].collect()
-      .map(h => (h.user_id, h.est_count, h.rank)).toSeq.sortBy(_._3)
-    // capacity 8 > 3 distinct keys → counts exact; k=2 cuts user 3
-    assert(got == Seq((1L, 3L, 1), (2L, 2L, 2)))
-  }
-
-  test("heavyHittersStream evicts the minimum counter beyond capacity") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // capacity 2: keys 1,2 fill the map (1×3, 2×1 after the first four
-    // events); key 3 then evicts the min (2, count 1) and enters at 2
-    input.addData(
-      Ev(1, ts(1), 1, "click", 0), Ev(2, ts(2), 1, "click", 0),
-      Ev(3, ts(3), 1, "click", 0), Ev(4, ts(4), 2, "click", 0),
-      Ev(5, ts(5), 3, "click", 0))
-    val q = StreamOps.heavyHittersStream(input.toDF(), "event_type", "user_id",
-        "ts", winMinutes = 10, capacity = 2, k = 2, watermark = "0 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("hh2").start()
-    q.processAllAvailable()
-    input.addData(Ev(6, ts(31), 9, "click", 0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("hh2").as[HhOut].collect()
-      .map(h => (h.user_id, h.est_count, h.rank)).toSeq.sortBy(_._3)
-    // space-saving overestimate: key 3 reports min+1 = 2
-    assert(got == Seq((1L, 3L, 1), (3L, 2L, 2)))
-    // MEASURED state: never more rows than open (type, window) groups
-    // (2 here: the flushed window + the watermark-advancing one), and
-    // the footprint stays within a per-group envelope around the
-    // capacity-bounded counter map
-    val (srows, sbytes) = stateFootprint(q)
-    assert(srows <= 2L, s"state rows ≤ open windows: $srows")
-    assert(sbytes <= 64 * 1024,
-      s"measured $sbytes B for capacity-2 counter maps")
-  }
-
-  test("lateArrivalsStream bands lateness against the running max") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // arrival order (event_id): t=10 → on_time; t=9 → 60s late (lt_1m
-    // edge is <60 ⇒ 60 lands in lt_1h); t=11 advances the max; t=5 →
-    // 360s late (lt_1h)
-    input.addData(Ev(1, ts(10), 1, "click", 0), Ev(2, ts(9), 1, "click", 0))
-    val q = StreamOps.lateArrivalsStream(input.toDF(), "ts", "event_type",
-        "event_id")
-      .writeStream.outputMode("append").format("memory").queryName("late").start()
-    q.processAllAvailable()
-    // state (max=00:10) must persist across batches
-    input.addData(Ev(3, ts(11), 1, "click", 0), Ev(4, ts(5), 1, "click", 0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("late").as[LateBands].collect()
-      .groupBy(_.band).view.mapValues(g =>
-        (g.map(_.n).sum, g.map(_.max_late_s).max)).toMap
-    assert(got("on_time") == ((2L, 0L)))
-    assert(got("lt_1h") == ((2L, 360L)), "60s and 360s both band lt_1h")
-  }
-
-  test("cmsSketchStream converges to the batch sketch over micro-batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect()
-    val input = MemoryStream[Ev]
-    val q = StreamOps.cmsSketchStream(input.toDF(), "user_id")
-      .writeStream.outputMode("complete").format("memory").queryName("cms").start()
-    evs.grouped(evs.length / 3 + 1).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = spark.table("cms").select($"r", $"bucket", $"cnt")
-      .as[(Int, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
-    // batch twin: the same explode + hash + rollup over the full table
-    val batch = graft.sources.Tables.events(spark, TestSpark.sf)
-      .select(col("user_id").cast("string").as("k"),
-        explode(array((0 until 4).map(lit): _*)).as("r"))
-      .withColumn("bucket",
-        pmod(conv(substring(md5(concat(col("r").cast("string"), lit(":"),
-          col("k"))), 1, 3), 16, 10).cast("long"), lit(1024L)))
-      .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
-      .as[(Int, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
-    assert(streamed == batch, "streamed sketch cells == batch sketch cells")
-    assert(streamed.size <= 4 * 1024, "state bounded by depth x width")
-  }
-
-  test("hllRegistersStream converges to the batch registers under replay") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect()
-    val input = MemoryStream[Ev]
-    val q = StreamOps.hllRegistersStream(input.toDF(), "user_id")
-      .writeStream.outputMode("complete").format("memory").queryName("hllr").start()
-    val chunks = evs.grouped(evs.length / 3 + 1).toSeq
-    // at-least-once: chunk 1 replayed — MAX-merge must converge anyway
-    (chunks.take(2) ++ Seq(chunks.head) ++ chunks.drop(2)).foreach { c =>
-      input.addData(c.toIndexedSeq); q.processAllAvailable()
-    }
-    val streamed = spark.table("hllr").as[(Long, Long)].collect().toMap
-    val batch = graft.ops.Sketch.hllRegisters(
-        graft.sources.Tables.events(spark, TestSpark.sf), "user_id")
-      .as[(Long, Long)].collect().toMap
-    assert(streamed == batch, "streamed registers == batch registers")
-    // MEASURED state: ≤256 register rows no matter the stream volume
-    val (srows, sbytes) = stateFootprint(q)
-    q.stop()
-    assert(srows <= 256L, s"register state rows $srows > 256")
-    assert(sbytes <= 256L * 4096,
-      s"measured $sbytes B for ≤256 (bucket, max) registers")
-  }
-
-  test("bitmapDistinctStream converges to the batch bitmap under replay") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .where(col("ts").isNotNull)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect()
-    val input = MemoryStream[Ev]
-    val q = StreamOps.bitmapDistinctStream(input.toDF(), "ts", "user_id")
-      .writeStream.outputMode("update").format("memory").queryName("bmd").start()
-    val chunks = evs.grouped(evs.length / 3 + 1).toSeq
-    // at-least-once delivery: chunk 1 is REPLAYED after chunk 2
-    (chunks.take(2) ++ Seq(chunks.head) ++ chunks.drop(2)).foreach { c =>
-      input.addData(c.toIndexedSeq); q.processAllAvailable()
-    }
-    q.stop()
-    val rows = spark.table("bmd").as[(String, Long)].collect()
-    // latest emission per day = the max (occupancy is monotone under OR)
-    val streamed = rows.groupBy(_._1).map { case (d, v) => d -> v.map(_._2).max }
-    // the oracle-checked batch query on the same table, per-day rows only
-    val batch = graft.SparkEntry.queries("q_bitmap_distinct")(spark, TestSpark.sf)
-      .where(col("scope") =!= "all")
-      .select(col("scope"), col("bits_set")).as[(String, Long)]
-      .collect().toMap
-    assert(streamed == batch, "streamed per-day occupancy == batch bits_set")
-    // bounded state: occupancy can never exceed the bitmap width
-    streamed.values.foreach(v => assert(v <= 4096L))
-    // the replayed chunk exercises idempotence: more emissions than days
-    assert(rows.length > streamed.size, "multiple emissions per day observed")
-    // MEASURED state (not just bounded by argument): exactly one state
-    // row per day, and the store's in-memory footprint stays within a
-    // generous per-day envelope around the 512 B bitmap payload — the
-    // number that makes "state ∝ days, not distinct keys" a machine check
-    val (srows, sbytes) = stateFootprint(q)
-    assert(srows == streamed.size.toLong,
-      s"one state row per day: $srows rows for ${streamed.size} days")
-    assert(sbytes <= srows * 64 * 1024,
-      s"measured $sbytes B across $srows day bitmaps " +
-        "(512 B payload each; store overhead must stay within 64 KiB/day)")
-  }
-
-  test("lateArrivalsStream replayed in id order reproduces the batch audit") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .where(col("ts").isNotNull)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect().sortBy(_.event_id)
-    val input = MemoryStream[Ev]
-    val q = StreamOps.lateArrivalsStream(input.toDF(), "ts", "event_type",
-        "event_id")
-      .writeStream.outputMode("append").format("memory").queryName("latefull").start()
-    evs.grouped(evs.length / 3 + 1).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = spark.table("latefull").as[LateBands].collect()
-      .groupBy(b => (b.event_type, b.band)).view.mapValues(g =>
-        (g.map(_.n).sum, g.map(_.max_late_s).max)).toMap
-    val batch = graft.SparkEntry.queries("etl_late_arrivals")(spark, TestSpark.sf)
-      .collect().map(r => (r.getAs[String]("event_type"), r.getAs[String]("band")) ->
-        ((r.getAs[Long]("n"), r.getAs[Long]("max_late_s")))).toMap
-    assert(streamed == batch, "stream replay == batch etl_late_arrivals")
   }
 
   test("seqGapsStream: outstanding + boundary gaps == the batch gap audit") {
@@ -658,76 +236,6 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().filter(_.label_id == 5L).toSeq
     assert(lbl == Seq(graft.streaming.PitOut(1L, 5L, 1100L, None, None)),
       s"post-eviction label must see no features, got $lbl")
-  }
-
-  test("kmvStream converges to the batch k-smallest hash set under replay; 1 state row") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .where(col("user_id").isNotNull)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect()
-    val input = MemoryStream[Ev]
-    val q = StreamOps.kmvStream(input.toDF(), "user_id")
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("kmv").start()
-    val chunks = evs.grouped(evs.length / 3 + 1).toSeq
-    // at-least-once delivery: chunk 1 replayed after chunk 2 — the
-    // k-smallest-of-union merge is idempotent, so the set converges
-    (chunks.take(2) ++ Seq(chunks.head) ++ chunks.drop(2)).foreach { c =>
-      input.addData(c.toIndexedSeq); q.processAllAvailable()
-    }
-    val streamed = spark.table("kmv").as[Seq[Long]].collect().last
-    val batch = graft.SparkEntry.queries("q_kmv_native")(spark, TestSpark.sf)
-      .collect().map(_.getLong(0)).toSeq
-    val (srows, sbytes) = stateFootprint(q)
-    q.stop()
-    assert(streamed == batch,
-      "streamed KMV hash set == batch native-aggregate set (shared kernel)")
-    assert(srows == 1L, s"one global sketch buffer, got $srows state rows")
-    assert(sbytes <= 64L * 1024,
-      s"<=256-entry buffer must stay KBs, measured $sbytes B")
-  }
-
-  test("momentSketchStream equals the batch moment vector; 1 state row per group") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val evs = graft.sources.Tables.events(spark, TestSpark.sf)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .where(col("value").isNotNull && col("user_id").isNotNull)
-      .as[Ev].collect()
-    def derive(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("q"))
-    val input = MemoryStream[Ev]
-    val q = StreamOps.momentSketchStream(derive(input.toDF()), "event_type", "q")
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("moments").start()
-    evs.grouped(evs.length / 3 + 1)
-      .foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
-    val streamed = spark.table("moments").collect()
-      .map(r => r.getAs[String]("event_type") ->
-        ((r.getAs[Long]("n"), r.getAs[Long]("s1"), r.getAs[Long]("s2"),
-          r.getAs[Long]("s3"), r.getAs[Long]("s4"),
-          r.getAs[Long]("q_min"), r.getAs[Long]("q_max")))).toMap
-    val batch = graft.ops.Sketch.momentVector(
-        derive(graft.sources.Tables.events(spark, TestSpark.sf)
-          .where(col("value").isNotNull && col("user_id").isNotNull)),
-        "event_type", "q")
-      .collect().map(r => r.getAs[String]("event_type") ->
-        ((r.getAs[Long]("n"), r.getAs[Long]("s1"), r.getAs[Long]("s2"),
-          r.getAs[Long]("s3"), r.getAs[Long]("s4"),
-          r.getAs[Long]("q_min"), r.getAs[Long]("q_max")))).toMap
-    assert(streamed == batch,
-      "streamed moment vectors == batch moment vectors (shared kernel)")
-    // MEASURED state: one (n, Σq..Σq⁴, min, max) row per group forever
-    val (srows, sbytes) = stateFootprint(q)
-    q.stop()
-    assert(srows <= batch.size.toLong,
-      s"moment state rows $srows > ${batch.size} groups")
-    assert(sbytes <= batch.size.toLong * 4096,
-      s"measured $sbytes B for ${batch.size} fixed-width moment rows")
   }
 
   test("cdcAnomalyStream: finalized violations equal the batch lag audit under shuffled delivery") {
